@@ -252,9 +252,12 @@ def run_validation(spec, args) -> int:
     res = pipe.run(spark, df, source_dict=sd,
                    snapshot_id=args.snapshot_id or "unpinned",
                    resume=args.resume)
-    n_viol = res.violations.count()
     # with --output the pipeline has already written violations/, stats/,
-    # histogram/, partition_results/, lineage/ under the workdir
+    # histogram/, partition_results/, violation_counts/, lineage/ under the
+    # workdir, and counted the violations while doing so
+    n_viol = res.counts.get("violations")
+    if n_viol is None:
+        n_viol = res.violations.count()
     print(json.dumps({
         "valid": n_viol == 0,
         "violations": n_viol,

@@ -8,9 +8,10 @@ critical value c(α)·sqrt((n+m)/(n·m)).
 Two implementations:
 
 - `ks_drift` (default, pure DataFrame): values are first binned
-  (width_bucket, B buckets) → groupBy(source, bucket) counts → cumulative
-  sums over B via a window partitioned by source.  The shuffle carries at
-  most |groups|×B rows regardless of input size — this is the 100 TB path.
+  (width_bucket, B buckets) → ONE groupBy(source, bucket) count, gathered
+  into per-source grids over the pooled buckets → one running-sum fold per
+  source.  The input is scanned once and every shuffle carries at most
+  |groups|×(B+2) rows regardless of input size — this is the 100 TB path.
   For an integer column like n_tok∈[1,2048], binning at B=max is EXACT.
 - `ks_drift_pandas` (applyInPandas): the reference-shape implementation on
   raw values per group, used to cross-check the binned one and as the
@@ -26,6 +27,8 @@ import pandas as pd
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
+from json_schema_modern_spark.operators.stats import histogram_bin
+
 # Smirnov critical-value coefficients c(α)
 _C_ALPHA = {0.10: 1.224, 0.05: 1.358, 0.025: 1.480, 0.01: 1.628, 0.005: 1.731, 0.001: 1.949}
 
@@ -34,6 +37,47 @@ def _c_alpha(alpha: float) -> float:
     if alpha in _C_ALPHA:
         return _C_ALPHA[alpha]
     return math.sqrt(-0.5 * math.log(alpha / 2.0))
+
+
+def _drift_stats(df: DataFrame, value_col: str, group_col: str, lo: float,
+                 hi: float, n_buckets: int, stat: str) -> DataFrame:
+    """(grp, n_grp, n_glob, stat) per group, from the ONE aggregate every
+    binned drift test reads.
+
+    The input is scanned once: (grp, bucket) counts → per-bucket cells →
+    one row holding every pooled bucket; each shuffle carries at most
+    |groups|×(B+2) rows regardless of input size.  On that row each group
+    gets its grid — every pooled bucket in bucket order as
+    struct(bucket, cnt, gcnt), its own count (0 where it has none) next to
+    the pooled one — and ``stat``, a SQL expression over ``s.grid``,
+    ``s.n_grp`` and ``s.n_glob``, folds it.  Everything per group happens
+    inside that one projection, ahead of the explode: Catalyst inlines a
+    projection into the filters pushed through it, and a fold re-deriving
+    its inputs on every step would cost O(B²).  (SQL text, not nested
+    Python lambdas: building those costs a py4j round trip per node.)
+    Values width_bucket cannot place (NULL, NaN) are skipped; a NULL group
+    counts toward the pool but gets no row of its own."""
+    pooled = (
+        df.select(F.col(group_col).alias("grp"),
+                  histogram_bin(value_col, lo, hi, n_buckets).alias("bucket"))
+        .where(F.col("bucket").isNotNull())
+        .groupBy("grp", "bucket")
+        .agg(F.count(F.lit(1)).alias("cnt"))
+        .groupBy("bucket")
+        .agg(F.sum("cnt").alias("gcnt"), F.collect_list(F.struct("grp", "cnt")).alias("cells"))
+        .agg(F.array_sort(F.collect_list(F.struct("bucket", "gcnt", "cells"))).alias("pooled"))
+    )
+    grids = """transform(
+        array_distinct(filter(flatten(transform(pooled, p -> p.cells.grp)), g -> g IS NOT NULL)),
+        g -> named_struct('grp', g, 'grid', transform(pooled, p -> named_struct(
+            'bucket', p.bucket,
+            'cnt', aggregate(filter(p.cells, c -> c.grp = g), 0L, (acc, c) -> acc + c.cnt),
+            'gcnt', p.gcnt))))"""
+    sized = f"""transform({grids}, s -> named_struct('grp', s.grp, 'grid', s.grid,
+        'n_grp', aggregate(s.grid, 0L, (acc, x) -> acc + x.cnt),
+        'n_glob', aggregate(s.grid, 0L, (acc, x) -> acc + x.gcnt)))"""
+    return pooled.select(F.expr(f"""inline(transform({sized}, s -> named_struct(
+        'grp', s.grp, 'n_grp', s.n_grp, 'n_glob', s.n_glob, 'stat', {stat})))"""))
 
 
 def ks_drift(
@@ -47,45 +91,19 @@ def ks_drift(
 ) -> DataFrame:
     """(group, n_group, n_global, ks_d, threshold, drifted) per group.
 
-    Each group is compared against the pooled global distribution.
+    Each group is compared against the pooled global distribution: one
+    fold over the group's grid carries both running sums and the largest
+    ECDF gap seen so far.
     """
-    b = F.width_bucket(F.col(value_col).cast("double"), F.lit(lo), F.lit(hi), F.lit(n_buckets))
-    binned = (
-        df.where(F.col(value_col).isNotNull())
-        .select(F.col(group_col).alias("grp"), b.alias("bucket"))
-        .groupBy("grp", "bucket")
-        .agg(F.count(F.lit(1)).alias("cnt"))
-    )
-    # global per-bucket counts (tiny: ≤ n_buckets rows) — broadcast back
-    glob = binned.groupBy("bucket").agg(F.sum("cnt").alias("gcnt"))
-    totals = binned.groupBy("grp").agg(F.sum("cnt").alias("n_grp"))
-    n_global = glob.agg(F.sum("gcnt").alias("n_glob"))
-
-    # dense bucket × group grid so ECDF steps align even for empty buckets:
-    # cross groups × observed buckets, left-join the group counts back
-    groups = binned.select("grp").distinct()
-    full = (
-        groups.crossJoin(F.broadcast(glob.select("bucket", "gcnt")))
-        .join(binned, ["grp", "bucket"], "left_outer")
-        .select("grp", "bucket", F.coalesce("cnt", F.lit(0)).alias("cnt"), "gcnt")
-    )
-    w = Window.partitionBy("grp").orderBy("bucket").rowsBetween(Window.unboundedPreceding, 0)
-    ecdf = full.select(
-        "grp", "bucket",
-        F.sum("cnt").over(w).alias("cum_grp"),
-        F.sum("gcnt").over(w).alias("cum_glob"),
-    )
-    stats = (
-        ecdf.join(F.broadcast(totals), "grp")
-        .crossJoin(F.broadcast(n_global))
-        .select(
-            "grp",
-            F.abs(F.col("cum_grp") / F.col("n_grp") - F.col("cum_glob") / F.col("n_glob")).alias("d"),
-            "n_grp", "n_glob",
-        )
-        .groupBy("grp", "n_grp", "n_glob")
-        .agg(F.max("d").alias("ks_d"))
-    )
+    largest_gap = """aggregate(s.grid,
+        named_struct('cum_grp', 0L, 'cum_glob', 0L, 'd', 0D),
+        (acc, x) -> named_struct(
+            'cum_grp', acc.cum_grp + x.cnt,
+            'cum_glob', acc.cum_glob + x.gcnt,
+            'd', greatest(acc.d, abs((acc.cum_grp + x.cnt) / s.n_grp
+                                     - (acc.cum_glob + x.gcnt) / s.n_glob)))).d"""
+    stats = _drift_stats(df, value_col, group_col, lo, hi, n_buckets, largest_gap) \
+        .withColumnRenamed("stat", "ks_d")
     c = _c_alpha(alpha)
     return stats.select(
         F.col("grp").alias(group_col),
@@ -119,47 +137,16 @@ def psi_drift(
     over fixed width_bucket bins with Laplace smoothing (+0.5 per bucket)
     so empty buckets stay finite.  The conventional industry reading:
     psi < 0.1 stable, 0.1–0.25 moderate, > 0.25 major shift; `drifted`
-    flags psi > threshold.  Same 100 TB shape as the binned KS check: the
-    shuffle carries ≤ |groups|×(B+2) rows regardless of input size."""
-    b = F.width_bucket(F.col(value_col).cast("double"), F.lit(lo), F.lit(hi), F.lit(n_buckets))
-    binned = (
-        df.where(F.col(value_col).isNotNull())
-        .select(F.col(group_col).alias("grp"), b.alias("bucket"))
-        .groupBy("grp", "bucket")
-        .agg(F.count(F.lit(1)).alias("cnt"))
-    )
-    glob = binned.groupBy("bucket").agg(F.sum("cnt").alias("gcnt"))
-    totals = binned.groupBy("grp").agg(F.sum("cnt").alias("n_grp"))
-    n_global = glob.agg(F.sum("gcnt").alias("n_glob"))
-    nb = glob.agg(F.count(F.lit(1)).alias("n_buckets_seen"))
-
-    full = (
-        binned.select("grp").distinct()
-        .crossJoin(F.broadcast(glob.select("bucket", "gcnt")))
-        .join(binned, ["grp", "bucket"], "left_outer")
-        .select("grp", "bucket", F.coalesce("cnt", F.lit(0)).alias("cnt"), "gcnt")
-    )
-    p = (F.col("cnt") + F.lit(0.5)) / (F.col("n_grp") + F.lit(0.5) * F.col("n_buckets_seen"))
-    q = (F.col("gcnt") + F.lit(0.5)) / (F.col("n_glob") + F.lit(0.5) * F.col("n_buckets_seen"))
-    term = (p - q) * F.log(p / q)
-    # fold the per-bucket terms in DETERMINISTIC bucket order inside ONE
-    # aggregation (a plain groupBy-sum would add in shuffle-arrival order,
-    # and float addition isn't associative — the oracle hash would wobble;
-    # the previous Window cumulative-sum achieved the same order at the
-    # cost of an extra shuffle + sort — collect_list/array_sort/aggregate
-    # folds the ≤ B+2 terms per group inside the existing agg instead)
-    stats = (
-        full.join(F.broadcast(totals), "grp")
-        .crossJoin(F.broadcast(n_global))
-        .crossJoin(F.broadcast(nb))
-        .select("grp", "bucket", "n_grp", "n_glob", term.alias("term"))
-        .groupBy("grp", "n_grp", "n_glob")
-        .agg(F.aggregate(
-            F.array_sort(F.collect_list(F.struct("bucket", "term"))),
-            F.lit(0.0),
-            lambda acc, x: acc + x["term"],
-        ).alias("psi"))
-    )
+    flags psi > threshold.  Same 100 TB shape as the binned KS check (the
+    same one-scan grid).  The terms fold in DETERMINISTIC bucket order —
+    the grid's order — because float addition isn't associative and a
+    shuffle-arrival-order sum would wobble the oracle hash."""
+    # 0.5D, not 0.5: a bare SQL 0.5 is a DECIMAL literal
+    p = "(x.cnt + 0.5D) / (s.n_grp + 0.5D * size(s.grid))"
+    q = "(x.gcnt + 0.5D) / (s.n_glob + 0.5D * size(s.grid))"
+    psi = f"aggregate(s.grid, 0D, (acc, x) -> acc + ({p} - {q}) * ln({p} / {q}))"
+    stats = _drift_stats(df, value_col, group_col, lo, hi, n_buckets, psi) \
+        .withColumnRenamed("stat", "psi")
     return stats.select(
         F.col("grp").alias(group_col),
         F.col("n_grp").alias("n_group"),

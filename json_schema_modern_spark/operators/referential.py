@@ -36,8 +36,10 @@ def missing_references(
     problem), matching SQL FK semantics."""
     f = fact.filter(F.col(fact_col).isNotNull())
     if strategy == "broadcast":
+        # no distinct(): an anti join ignores duplicate dim keys, and a
+        # distinct costs the dictionary a shuffle stage before the broadcast
         return f.join(
-            F.broadcast(dim.select(dim_col).distinct()),
+            F.broadcast(dim.select(dim_col)),
             on=f[fact_col] == dim[dim_col],
             how="left_anti",
         )

@@ -5,32 +5,39 @@ One `agg()` with every measure → ONE scan, ONE partial+final aggregate
 states, which is O(partitions), not O(rows)).  At 10^12 rows this is the
 only shape that works: never one job per column.
 
-approx-distinct uses Spark's built-in HyperLogLog++ sketch
-(approx_count_distinct); histograms use fixed-width buckets computed with
-width_bucket so the per-row work is a single multiply — not
-histogram_numeric, whose per-row state merge is heavier and
+approx-distinct uses the built-in DataSketches HLL aggregate
+(hll_sketch_agg): at the same ~1% error it costs a fraction of
+approx_count_distinct's HyperLogLog++ update.  Histograms use fixed-width
+buckets computed with width_bucket so the per-row work is a single
+multiply — not histogram_numeric, whose per-row state merge is heavier and
 non-deterministic across partition orders.
 """
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
+
+
+# HLL sketch size: 2^14 registers, relative standard error
+# 1.04/sqrt(2^14) ≈ 0.8%
+HLL_LG_K = 14
 
 
 def column_stats(
     df: DataFrame,
     columns: list[str] | None = None,
     exact_distinct: bool = False,
-    rsd: float = 0.01,
 ) -> DataFrame:
     """stats(column, n_rows, null_count, null_fraction, min, max, distinct_count)
 
-    exact_distinct=True swaps HLL for exact count(DISTINCT) — used by the
-    DuckDB-oracle correctness gate; production default is the sketch.
+    distinct_count is an HLL sketch estimate (``HLL_LG_K``), NULLs
+    excluded.  exact_distinct=True swaps the sketch for exact
+    count(DISTINCT) — used by the DuckDB-oracle correctness gate.
     """
     cols = columns or df.columns
+    types = {f.name: f.dataType for f in df.schema.fields}
     total = F.count(F.lit(1))
     aggs = [total.alias("_n")]
     for c in cols:
@@ -42,7 +49,8 @@ def column_stats(
         if exact_distinct:
             aggs.append(F.count_distinct(F.col(c)).alias(f"{c}__dist"))
         else:
-            aggs.append(F.approx_count_distinct(c, rsd=rsd).alias(f"{c}__dist"))
+            aggs.append(F.hll_sketch_estimate(
+                F.hll_sketch_agg(_sketchable(c, types[c]), HLL_LG_K)).alias(f"{c}__dist"))
     row = df.agg(*aggs)
 
     # unpivot the single wide row into (column, measures...) — driver-free
@@ -59,6 +67,15 @@ def column_stats(
         for c in cols
     ]
     return row.select(F.explode(F.array(*structs)).alias("s")).select("s.*")
+
+
+def _sketchable(c: str, dtype: T.DataType):
+    """hll_sketch_agg takes INT, BIGINT, STRING and BINARY; any other type
+    is sketched through its xxhash64, NULL-guarded because xxhash64(NULL)
+    is the seed, not NULL."""
+    if isinstance(dtype, (T.IntegerType, T.LongType, T.StringType, T.BinaryType)):
+        return F.col(c)
+    return F.when(F.col(c).isNotNull(), F.xxhash64(c))
 
 
 def numeric_quantiles(
@@ -130,19 +147,27 @@ def numeric_histogram(
     groupBy on a small integer key: shuffle volume = n_buckets rows per
     partition, independent of data size.  Bucket 0 = underflow,
     n_buckets+1 = overflow (width_bucket semantics)."""
-    width = (hi - lo) / n_buckets
+    edges = histogram_edges(F.col("bucket"), lo, hi, n_buckets)
     return (
-        df.select(F.width_bucket(F.col(column).cast("double"), F.lit(lo), F.lit(hi), F.lit(n_buckets)).alias("bucket"))
+        df.select(histogram_bin(column, lo, hi, n_buckets).alias("bucket"))
         .where(F.col("bucket").isNotNull())
         .groupBy("bucket")
         .agg(F.count(F.lit(1)).alias("cnt"))
-        .select(
-            "bucket",
-            (F.lit(lo) + (F.col("bucket") - 1) * F.lit(width)).alias("lo"),
-            (F.lit(lo) + F.col("bucket") * F.lit(width)).alias("hi"),
-            "cnt",
-        )
+        .select("bucket", edges[0].alias("lo"), edges[1].alias("hi"), "cnt")
     )
+
+
+def histogram_bin(column: str, lo: float, hi: float, n_buckets: int) -> Column:
+    """The width_bucket bin of ``column``: 0 = underflow, n_buckets+1 =
+    overflow, NULL for NULL or NaN."""
+    return F.width_bucket(F.col(column).cast("double"), F.lit(lo), F.lit(hi), F.lit(n_buckets))
+
+
+def histogram_edges(bucket, lo: float, hi: float, n_buckets: int):
+    """(lo, hi) edges of width_bucket bin ``bucket`` — a Column, or a bin
+    number counted on the driver; both evaluate the same IEEE operations."""
+    width = (hi - lo) / n_buckets
+    return lo + (bucket - 1) * width, lo + bucket * width
 
 
 def token_length_histogram(df: DataFrame, n_buckets: int = 32, max_len: int = 2048) -> DataFrame:

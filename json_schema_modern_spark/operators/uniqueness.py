@@ -2,19 +2,12 @@
 
 The reference's uniqueItems is per-array O(n²) pairwise equality
 (Utilities.pm:308-318); cross-row uniqueness of doc_id at 10^12 rows is a
-distributed problem the reference never faces.  Strategy:
-
-1. **Pre-check (cheap, no shuffle of keys):** approx_count_distinct vs
-   count.  If the HLL estimate is within its error bound of the row count,
-   duplicates may still exist, so this only short-circuits the obviously-
-   duplicate-free case when exactness isn't demanded.
-2. **Two-stage salted aggregate (exact):** groupBy(hash-salt, key) first —
-   the salt bounds any single reducer's group count even when the key
-   space is adversarially skewed (all-same-key) — then re-aggregate by key
-   over the (already tiny) candidate set.  For a genuinely unique key the
-   first stage's map-side combine collapses every group to one row, so the
-   shuffle carries ≈1 row per input row of (key, count) pairs — the minimum
-   any exact check can do — and AQE coalesces the second stage to nothing.
+distributed problem the reference never faces.  Strategy: one exact hash
+aggregate on the key.  Map-side combine collapses every key to one
+(key, count) row per input partition before the shuffle — the minimum any
+exact check can move — and the shuffle is keyed by the key itself, so
+duplicates colocate.  A hot key costs one row per partition, not one per
+duplicate; AQE splits any residual partition skew.
 """
 
 from __future__ import annotations
@@ -23,19 +16,12 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 
-def duplicate_keys(df: DataFrame, cols: list[str], n_salts: int = 64) -> DataFrame:
+def duplicate_keys(df: DataFrame, cols: list[str]) -> DataFrame:
     """Exact duplicates: (key cols..., dup_count) for keys occurring >1×."""
-    salt = F.pmod(F.xxhash64(*cols), F.lit(n_salts)).alias("_salt")
-    stage1 = (
-        df.select(*cols, salt)
-        .groupBy("_salt", *cols)
-        .agg(F.count(F.lit(1)).alias("_c"))
-    )
-    # same (key) always hashes to the same salt, so stage1 already holds the
-    # exact per-key count; the salt only caps partition-level skew for AQE.
     return (
-        stage1.filter(F.col("_c") > 1)
-        .select(*cols, F.col("_c").alias("dup_count"))
+        df.groupBy(*cols)
+        .agg(F.count(F.lit(1)).alias("dup_count"))
+        .filter(F.col("dup_count") > 1)
     )
 
 
@@ -43,13 +29,12 @@ def uniqueness_violations(
     df: DataFrame,
     cols: list[str],
     keyword_location: str = "/x-unique",
-    n_salts: int = 64,
 ) -> DataFrame:
     """Violation rows for duplicated keys, in the engine's violation schema.
 
     Emits one row per duplicated key value (not per duplicate row) — at
     scale a hot duplicate could otherwise explode the output."""
-    dups = duplicate_keys(df, cols, n_salts=n_salts)
+    dups = duplicate_keys(df, cols)
     key_json = F.to_json(F.struct(*[F.col(c) for c in cols]))
     return dups.select(
         F.col(cols[0]).cast("string").alias("doc_id"),
@@ -60,13 +45,3 @@ def uniqueness_violations(
         F.concat(F.lit("key occurs "), F.col("dup_count").cast("string"), F.lit(" times")).alias("error"),
         key_json.alias("offending_value"),
     )
-
-
-def probably_unique(df: DataFrame, cols: list[str], rsd: float = 0.01) -> bool:
-    """HLL pre-check: True ⇒ keys are unique within sketch error (skip the
-    exact pass when a probabilistic answer is acceptable)."""
-    row = df.agg(
-        F.count(F.lit(1)).alias("n"),
-        F.approx_count_distinct(F.concat_ws("\x00", *cols), rsd=rsd).alias("d"),
-    ).first()
-    return row.d >= row.n * (1 - 3 * rsd)

@@ -153,6 +153,9 @@ def test_cli_json_col_tier(cli_data, spark, tmp_path_factory):
     import glob as _glob
 
     assert _glob.glob(os.path.join(out_dir, "violations_json", "*.parquet"))
+    # the summary's violation count is the number of rows written
+    assert spark.read.parquet(os.path.join(out_dir, "violations_json")).count() \
+        == line["violations"]
 
     # all-valid input → exit 0 on the python tier
     table2 = str(d / "docs2")

@@ -99,3 +99,39 @@ def test_resume_from_workdir_normalization(tmp_path):
     with pytest.raises(FileNotFoundError) as exc:
         ValidationPipeline.resume_from(f"file://{tmp_path}/nope")
     assert "file://" not in str(exc.value)
+
+
+def test_ks_drift_matches_python_binned_ks(spark):
+    """The one-scan KS equals a plain-Python binned KS: every group is
+    compared with the pool at EVERY pooled bucket — including buckets the
+    group never occupies — and NULL values / a NULL group are handled as
+    documented (values skipped; the NULL group pools but gets no row)."""
+    import math
+
+    from json_schema_modern_spark.operators.drift import _c_alpha, ks_drift
+
+    rows = ([("a", v) for v in [0, 1, 1, 2, 3, 3, 3, 9, None]]
+            + [("b", v) for v in [5, 5, 6, 7, 7, 8, 12, -1]]
+            + [("c", v) for v in [1, 1, 1, None]]      # empty in most buckets
+            + [(None, v) for v in [4, 4, 9]])
+    df = spark.createDataFrame(rows, "src string, v int")
+    lo, hi, n = 0.0, 10.0, 10
+    got = {r.src: r for r in ks_drift(df, "v", "src", lo, hi, n, alpha=0.05).collect()}
+
+    def bucket(v):
+        return 0 if v < lo else n + 1 if v >= hi else int((v - lo) / (hi - lo) * n) + 1
+
+    binned = [(g, bucket(v)) for g, v in rows if v is not None]
+    pooled = sorted({b for _, b in binned})
+    n_glob = len(binned)
+    assert set(got) == {"a", "b", "c"}
+    for g in ("a", "b", "c"):
+        mine = [b for gg, b in binned if gg == g]
+        d = max(abs(sum(1 for x in mine if x <= b) / len(mine)
+                    - sum(1 for _, x in binned if x <= b) / n_glob) for b in pooled)
+        thr = _c_alpha(0.05) * math.sqrt((len(mine) + n_glob) / (len(mine) * n_glob))
+        r = got[g]
+        assert (r.n_group, r.n_global) == (len(mine), n_glob), g
+        assert math.isclose(r.ks_d, d, abs_tol=1e-9), (g, r.ks_d, d)
+        assert math.isclose(r.threshold, thr, abs_tol=1e-9)
+        assert r.drifted == (d > thr)

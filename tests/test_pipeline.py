@@ -154,3 +154,75 @@ def test_bucket_unit_is_doc_id_hash(spark, corrupt, tmp_path):
     per_key = dup_viols.groupBy("doc_id").count().filter("count > 1")
     assert per_key.count() == 0
     assert dup_viols.count() > 0
+
+
+def _rows(df):
+    return sorted(tuple(r) for r in df.collect())
+
+
+def test_checkpointed_tables_match_inmemory(spark, corrupt, tmp_path):
+    """The checkpointed run derives partition_results, violation_counts and
+    the histogram from two count aggregates instead of re-scanning; they
+    must equal the in-memory tower's directly computed tables, and a resume
+    that recomputes no bucket must reproduce them from lineage + disk."""
+    sd = source_dict_df(spark)
+    mem = ValidationPipeline(SPEC, n_buckets=8).run(spark, corrupt, source_dict=sd)
+    wd = str(tmp_path / "eq")
+    ck = ValidationPipeline(SPEC, workdir=wd, n_buckets=8).run(
+        spark, corrupt, source_dict=sd, snapshot_id="s")
+    want = {name: _rows(getattr(mem, name)) for name in
+            ("partition_results", "violation_counts", "stats", "histogram")}
+    assert want["violation_counts"] and want["partition_results"]
+    for name, rows in want.items():
+        assert _rows(getattr(ck, name)) == rows, name
+    assert ck.counts["violations"] == mem.violations.count() == ck.violations.count()
+
+    again = ValidationPipeline(SPEC, workdir=wd, n_buckets=8).run(
+        spark, corrupt, source_dict=sd, snapshot_id="s")
+    assert again.buckets_done == 0 and again.buckets_skipped == 8
+    for name in ("partition_results", "violation_counts", "stats"):
+        assert _rows(spark.read.parquet(os.path.join(wd, name))) == want[name], name
+    assert again.counts == ck.counts
+
+
+def test_lineage_counts_are_real(spark, corrupt, tmp_path):
+    """Lineage rows carry per-bucket doc and violation counts: the buckets'
+    doc counts sum to the input, and all error counts sum to the
+    per-keyword rollup — bucket -1 holding the global pass's (here the
+    non-id uniqueness check's) violations."""
+    spec = dict(SPEC, **{"x-unique": ["n_tok"]})
+    wd = str(tmp_path / "lin")
+    res = ValidationPipeline(spec, workdir=wd, n_buckets=8).run(
+        spark, corrupt, source_dict=source_dict_df(spark), snapshot_id="s")
+    lin = spark.read.parquet(os.path.join(wd, "lineage")).collect()
+    assert sorted(r.bucket for r in lin) == list(range(-1, 8))
+    assert sum(r.doc_count for r in lin) == corrupt.count()
+    vc = spark.read.parquet(os.path.join(wd, "violation_counts"))
+    assert sum(r.error_count for r in lin) \
+        == vc.agg(F.sum("n_violations")).first()[0] > 0
+    per_bucket = {r.bucket: r["count"] for r in
+                  res.violations.groupBy("bucket").count().collect()}
+    assert {r.bucket: r.error_count for r in lin if r.error_count} == per_bucket
+    assert per_bucket[-1] > 0
+
+
+def test_resumes_spark_written_lineage(spark, corrupt, tmp_path):
+    """Workdirs whose lineage Spark wrote (NULL error_count, _SUCCESS and
+    .crc side files) still resume: the driver-side reader skips nothing."""
+    import shutil
+
+    from json_schema_modern_spark.plans.pipeline import LINEAGE_SCHEMA
+
+    wd = str(tmp_path / "old")
+    sd = source_dict_df(spark)
+    pipe = ValidationPipeline(SPEC, workdir=wd, n_buckets=4)
+    first = pipe.run(spark, corrupt, source_dict=sd, snapshot_id="s")
+    lin_path = os.path.join(wd, "lineage")
+    old = [(r.run_id, r.snapshot_id, r.spec_fingerprint, r.bucket, r.status,
+            r.doc_count, None, r.updated_at)
+           for r in spark.read.parquet(lin_path).collect()]
+    shutil.rmtree(lin_path)
+    spark.createDataFrame(old, LINEAGE_SCHEMA).coalesce(1).write.parquet(lin_path)
+    again = pipe.run(spark, corrupt, source_dict=sd, snapshot_id="s")
+    assert again.buckets_done == 0 and again.buckets_skipped == 4
+    assert again.counts == first.counts

@@ -51,3 +51,28 @@ def test_correlation_matrix_overflow_guard(spark):
     df2 = spark.createDataFrame(
         [(1.0, None), (2.0, 2.0)], "a double, b double")
     assert correlation_matrix(df2, ["a", "b"]).count() == 1
+
+
+def test_column_stats_sketch_within_error_bound(spark):
+    """distinct_count is an HLL estimate (lg_k=14, RSE ≈ 0.8%): within 3
+    RSE of the exact count, NULLs excluded, also for the types the sketch
+    cannot take directly (double, date, boolean go through xxhash64)."""
+    from json_schema_modern_spark.operators.stats import HLL_LG_K, column_stats
+
+    df = spark.range(60000).selectExpr(
+        "CAST(id % 17011 AS INT) AS i",
+        "IF(id % 10 = 0, NULL, (id % 23011) * 0.5D) AS d",
+        "IF(id % 7 = 0, NULL, date_add(DATE'2000-01-01', CAST(id % 9001 AS INT))) AS dt",
+        "IF(id % 5 = 0, NULL, id % 3 = 0) AS b",
+        "IF(id % 11 = 0, NULL, concat('s', id % 31013)) AS s",
+    )
+    cols = df.columns
+    est = {r.column: r.distinct_count for r in column_stats(df, cols).collect()}
+    exact = {r.column: r.distinct_count
+             for r in column_stats(df, cols, exact_distinct=True).collect()}
+    rse = 1.04 / (2 ** HLL_LG_K) ** 0.5
+    assert exact["b"] == 2
+    for c in cols:
+        assert abs(est[c] - exact[c]) <= 3 * rse * exact[c], (c, est[c], exact[c])
+    plan = column_stats(df, cols)._jdf.queryExecution().executedPlan().toString()
+    assert "HyperLogLogPlusPlus" not in plan

@@ -101,6 +101,21 @@ def main() -> None:
           bool(rs) and all("tokens" not in ln for ln in rs),
           rs[0] if rs else "no ReadSchema line")
 
+    # 3b. stats: distinct counts come from the DataSketches HLL aggregate,
+    #     not approx_count_distinct's far costlier HyperLogLog++ update
+    check("stats: no HyperLogLogPlusPlus (hll_sketch_agg instead)",
+          "HyperLogLogPlusPlus" not in stats_plan)
+
+    # 3c. drift: every KS consumer reads ONE (grp, bucket) aggregate — a
+    #     single scan of the input, not one per consumer
+    from json_schema_modern_spark.operators.drift import ks_drift
+
+    ks_plan = explain_str(ks_drift(df, "n_tok", "source", 0.0, 2048.0, 256))
+    n_scans = sum(1 for ln in ks_plan.splitlines()
+                  if ln.strip().startswith("(") and "Scan parquet" in ln)
+    check("drift: ks_drift plan holds exactly one FileScan", n_scans == 1,
+          f"{n_scans} scans")
+
     # 4. uniqueness: only doc_id read; partial aggregation before shuffle
     uniq_plan = explain_str(duplicate_keys(df, ["doc_id"]))
     rs = [ln for ln in uniq_plan.splitlines() if "ReadSchema" in ln]
