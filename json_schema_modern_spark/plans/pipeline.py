@@ -16,34 +16,46 @@ through TableIO when a catalog exists):
 - a run is keyed by (snapshot_id, spec fingerprint) — same input + same
   spec ⇒ same run, mirroring the reference's MD5 document dedup
   (Modern.pm:186-197);
-- rows are bucketed by ``pmod(xxhash64(doc_id), n_buckets)``; a bucket is
-  the unit of restart.  Because the bucket key is a hash of the uniqueness
-  key, duplicate doc_ids always land in the same bucket, so the
-  uniqueness check is per-bucket-complete — no cross-bucket pass needed;
-- violations are written partitioned by bucket with dynamic partition
-  overwrite (idempotent re-run of a half-finished bucket);
-- global checks that need all rows (KS drift per source) run as a final
-  step recorded under bucket = -1;
-- after the writes, the written violations are read ONCE, as a
-  (bucket, keyword, keyword_location) count, and the input once more, as
-  a (bucket, n_tok histogram bin) count.  Every other table derives from
-  those two small aggregates: the lineage ``doc_count``/``error_count``,
+- rows are bucketed by ``pmod(xxhash64(doc_id), n_buckets)``.  Because
+  the bucket key is a hash of the uniqueness key, duplicate doc_ids always
+  land in the same bucket, so the uniqueness check is per-bucket-complete —
+  no cross-bucket pass needed;
+- a wave is the unit of write and restart.  A run's pending buckets are
+  one wave: one plain Spark write into a directory of its own,
+  ``violations/fp=<fp>/wave=<run_id>-0/``, with ``bucket`` a column of the
+  files.  Global checks that need all rows (KS drift per source, non-id
+  uniqueness) write a second wave, ``<run_id>-g``, under bucket = -1;
+- right after a wave's write commits, its lineage rows (run_id = the wave
+  id, snapshot, fingerprint, bucket, status, doc_count, error_count) are
+  appended, so a crash redoes only the waves without lineage.  A bucket's
+  live wave is the one named by its latest done lineage row; readers read
+  exactly those directories, by path, and a run deletes the wave
+  directories no such row names (crashed or superseded waves).  A wave is
+  live for all of its buckets or none: it holds every bucket pending at
+  its start, so a later run either redoes all of them (``resume=False``)
+  or none (resume skips them).  Old ``fp=<fp>/bucket=<b>/`` workdirs still
+  read and resume;
+- a wave's violations are counted on the driver from its files with pyarrow,
+  as (bucket, keyword, keyword_location), and the input once, before the
+  waves, as (bucket, n_tok histogram bin).  Every other table derives from
+  those counts: the lineage ``doc_count``/``error_count``,
   ``partition_results``, ``violation_counts``, the histogram, and
-  ``PipelineResult.counts`` (the CLI's total) — nothing re-scans the
-  input per table or re-reads the violations;
-- lineage rows (run_id, snapshot, fingerprint, bucket, status, doc_count,
-  error_count) are appended only AFTER the run's violation writes commit.
-  They and the count-derived tables are a few hundred rows at most, so
-  the driver writes them with pyarrow (one file each, written under a
-  hidden name and renamed into place) instead of a Spark job per table;
+  ``PipelineResult.counts`` (the CLI's total).  Lineage, the column stats
+  and the count-derived tables are a few hundred rows at most, so the
+  driver writes them with pyarrow (one file each, written under a hidden
+  name and renamed into place) instead of a Spark write per table;
+- a run holds the workdir through a claim file (run_id, pid, host):
+  a second run on it fails while the first one lives;
 - resume = read lineage, skip done buckets, process the rest.
 """
 
 from __future__ import annotations
 
+import contextlib
 import json
 import os
 import shutil
+import socket
 import time
 import uuid
 from collections import Counter
@@ -118,14 +130,7 @@ class ValidationPipeline:
     ):
         self.spec = spec
         self.id_col = id_col
-        if workdir is not None and "://" in workdir and not workdir.startswith("file://"):
-            # checkpoint cleanup + lineage appends use os-level file ops;
-            # a remote URI (hdfs://, s3a://) would silently no-op the
-            # stale-partition deletes and corrupt resume semantics.
-            raise ValueError(
-                "workdir must be a local filesystem path (remote URIs are "
-                "not supported; point workdir at a shared local mount)")
-        self.workdir = workdir[7:] if workdir and workdir.startswith("file://") else workdir
+        self.workdir = None if workdir is None else _local_path(workdir)
         self.n_buckets = n_buckets
         self.drift_bins = drift_bins
         self.drift_hi = drift_hi
@@ -141,15 +146,7 @@ class ValidationPipeline:
         geometry from the manifest.  Compiled Column expressions are
         session-bound and re-derive lazily on first validate — the
         analogue of the reference re-adding coderefs after THAW."""
-        # same workdir normalization/validation as __init__: strip
-        # file://, reject remote URIs explicitly (otherwise the open()
-        # below fails with an opaque ENOENT on "hdfs:/..." paths)
-        if "://" in workdir and not workdir.startswith("file://"):
-            raise ValueError(
-                "workdir must be a local filesystem path (remote URIs are "
-                "not supported; point workdir at a shared local mount)")
-        if workdir.startswith("file://"):
-            workdir = workdir[7:]
+        workdir = _local_path(workdir)
         with open(os.path.join(workdir, "run_manifest.json")) as f:
             manifest = json.load(f)
         fp = fingerprint or manifest["spec_fingerprint"]
@@ -171,15 +168,21 @@ class ValidationPipeline:
 
     def done_buckets(self, snapshot_id: str, fingerprint: str) -> set[int]:
         """Buckets whose lineage marks them done for (snapshot, spec)."""
+        return {b for s, b in self._latest_waves(fingerprint) if s == snapshot_id}
+
+    def _latest_waves(self, fingerprint: str) -> dict[tuple[str, int], str]:
+        """(snapshot_id, bucket) → the wave id (lineage ``run_id``) of the
+        latest done lineage row for this spec: the wave that holds that
+        bucket's live violations."""
         p = self._lineage_path()
         if not os.path.isdir(p):
-            return set()
+            return {}
         rows = pads.dataset(p, schema=_arrow_schema(LINEAGE_SCHEMA), format="parquet") \
-            .to_table(columns=["snapshot_id", "spec_fingerprint", "status", "bucket"]) \
-            .to_pylist()
-        return {r["bucket"] for r in rows
-                if (r["snapshot_id"], r["spec_fingerprint"], r["status"])
-                == (snapshot_id, fingerprint, "done")}
+            .to_table(columns=["run_id", "snapshot_id", "spec_fingerprint", "bucket",
+                               "status", "updated_at"]).to_pylist()
+        return {(r["snapshot_id"], r["bucket"]): r["run_id"]
+                for r in sorted(rows, key=lambda r: r["updated_at"] or 0.0)
+                if (r["spec_fingerprint"], r["status"]) == (fingerprint, "done")}
 
     # -- per-bucket row-local + bucket-safe set checks ----------------------
 
@@ -198,6 +201,18 @@ class ValidationPipeline:
             if extra is not None:
                 viols = viols.unionByName(extra)
         return viols
+
+    def _wave_violations(self, bucketed: DataFrame, wave: list[int],
+                         set_checks: list[SetCheck],
+                         source_dict: DataFrame | None) -> DataFrame:
+        """The rows one wave writes: its buckets' violations, ``bucket`` a
+        column.  The wave's buckets are one IN predicate (one py4j call,
+        where ``isin`` makes one per bucket), and none at all when the
+        wave holds every bucket."""
+        if len(wave) < self.n_buckets:
+            bucketed = bucketed.filter(F.expr(f"_bucket IN ({', '.join(map(str, wave))})"))
+        return self._bucket_violations(bucketed, set_checks, source_dict) \
+            .withColumnRenamed("_bucket", "bucket")
 
     def _bucket_set_check(
         self, check: SetCheck, bucketed: DataFrame, source_dict: DataFrame | None
@@ -298,7 +313,6 @@ class ValidationPipeline:
         # the one compile of the run: bucketed and plain frames share the
         # plan's set checks, which depend on the spec alone
         plan = self.validator.compile_for(df.withColumn("_bucket", F.lit(0)))
-        fingerprint = plan.fingerprint
         run_id = uuid.uuid4().hex[:12]
         bucketed = df.withColumn("_bucket", _bucket_expr(F.col(self.id_col), self.n_buckets))
         stats = column_stats(df, stats_columns or [c for c in df.columns if c != "tokens"])
@@ -307,6 +321,13 @@ class ValidationPipeline:
             return self._run_inmemory(run_id, bucketed, plan.set_checks, source_dict, stats)
 
         os.makedirs(self.workdir, exist_ok=True)
+        with _claim_workdir(self.workdir, run_id):
+            return self._run_checkpointed(spark, df, bucketed, plan, run_id,
+                                          snapshot_id, resume, source_dict, stats)
+
+    def _run_checkpointed(self, spark, df, bucketed, plan, run_id, snapshot_id,
+                          resume, source_dict, stats) -> PipelineResult:
+        fingerprint = plan.fingerprint
         # persist the frozen validator next to the lineage (reference
         # serialization caching, Modern.pm:1259-1279 / README.pod CACHING):
         # a restarted driver resumes via ``ValidationPipeline.resume_from``
@@ -319,75 +340,15 @@ class ValidationPipeline:
         _write_manifest(self.workdir, run_id, snapshot_id, fingerprint,
                         self.n_buckets, self.id_col, self.drift_bins,
                         self.drift_hi)
-        done = self.done_buckets(snapshot_id, fingerprint) if resume else set()
+        latest = self._latest_waves(fingerprint)
+        done = {b for s, b in latest if s == snapshot_id} if resume else set()
         pending = [b for b in range(self.n_buckets) if b not in done]
         redo_global = bool(pending) or -1 not in done
-
-        viol_path = os.path.join(self.workdir, "violations")
-        fp_dir = os.path.join(viol_path, f"fp={fingerprint}")
-        spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
-
-        if pending:
-            sub = bucketed.filter(F.col("_bucket").isin(pending))
-            viols = self._bucket_violations(sub, plan.set_checks, source_dict)
-            # violations are partitioned by (fp, bucket): runs with a
-            # changed spec never see another fingerprint's rows, and
-            # dynamic overwrite stays scoped to this spec's partitions.
-            # Dynamic overwrite only replaces partitions that RECEIVE
-            # rows — a pending bucket whose re-run yields zero violations
-            # must still clear stale files, so drop those partition dirs
-            # explicitly first (idempotent, pre-commit: lineage marks the
-            # bucket done only after the write succeeds).
-            for b in pending:
-                shutil.rmtree(os.path.join(fp_dir, f"bucket={b}"), ignore_errors=True)
-            viols.withColumnRenamed("_bucket", "bucket") \
-                .withColumn("fp", F.lit(fingerprint)) \
-                .write.mode("overwrite").partitionBy("fp", "bucket").parquet(viol_path)
-
-        # global pass (drift, non-id uniqueness) — bucket -1, re-done on
-        # every completing run
-        if redo_global:
-            shutil.rmtree(os.path.join(fp_dir, "bucket=-1"), ignore_errors=True)
-            gv = self._global_violations(df, plan.set_checks)
-            if gv is not None:
-                gv.withColumn("bucket", F.lit(-1)).withColumn("fp", F.lit(fingerprint)) \
-                    .write.mode("overwrite").partitionBy("fp", "bucket").parquet(viol_path)
-
-        # read this spec's partition subtree directly (never sibling
-        # fingerprints' files); a fully-clean run writes no partition files
-        # at all — that is an empty violations table, not an error (the CLI
-        # must exit 0).  Any OTHER read failure (corrupt files, permission)
-        # must propagate: treating it as "no violations" would report a
-        # dirty dataset as valid.
-        has_files = any(
-            f.endswith(".parquet")
-            for _, _, files in os.walk(fp_dir) for f in files)
-        if has_files:
-            # the workdir is local (remote URIs are rejected above): its
-            # ≤ n_buckets+1 partition dirs list on the driver in
-            # milliseconds, where past 32 children Spark would run a
-            # listing job of its own
-            key = "spark.sql.sources.parallelPartitionDiscovery.threshold"
-            prev = spark.conf.get(key)
-            spark.conf.set(key, str(self.n_buckets + 2))
-            try:
-                all_viols = spark.read.schema(WRITTEN_VIOL_SCHEMA).parquet(fp_dir)
-            finally:
-                spark.conf.set(key, prev)
-            rollup = {(r.bucket, r.keyword, r.keyword_location): r["count"] for r in
-                      all_viols.groupBy("bucket", "keyword", "keyword_location")
-                      .count().collect()}
-        else:
-            all_viols = spark.createDataFrame([], WRITTEN_VIOL_SCHEMA)
-            rollup = {}
-        errors: Counter = Counter()
-        per_keyword: Counter = Counter()
-        for (b, kw, loc), n in rollup.items():
-            errors[b] += n
-            per_keyword[(kw, loc)] += n
+        fp_dir = os.path.join(self.workdir, "violations", f"fp={fingerprint}")
 
         # one small aggregate over the input gives both the per-bucket doc
-        # counts and the n_tok histogram: (bucket, histogram bin) → rows
+        # counts and the n_tok histogram: (bucket, histogram bin) → rows.
+        # It runs first: each wave's lineage rows carry its doc counts.
         hist_bin = (histogram_bin("n_tok", 0.0, self.drift_hi, HISTOGRAM_BINS)
                     if "n_tok" in df.columns else F.lit(None))
         doc_counts: Counter = Counter()
@@ -397,18 +358,76 @@ class ValidationPipeline:
             if r.bin is not None:
                 hist_counts[r.bin] += r["count"]
 
-        now = time.time()
-        _write_driver_table(self._lineage_path(), LINEAGE_SCHEMA, [
-            (run_id, snapshot_id, fingerprint, b, "done", doc_counts[b], errors[b], now)
-            for b in pending + ([-1] if redo_global else [])
-        ], append=True)
+        counted: dict[str, Counter] = {}
+
+        def write_wave(wave_id: str, buckets: list[int], viols: DataFrame | None):
+            # a plain write into a directory no other wave uses; the wave
+            # is live only once its lineage rows land, so a crash before
+            # that leaves an orphan directory that nothing reads
+            path = os.path.join(fp_dir, f"wave={wave_id}")
+            counted[path] = Counter()
+            if viols is not None:
+                viols.write.parquet(path)
+                counted[path] = _count_violations(path)
+            errors: Counter = Counter()
+            for (b, _, _), n in counted[path].items():
+                errors[b] += n
+            now = time.time()
+            _write_driver_table(self._lineage_path(), LINEAGE_SCHEMA, [
+                (wave_id, snapshot_id, fingerprint, b, "done", doc_counts[b], errors[b], now)
+                for b in buckets], append=True)
+            latest.update({(snapshot_id, b): wave_id for b in buckets})
+
+        # the pending buckets are one wave: each wave scans the whole input,
+        # so splitting them would multiply the scans
+        if pending:
+            write_wave(f"{run_id}-0", pending,
+                       self._wave_violations(bucketed, pending, plan.set_checks, source_dict))
+        # global pass (drift, non-id uniqueness) — bucket -1, a wave of its
+        # own, re-done on every run that re-does any bucket
+        if redo_global:
+            gv = self._global_violations(df, plan.set_checks)
+            write_wave(f"{run_id}-g", [-1],
+                       None if gv is None else gv.withColumn("bucket", F.lit(-1)))
+
+        # this snapshot's live data: for each bucket, the wave of its latest
+        # done lineage row; a live wave is live for all of its buckets, so
+        # it is read whole.  A run_id without "-" names a run that wrote the
+        # old fp=<fp>/bucket=<b>/ layout, whose files hold no bucket column.
+        live = {b: w for (s, b), w in latest.items() if s == snapshot_id}
+        dirs = {os.path.join(fp_dir, f"wave={w}" if "-" in w else f"bucket={b}"):
+                None if "-" in w else b for b, w in live.items()}
+        dirs = {p: b for p, b in dirs.items() if os.path.isdir(p)}
+        rollup: Counter = Counter()
+        for p, b in dirs.items():
+            rollup.update(counted[p] if p in counted else _count_violations(p, b))
+        # delete what no latest done lineage row (of any snapshot of this
+        # spec) names: crashed waves' orphans, waves a later run superseded
+        # and old bucket= directories this snapshot has rewritten as waves
+        named = set(latest.values())
+        for name in os.listdir(fp_dir) if os.path.isdir(fp_dir) else ():
+            key, _, val = name.partition("=")
+            if (key == "wave" and val not in named) or (
+                    key == "bucket" and "-" in live.get(int(val), "-")):
+                shutil.rmtree(os.path.join(fp_dir, name))
+        waves = [p for p, b in dirs.items() if b is None]
+        legacy = [p for p, b in dirs.items() if b is not None]
+        all_viols = (spark.read.schema(WRITTEN_VIOL_SCHEMA).parquet(*waves) if waves
+                     else spark.createDataFrame([], WRITTEN_VIOL_SCHEMA))
+        if legacy:   # bucket read from the path
+            all_viols = all_viols.unionByName(spark.read.schema(WRITTEN_VIOL_SCHEMA)
+                                              .option("basePath", fp_dir).parquet(*legacy))
+        errors: Counter = Counter()
+        per_keyword: Counter = Counter()
+        for (b, kw, loc), n in rollup.items():
+            errors[b] += n
+            per_keyword[(kw, loc)] += n
 
         # metrics tables (north rule: per-partition lineage + metrics):
         # column stats, value histogram, per-bucket pass/fail rollup,
         # per-keyword violation rollup — tiny outputs, one file each
-        stats.coalesce(1).write.mode("overwrite").parquet(
-            os.path.join(self.workdir, "stats"))
         tables = {
+            "stats": (_ddl(stats.schema), [tuple(r) for r in stats.collect()]),
             "partition_results": (PARTITION_RESULTS_SCHEMA, [
                 (b, errors[b] == 0, n, errors[b]) for b, n in sorted(doc_counts.items())]),
             "violation_counts": (VIOLATION_COUNTS_SCHEMA, [
@@ -427,7 +446,7 @@ class ValidationPipeline:
                         self.n_buckets, self.id_col, self.drift_bins,
                         self.drift_hi)
         return PipelineResult(
-            run_id=run_id, violations=all_viols, stats=stats,
+            run_id=run_id, violations=all_viols, stats=written["stats"],
             histogram=written.get("histogram"),
             partition_results=written["partition_results"],
             violation_counts=written["violation_counts"],
@@ -450,6 +469,17 @@ class ValidationPipeline:
             .agg(F.count(F.lit(1)).alias("n_violations")),
             buckets_done=self.n_buckets,
         )
+
+
+def _local_path(workdir: str) -> str:
+    """``workdir`` without ``file://``.  Remote URIs (hdfs://, s3a://) are
+    refused: claims, wave cleanup and lineage use os-level file ops, which
+    would silently miss a remote directory and corrupt resume."""
+    if "://" in workdir and not workdir.startswith("file://"):
+        raise ValueError(
+            "workdir must be a local filesystem path (remote URIs are "
+            "not supported; point workdir at a shared local mount)")
+    return workdir.removeprefix("file://")
 
 
 def _bucket_expr(col, n_buckets: int):
@@ -477,8 +507,79 @@ def _partition_results(bucketed: DataFrame, viols: DataFrame) -> DataFrame:
     )
 
 
+@contextlib.contextmanager
+def _claim_workdir(workdir: str, run_id: str):
+    """Hold ``<workdir>/.claim`` (run_id, pid, host) for the run.  The claim
+    is written whole under a name of its own and hard-linked into place,
+    which fails if ``.claim`` exists, so a second run on the workdir fails
+    while the first one's pid is alive.  A claim whose pid is dead on this
+    host, or whose content does not parse (no run writes such a claim), is
+    taken over.  Nothing watches the claim: no thread, no process."""
+    path = os.path.join(workdir, ".claim")
+    me = {"run_id": run_id, "pid": os.getpid(), "host": socket.gethostname()}
+    mine = f"{path}.{run_id}"
+    with open(mine, "w") as f:
+        json.dump(me, f)
+    try:
+        while True:
+            try:
+                os.link(mine, path)
+                break
+            except FileExistsError:
+                try:
+                    with open(path) as f:
+                        owner = json.load(f)
+                except FileNotFoundError:      # released meanwhile: try again
+                    continue
+                except ValueError:             # not a claim: take it over
+                    owner = {}
+                if owner and (owner.get("host") != me["host"]
+                              or _pid_alive(owner.get("pid"))):
+                    raise RuntimeError(
+                        f"workdir {workdir} is claimed by run {owner.get('run_id')} "
+                        f"(pid {owner.get('pid')} on {owner.get('host')}); remove "
+                        f"{path} if that run is gone") from None
+                with contextlib.suppress(FileNotFoundError):
+                    os.remove(path)
+    finally:
+        os.remove(mine)
+    try:
+        yield
+    finally:
+        os.remove(path)
+
+
+def _pid_alive(pid) -> bool:
+    try:
+        os.kill(pid, 0)
+    except ProcessLookupError:
+        return False
+    except PermissionError:      # alive, another user's
+        pass
+    return True
+
+
+def _count_violations(path: str, bucket: int | None = None) -> Counter:
+    """(bucket, keyword, keyword_location) → rows of the violation files
+    in ``path``, counted on the driver with pyarrow (the workdir is local;
+    a Spark aggregate costs two jobs).  ``bucket`` is given for an old
+    ``bucket=<b>/`` directory, whose files hold no bucket column."""
+    cols = ["keyword", "keyword_location"] + (["bucket"] if bucket is None else [])
+    full = _arrow_schema(WRITTEN_VIOL_SCHEMA)
+    ds = pads.dataset(path, schema=pa.schema([full.field(c) for c in cols]),
+                      format="parquet")
+    return Counter({(r.get("bucket", bucket), r["keyword"], r["keyword_location"]):
+                    r["count_all"] for r in ds.to_table(columns=cols).group_by(cols)
+                    .aggregate([([], "count_all")]).to_pylist()})
+
+
 _ARROW_TYPES = {"string": pa.string(), "int": pa.int32(), "long": pa.int64(),
-                "double": pa.float64(), "boolean": pa.bool_()}
+                "bigint": pa.int64(), "double": pa.float64(), "boolean": pa.bool_()}
+
+
+def _ddl(schema) -> str:
+    """The flat DDL string of a Spark ``StructType``."""
+    return ", ".join(f"{f.name} {f.dataType.simpleString()}" for f in schema)
 
 
 def _arrow_schema(ddl: str) -> pa.Schema:

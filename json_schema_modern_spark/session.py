@@ -11,6 +11,12 @@ chosen to also be the right default on a 1000-executor cluster:
   pandas-UDF based; everything on the hot path stays JVM-side.
 - shuffle.partitions sized to cores locally; on a real cluster this is
   overridden by AQE's coalescing from an intentionally-high initial value.
+- DataFrame origin tracking off (``spark.python.sql.dataFrameDebugging``):
+  with it on, every ``functions.*``/Column call makes ~5 extra py4j round
+  trips to record its Python call site, which more than doubled the
+  flagship spec's compile time.  The cost: errors raised in the JVM no
+  longer name the Python line that built the failing expression (their
+  message is unchanged).  ``extra_conf`` can turn it back on.
 """
 
 from __future__ import annotations
@@ -49,6 +55,7 @@ def get_spark(
         .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEM", "16g"))
         .config("spark.ui.enabled", "false")
         .config("spark.sql.autoBroadcastJoinThreshold", str(64 * 1024 * 1024))
+        .config("spark.python.sql.dataFrameDebugging.enabled", "false")
     )
     for k, v in (extra_conf or {}).items():
         builder = builder.config(k, v)

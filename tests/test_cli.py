@@ -207,3 +207,28 @@ def test_cli_via_spark_submit_py_files(cli_data, tmp_path):
     assert payload["buckets_done"] == 2
     assert os.path.exists(os.path.join(out_dir, "violations"))
     assert os.path.exists(os.path.join(out_dir, "lineage"))
+
+
+def test_cli_spark_job_error_exits_2(spark, tmp_path, capsys):
+    """A Spark job that fails inside the JVM (here: a data page overwritten
+    in a parquet file whose footer still reads) keeps the exit-2 contract,
+    and the summary carries the exception text — DataFrame origin tracking
+    is off, which drops only the Python call site from JVM errors."""
+    from json_schema_modern_spark import cli
+    from json_schema_modern_spark.sources.sequences import sequences_df
+
+    table = str(tmp_path / "tokens")
+    sequences_df(spark, 400, seed=3).coalesce(1).write.parquet(table)
+    part = next(f for f in os.listdir(table) if f.endswith(".parquet"))
+    path = os.path.join(table, part)
+    with open(path, "r+b") as f:
+        f.seek(4)
+        f.write(b"\xff" * (os.path.getsize(path) // 2))
+    spec_path = str(tmp_path / "spec.json")
+    with open(spec_path, "w") as f:
+        json.dump(SPEC | {"properties": {}}, f)
+    rc = cli.main(["--spec", spec_path, "--table", table,
+                   "--output", str(tmp_path / "out"), "--n-buckets", "4"])
+    payload = json.loads(capsys.readouterr().out.splitlines()[-1])
+    assert rc == 2 and payload["valid"] is False
+    assert part in payload["exception"]

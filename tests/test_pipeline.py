@@ -128,8 +128,8 @@ def test_non_id_uniqueness_runs_global(spark, corrupt, tmp_path):
 
 def test_changed_spec_no_stale_violations(spark, tmp_path):
     """Re-running a workdir under a NEW spec fingerprint must not surface
-    the old spec's violations (fp-partitioned isolation + explicit
-    pending-partition cleanup), and a clean run reads back as empty."""
+    the old spec's violations (each fingerprint reads only its own wave
+    directories), and a clean run reads back as empty."""
     from json_schema_modern_spark.sources.sequences import sequences_df
 
     clean = sequences_df(spark, 500, seed=7)
@@ -226,3 +226,201 @@ def test_resumes_spark_written_lineage(spark, corrupt, tmp_path):
     again = pipe.run(spark, corrupt, source_dict=sd, snapshot_id="s")
     assert again.buckets_done == 0 and again.buckets_skipped == 4
     assert again.counts == first.counts
+
+
+# -- waves: the restart unit of a checkpointed run ---------------------------
+
+def _viol_rows(df):
+    from json_schema_modern_spark.plans.pipeline import VIOL_COLS
+
+    return sorted(tuple(r) for r in df.select(*VIOL_COLS, "bucket").collect())
+
+
+def _lineage(wd):
+    import pyarrow.parquet as pq
+
+    p = os.path.join(wd, "lineage")
+    return pq.read_table(p).to_pylist() if os.path.isdir(p) else []
+
+
+def _fp_dir(wd):
+    import json
+
+    with open(os.path.join(wd, "run_manifest.json")) as f:
+        fp = json.load(f)["spec_fingerprint"]
+    return os.path.join(wd, "violations", f"fp={fp}")
+
+
+def _live_waves(wd):
+    latest = {}
+    for r in sorted(_lineage(wd), key=lambda r: r["updated_at"]):
+        latest[(r["snapshot_id"], r["bucket"])] = r["run_id"]
+    return set(latest.values())
+
+
+@pytest.mark.parametrize("prior,after,mid_write", [
+    (False, 0, True), (False, 1, False), (True, 0, True), (True, 1, False)])
+def test_crash_resume_reruns_only_unfinished_waves(
+        spark, corrupt, tmp_path, monkeypatch, prior, after, mid_write):
+    """A run whose wave ``after`` fails (wave 0 holds the buckets, wave 1
+    is the global pass) — before it writes, or after part of its rows are
+    on disk — resumes into the violations of an uninterrupted run,
+    re-running only the waves that had not committed.  With ``prior`` the
+    workdir holds a finished run and the failing run is a ``resume=False``
+    one: the old run's waves stay on disk next to the new ones, and no
+    bucket may be read from both."""
+    from pyspark.sql.readwriter import DataFrameWriter
+
+    sd = source_dict_df(spark)
+    want = ValidationPipeline(SPEC, workdir=str(tmp_path / "ref"), n_buckets=4).run(
+        spark, corrupt, source_dict=sd, snapshot_id="s")
+    wd = str(tmp_path / "crash")
+    if prior:
+        ValidationPipeline(SPEC, workdir=wd, n_buckets=4).run(
+            spark, corrupt, source_dict=sd, snapshot_id="s")
+    before = _lineage(wd) if prior else []
+    orig = DataFrameWriter.parquet
+    waves = []
+
+    def failing_parquet(self, path, *args, **kwargs):
+        if "wave=" in path:
+            waves.append(path)
+            if len(waves) > after:
+                if mid_write:
+                    orig(self._df.limit(3).write, path)
+                raise RuntimeError("injected wave failure")
+        return orig(self, path, *args, **kwargs)
+
+    with monkeypatch.context() as m:
+        m.setattr(DataFrameWriter, "parquet", failing_parquet)
+        with pytest.raises(RuntimeError, match="injected wave failure"):
+            ValidationPipeline(SPEC, workdir=wd, n_buckets=4).run(
+                spark, corrupt, source_dict=sd, snapshot_id="s", resume=not prior)
+    committed = [r["bucket"] for r in _lineage(wd) if r not in before]
+    assert sorted(committed) == ([] if after == 0 else [0, 1, 2, 3])
+    assert os.path.isdir(waves[-1]) == mid_write
+
+    res = ValidationPipeline(SPEC, workdir=wd, n_buckets=4).run(
+        spark, corrupt, source_dict=sd, snapshot_id="s")
+    rerun = {r["bucket"] for r in _lineage(wd) if r["run_id"].startswith(res.run_id)}
+    if prior:          # every bucket and the global pass have a live wave
+        assert res.buckets_done == 0 and rerun == set()
+    else:
+        assert res.buckets_done == (4 if after == 0 else 0)
+        assert rerun == ({0, 1, 2, 3, -1} if after == 0 else {-1})
+    assert _viol_rows(res.violations) == _viol_rows(want.violations)
+    assert res.counts == want.counts
+    assert not os.path.exists(waves[-1])     # the failed wave is gone
+    assert set(os.listdir(_fp_dir(wd))) == {f"wave={w}" for w in _live_waves(wd)}
+
+
+def test_orphan_wave_deleted_and_never_read(spark, corrupt, tmp_path):
+    import shutil
+
+    sd = source_dict_df(spark)
+    wd = str(tmp_path / "orphan")
+    pipe = ValidationPipeline(SPEC, workdir=wd, n_buckets=4)
+    first = pipe.run(spark, corrupt, source_dict=sd, snapshot_id="s")
+    fp_dir = _fp_dir(wd)
+    live = next(d for d in os.listdir(fp_dir) if not d.endswith("-g"))
+    orphan = os.path.join(fp_dir, "wave=0123456789ab-0")
+    shutil.copytree(os.path.join(fp_dir, live), orphan)   # would double the rows
+    again = pipe.run(spark, corrupt, source_dict=sd, snapshot_id="s")
+    assert again.buckets_done == 0 and not os.path.exists(orphan)
+    assert again.counts == first.counts
+    assert _viol_rows(again.violations) == _viol_rows(first.violations)
+
+
+def test_resumes_old_bucket_partitioned_layout(spark, corrupt, tmp_path):
+    """A workdir written as violations/fp=<fp>/bucket=<b>/ (bucket only in
+    the path) by runs whose lineage run_id names no wave still resumes
+    with nothing recomputed; a bucket it must redo moves into a wave."""
+    import shutil
+
+    from json_schema_modern_spark.plans.pipeline import (
+        LINEAGE_SCHEMA, WRITTEN_VIOL_SCHEMA, _write_driver_table,
+    )
+
+    sd = source_dict_df(spark)
+    wd = str(tmp_path / "legacy")
+    pipe = ValidationPipeline(SPEC, workdir=wd, n_buckets=4)
+    first = pipe.run(spark, corrupt, source_dict=sd, snapshot_id="s")
+    fp_dir = _fp_dir(wd)
+    want = _viol_rows(first.violations)
+    rows = spark.createDataFrame(first.violations.collect(), WRITTEN_VIOL_SCHEMA)
+    shutil.rmtree(os.path.join(wd, "violations"))
+    rows.withColumn("fp", F.lit(os.path.basename(fp_dir)[3:])) \
+        .write.partitionBy("fp", "bucket").parquet(os.path.join(wd, "violations"))
+    old = [("0123456789ab", *list(r.values())[1:]) for r in _lineage(wd)]
+    shutil.rmtree(os.path.join(wd, "lineage"))
+    _write_driver_table(os.path.join(wd, "lineage"), LINEAGE_SCHEMA, old)
+
+    again = pipe.run(spark, corrupt, source_dict=sd, snapshot_id="s")
+    assert again.buckets_done == 0 and again.buckets_skipped == 4
+    assert again.counts == first.counts
+    assert _viol_rows(again.violations) == want
+
+    # forget bucket 0: it and the global pass are redone as waves, and
+    # their old directories go
+    _write_driver_table(os.path.join(wd, "lineage"), LINEAGE_SCHEMA,
+                        [r for r in old if r[3] != 0])
+    redo = pipe.run(spark, corrupt, source_dict=sd, snapshot_id="s")
+    assert redo.buckets_done == 1 and redo.counts == first.counts
+    assert _viol_rows(redo.violations) == want
+    left = set(os.listdir(fp_dir))
+    assert {"bucket=1", "bucket=2", "bucket=3"} <= left
+    assert not {"bucket=0", "bucket=-1"} & left
+
+
+def test_violation_files_do_not_grow_with_buckets(spark, corrupt, tmp_path):
+    def files(n_buckets):
+        wd = str(tmp_path / f"b{n_buckets}")
+        ValidationPipeline(SPEC, workdir=wd, n_buckets=n_buckets).run(
+            spark, corrupt, source_dict=source_dict_df(spark), snapshot_id="s")
+        return sum(f.endswith(".parquet") for _, _, fs in
+                   os.walk(os.path.join(wd, "violations")) for f in fs)
+
+    assert files(256) <= files(16)
+
+
+def test_workdir_claim(spark, corrupt, tmp_path, capsys):
+    """A second run on a claimed workdir fails (the CLI exits 2) while the
+    claim's pid lives; a claim whose pid is dead, or an empty one, is taken
+    over."""
+    import json
+    import socket
+    import subprocess
+    import sys
+
+    from json_schema_modern_spark import cli
+
+    wd = str(tmp_path / "claimed")
+    os.makedirs(wd)
+    claim = os.path.join(wd, ".claim")
+
+    def hold(pid):
+        with open(claim, "w") as f:
+            json.dump({"run_id": "other", "pid": pid, "host": socket.gethostname()}, f)
+
+    hold(os.getpid())
+    pipe = ValidationPipeline(SPEC, workdir=wd, n_buckets=4)
+    with pytest.raises(RuntimeError, match="claimed by run other"):
+        pipe.run(spark, corrupt, source_dict=source_dict_df(spark), snapshot_id="s")
+    table, spec_path = str(tmp_path / "t"), str(tmp_path / "spec.json")
+    corrupt.write.parquet(table)
+    with open(spec_path, "w") as f:
+        json.dump({"type": "object"}, f)
+    assert cli.main(["--spec", spec_path, "--table", table, "--output", wd]) == 2
+    assert "claimed by run other" in json.loads(capsys.readouterr().out)["exception"]
+    assert os.path.exists(claim)          # a refused run leaves the claim
+
+    dead = subprocess.Popen([sys.executable, "-c", ""])
+    dead.wait()
+    hold(dead.pid)
+    res = pipe.run(spark, corrupt, source_dict=source_dict_df(spark), snapshot_id="s")
+    assert res.buckets_done == 4 and not os.path.exists(claim)
+
+    open(claim, "w").close()        # content that does not parse is no claim
+    res = pipe.run(spark, corrupt, source_dict=source_dict_df(spark), snapshot_id="s")
+    assert res.buckets_done == 0 and not os.path.exists(claim)
+    assert not [f for f in os.listdir(wd) if f.startswith(".claim")]

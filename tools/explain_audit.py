@@ -116,6 +116,22 @@ def main() -> None:
     check("drift: ks_drift plan holds exactly one FileScan", n_scans == 1,
           f"{n_scans} scans")
 
+    # 3d. checkpointed pipeline: one wave's write reads the token table
+    #     once per bucket-local check — row pass, uniqueness, referential —
+    #     and no more (drift runs in the global pass)
+    from json_schema_modern_spark.plans.pipeline import ValidationPipeline, _bucket_expr
+
+    pipe = ValidationPipeline(_flagship_spec(), n_buckets=256,
+                              options=CompileOptions(assume_dense_arrays=True))
+    bucketed = df.withColumn("_bucket", _bucket_expr(F.col("doc_id"), 256))
+    wave_plan = explain_str(pipe._wave_violations(
+        bucketed, list(range(256)), pipe.validator.compile_for(bucketed).set_checks,
+        source_dict_df(spark)))
+    n_scans = sum(1 for ln in wave_plan.splitlines()
+                  if ln.strip().startswith("(") and "Scan parquet" in ln)
+    check("pipeline: wave write scans the token table exactly 3 times", n_scans == 3,
+          f"{n_scans} scans")
+
     # 4. uniqueness: only doc_id read; partial aggregation before shuffle
     uniq_plan = explain_str(duplicate_keys(df, ["doc_id"]))
     rs = [ln for ln in uniq_plan.splitlines() if "ReadSchema" in ln]
