@@ -4087,8 +4087,10 @@ def _minhash_pairs_oracle(dup_docs: str) -> str:
     """Recompute the full 32-hash MinHash signatures in DuckDB BIGINT and
     regenerate the banded-LSH candidate pairs (8 bands × 4 rows) —
     extending the `minhash_bands` signature-portability oracle to the
-    pair join itself (band keys compared as raw 4-tuples; the engine's
-    md5(bkey) is injective over them modulo md5 collisions)."""
+    pair join itself.  Band keys compare here as raw 4-tuples; the engine
+    buckets by one seeded xxhash64 long over (band, 4-tuple), so a 64-bit
+    hash collision would give the engine a candidate pair this
+    value-exact oracle lacks."""
     from json_schema_modern_spark.operators.dedup import (
         MERSENNE_P, _hash_params, poly_digest_sql)
 

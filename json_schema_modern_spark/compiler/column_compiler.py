@@ -39,20 +39,31 @@ including $ref hops), absolute_keyword_location (canonical URI).
 from __future__ import annotations
 
 import json
+import operator
 import re
 from dataclasses import dataclass, field as dc_field
-from typing import Any
+from functools import partial
+from typing import Any, Callable, NamedTuple
+from urllib.parse import urldefrag, urljoin
 
 from pyspark.sql import Column
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from json_schema_modern_spark.functions.formats import format_predicate
+from json_schema_modern_spark.spec.media_types import get_media_type
 from json_schema_modern_spark.spec.resolver import (
+    VOCABS_BY_DIALECT,
     SchemaRegistry,
     SpecError,
     json_pointer_escape,
+    metaschema_error,
     spec_fingerprint,
+)
+from json_schema_modern_spark.spec.vocabulary import (
+    KeywordSpec,
+    registered_keywords,
+    registered_uris,
 )
 
 VIOLATION_SCHEMA = T.StructType(
@@ -101,7 +112,6 @@ class CompileOptions:
     # unknown-provenance data keeps the exact null-aware path.
     assume_dense_arrays: bool = False
     max_depth: int = 64          # reference default is 50 (Modern.pm:76-80)
-    collect_leaf_errors: bool = True
     # per-keyword compile callbacks (reference: evaluation callbacks,
     # Modern.pm:652-663 / t/callbacks.t).  keyword -> fn(keyword, kloc,
     # akloc, value), fired once per (keyword, traversed location) the
@@ -257,48 +267,8 @@ class Target:
 
 # --- the compiler ----------------------------------------------------------
 
-_APPLY_TO = {
-    # keyword → set of json types it asserts on (vacuous elsewhere);
-    # mirrors the `return 1 if not is_type(...)` guards in V/Validation.pm
-    "multipleOf": {"number", "integer"},
-    "maximum": {"number", "integer"},
-    "exclusiveMaximum": {"number", "integer"},
-    "minimum": {"number", "integer"},
-    "exclusiveMinimum": {"number", "integer"},
-    "maxLength": {"string"},
-    "minLength": {"string"},
-    "pattern": {"string"},
-    "format": {"string"},
-    "maxItems": {"array"},
-    "minItems": {"array"},
-    "uniqueItems": {"array"},
-    "items": {"array"},
-    "prefixItems": {"array"},
-    "contains": {"array"},
-    "unevaluatedItems": {"array"},
-    "maxProperties": {"object"},
-    "minProperties": {"object"},
-    "required": {"object"},
-    "dependentRequired": {"object"},
-    "dependencies": {"object"},
-    "dependentSchemas": {"object"},
-    "properties": {"object"},
-    "patternProperties": {"object"},
-    "additionalProperties": {"object"},
-    "propertyNames": {"object"},
-    "unevaluatedProperties": {"object"},
-}
-
-_METADATA_KEYWORDS = {
-    "title", "description", "default", "deprecated", "readOnly", "writeOnly",
-    "examples", "$comment", "$defs", "definitions", "$anchor",
-    "$dynamicAnchor", "$recursiveAnchor", "$vocabulary", "$schema", "$id",
-    "format_annotation",
-    "contentEncoding", "contentMediaType", "contentSchema",
-}
-
 # $schema URI → dialect tag (V/Core.pm:134-196 dialect dispatch; the
-# engine compiles every dialect with the same keyword set except the
+# engine compiles every dialect with the same keyword table except the
 # differences below: array-form items/additionalItems allowed ≤2019-09,
 # draft4 boolean exclusiveMaximum/Minimum, $recursiveRef in 2019-09)
 _DIALECT_URIS = {
@@ -322,13 +292,7 @@ def _detect_dialect(spec: Any) -> str:
 # vocabularies this engine implements (V/Core.pm:363-395 semantics: a
 # REQUIRED vocabulary the evaluator doesn't know must abort compilation;
 # optional unknown vocabularies are ignored)
-_KNOWN_VOCAB_URIS = {
-    f"https://json-schema.org/draft/{d}/vocab/{v}"
-    for d in ("2020-12", "2019-09")
-    for v in ("core", "applicator", "unevaluated", "validation",
-              "meta-data", "format-annotation", "format-assertion",
-              "format", "content")
-}
+_KNOWN_VOCAB_URIS = frozenset().union(*VOCABS_BY_DIALECT.values())
 
 
 def _check_vocabulary(spec: Any) -> None:
@@ -338,13 +302,24 @@ def _check_vocabulary(spec: Any) -> None:
     if not isinstance(vocab, dict) or not all(
             isinstance(v, bool) for v in vocab.values()):
         raise SpecError('"$vocabulary" value must be an object of boolean values')
-    from json_schema_modern_spark.spec.vocabulary import registered_uris
-
     for uri, required in vocab.items():
         if required and uri not in _KNOWN_VOCAB_URIS \
                 and uri not in registered_uris():
             raise SpecError(
                 f'EXCEPTION: required vocabulary "{uri}" is not supported')
+
+
+def _shape_error(kw: str, what: str, kloc: str) -> SpecError:
+    n = "n" if what[0] in "aeiou" else ""
+    return SpecError(f"{kw} value is not a{n} {what}"
+                     + (f" (at {kloc})" if kloc else ""))
+
+
+def _string_arrays(v: Any) -> bool:
+    """Is `v` an object of arrays of strings (dependentRequired's shape)?"""
+    return isinstance(v, dict) and all(
+        isinstance(x, list) and all(isinstance(s, str) for s in x)
+        for x in v.values())
 
 
 def _shape_check(schema: dict, kloc: str, dialect: str) -> None:
@@ -353,9 +328,7 @@ def _shape_check(schema: dict, kloc: str, dialect: str) -> None:
     subs): malformed specs fail compilation with the reference's message
     shape instead of surfacing as downstream expression errors."""
     def err(kw: str, what: str) -> None:
-        n = "n" if what[0] in "aeiou" else ""
-        raise SpecError(f"{kw} value is not a{n} {what}"
-                        + (f" (at {kloc})" if kloc else ""))
+        raise _shape_error(kw, what, kloc)
 
     def is_num(v) -> bool:
         return isinstance(v, (int, float)) and not isinstance(v, bool)
@@ -385,11 +358,8 @@ def _shape_check(schema: dict, kloc: str, dialect: str) -> None:
     if "required" in schema and (not isinstance(schema["required"], list)
                                  or any(not isinstance(x, str) for x in schema["required"])):
         err("required", "array of strings")
-    if "dependentRequired" in schema and (
-            not isinstance(schema["dependentRequired"], dict)
-            or any(not isinstance(v, list)
-                   or any(not isinstance(x, str) for x in v)
-                   for v in schema["dependentRequired"].values())):
+    if "dependentRequired" in schema \
+            and not _string_arrays(schema["dependentRequired"]):
         err("dependentRequired", "object of arrays of strings")
     for kw in ("properties", "patternProperties", "dependentSchemas",
                "$defs", "definitions"):
@@ -401,20 +371,6 @@ def _shape_check(schema: dict, kloc: str, dialect: str) -> None:
     if "prefixItems" in schema and (not isinstance(schema["prefixItems"], list)
                                     or not schema["prefixItems"]):
         err("prefixItems", "non-empty array")
-
-
-# every keyword the compiler dispatches (strict-mode vocabulary)
-_KNOWN_KEYWORDS = (
-    set(_APPLY_TO) | _METADATA_KEYWORDS | {
-        "$ref", "$dynamicRef", "$recursiveRef", "type", "enum", "const",
-        "multipleOf", "maximum", "exclusiveMaximum", "minimum",
-        "exclusiveMinimum", "maxLength", "minLength", "pattern",
-        "allOf", "anyOf", "oneOf", "not", "if", "then", "else",
-        "maxContains", "minContains", "additionalItems",
-        "id",  # draft4 base-URI declaration (pre-$id spelling)
-        "x-unique", "x-ref", "x-drift",
-    }
-)
 
 
 class _Ctx:
@@ -499,6 +455,13 @@ def _merge_viols(cols: list[Column]) -> Column:
     if len(cols) == 1:
         return cols[0]
     return F.flatten(F.array(*cols))
+
+
+def _conj(oks: list[Column]) -> Column:
+    ok = F.lit(True)
+    for o in oks:
+        ok = ok & o
+    return ok
 
 
 def _ptr_escape_col(k: Column) -> Column:
@@ -592,29 +555,1211 @@ def _const_eq(col: Column, v: Any, dtype: T.DataType) -> Column | None:
     return None
 
 
-def _lit_value(v: Any, dtype: T.DataType) -> Column | None:
-    """Literal for enum/const comparison against a column of ``dtype``;
-    None when the schema value can never equal a value of this type
-    (type-strict equality — Utilities.pm:242-299)."""
-    jt = _json_type_of(dtype)
-    if isinstance(v, bool):
-        return F.lit(v) if jt == "boolean" else None
-    if isinstance(v, (int, float)):
-        if jt in ("integer", "number"):
-            if jt == "integer" and isinstance(v, float) and v != int(v):
-                return None
-            return F.lit(v).cast(dtype)
-        return None
-    if isinstance(v, str):
-        return F.lit(v) if jt == "string" else None
-    if v is None:
-        return None  # present values are never JSON null under our mapping
-    if isinstance(v, list) and isinstance(dtype, T.ArrayType):
-        elems = [_lit_value(x, dtype.elementType) for x in v]
-        if any(e is None for e in elems):
-            return None
-        return F.array(*elems).cast(dtype)
+def _prop_count(t: Target) -> Column:
+    if t.is_root:
+        return sum((F.col(n).isNotNull().cast("int") for n in t.field_names()), F.lit(0))
+    if isinstance(t.dtype, T.MapType):
+        return F.size(t.value_col())
+    if isinstance(t.dtype, T.StructType):
+        return sum((t.col.getField(n).isNotNull().cast("int") for n in t.field_names()), F.lit(0))
+    return F.lit(0)
+
+
+def _map_value_target(t: Target, name: str) -> Target:
+    vt = t.dtype.valueType
+    col = F.element_at(t.value_col(), F.lit(name))
+    return Target(
+        col=col, dtype=vt,
+        ptr=F.concat(t.ptr, F.lit("/" + json_pointer_escape(name))),
+        present=t.present & F.map_contains_key(t.value_col(), F.lit(name)),
+        null_is_value=True,  # a present map key with NULL value = JSON null
+    )
+
+
+# --- per-node state --------------------------------------------------------
+
+
+class _Node:
+    """Compile state of one schema object, shared by its keyword handlers:
+    the conjuncts and violation columns gathered so far, the static
+    coverage unevaluated* reads (SURVEY.md §2.4: compile-time coverage
+    analysis replaces the reference's runtime annotation collection,
+    V/Unevaluated.pm:41-144), the map-keyword predicates awaiting the
+    node's one fused map pass (see _map_props), the property names and
+    patterns claimed at this level, and the positional prefix length."""
+
+    def __init__(self, c: "ColumnCompiler", schema: dict, t: Target,
+                 kloc: str, base: str, abs_ptr: str):
+        self.c, self.schema, self.t = c, schema, t
+        self.kloc, self.base, self.abs_ptr = kloc, base, abs_ptr
+        self.jt = t.json_type()
+        self.is_map = isinstance(t.dtype, T.MapType)
+        # applicator annotations (evaluated names) are recorded on objects
+        self.annotating = (c.options.collect_annotations and t.annotatable
+                           and self.jt == "object")
+        self.oks: list[Column] = []
+        self.viols: list[Column] = []
+        self.cov_names: list = []
+        self.cov_items: list = []
+        self.map_fuse: list = []
+        self.matched_names: set[str] = set()
+        self.pattern_res: list[str] = []
+        self.n_prefix = 0
+
+    def applies(self, types: tuple[str, ...] | None) -> bool:
+        """Does a keyword asserting on `types` apply to this node's value?
+        integer ⊂ number; under stringy_numbers the number keywords also
+        compare number-looking strings (U.pm:255-261)."""
+        if types is None or self.jt in types:
+            return True
+        return "number" in types and (self.jt == "integer" or (
+            self.jt == "string" and self.c.options.stringy_numbers))
+
+    def add(self, c: Compiled) -> None:
+        self.oks.append(c.ok)
+        self.viols.extend(c.viols)
+
+    def adopt(self, c: Compiled, guard: Column | None) -> None:
+        """Propagate a same-instance child's coverage annotations,
+        conditioned on the child actually succeeding (annotations from
+        failed subschemas are discarded — U.pm:823-829 semantics)."""
+        for g, payload in c.cov_names:
+            gg = guard if g is None else (g if guard is None else guard & g)
+            self.cov_names.append((gg, payload))
+        for g, payload in c.cov_items:
+            gg = guard if g is None else (g if guard is None else guard & g)
+            self.cov_items.append((gg, payload))
+
+    def include(self, c: Compiled) -> None:
+        """Add a same-instance child together with its coverage."""
+        self.add(c)
+        self.adopt(c, c.ok)
+
+    def ptrs(self, kw: str, suffix: str = "") -> tuple[str, str]:
+        """(keyword location, schema pointer) of `kw` at this node."""
+        k = json_pointer_escape(kw) + suffix
+        return f"{self.kloc}/{k}", f"{self.abs_ptr}/{k}"
+
+    def akloc(self, ap: str) -> str:
+        return self.c._akloc(self.base, ap)
+
+    def sub(self, kw: str, node: Any, target: Target, suffix: str = "",
+            guard: Column | bool | None = None) -> Compiled:
+        """Compile subschema `node` at <kloc>/<kw><suffix>.  With `guard`,
+        the annotations it collects are kept only when the guard holds
+        (True: when the child itself succeeds) — annotations of failed or
+        untaken subschemas are discarded (U.pm:823-829)."""
+        mark = len(self.c.ctx.annotations)
+        kp, ap = self.ptrs(kw, suffix)
+        child = self.c._node(node, target, kp, self.base, ap)
+        if guard is not None:
+            self.c._gate_annotations(mark, child.ok if guard is True else guard)
+        return child
+
+    def offending(self) -> Column:
+        t = self.t
+        return t.offending_json() if not t.is_root else F.lit(None).cast("string")
+
+    def E(self, kw: str, ok: Column, error: Column | str,
+          null_vacuous: bool = True) -> Compiled:
+        """A keyword assertion on this node's value, with its violation."""
+        t = self.t
+        if t.null_is_value and null_vacuous:
+            # JSON-null value: type-gated keywords are vacuously true
+            # (the reference skips keywords whose type doesn't match);
+            # keeps the predicate total — no three-valued NULL leaks
+            ok = F.when(t.value_col().isNull(), F.lit(True)).otherwise(ok)
+        ok = F.when(t.present, ok).otherwise(F.lit(True))
+        kp, ap = self.ptrs(kw)
+        return Compiled(ok=ok, viols=[_viol(ok, t.ptr, kp, self.akloc(ap), kw,
+                                            error, self.offending())])
+
+    def summary(self, ok: Column, kw: str, error: Column | str) -> Column:
+        """The keyword's own rollup violation row (no offending value)."""
+        kp, ap = self.ptrs(kw)
+        return _viol(ok, self.t.ptr, kp, self.akloc(ap), kw, error,
+                     F.lit(None).cast("string"))
+
+    def ref_exception(self, kw: str, msg: str) -> Compiled:
+        """Lazy-resolution parity (Modern.pm evaluates $ref on reach;
+        pyeval raises EvalError at eval time): a reference that fails
+        to RESOLVE compiles to a statically-false node instead of
+        aborting compilation, so rows that never consult this branch
+        (if:false/then, untaken anyOf arms) stay valid — the corpus's
+        badRef "good references in schemas" contract.  Granularity
+        deviation vs the reference (whole-evaluation abort when
+        reached) is recorded in docs/DEVIATIONS.md."""
+        self.c.ctx.static_exceptions.append(f"{self.kloc}/{kw}: {msg}")
+        ok = ~self.t.present
+        kp, ap = self.ptrs(kw)
+        return Compiled(ok=ok, viols=[_viol(
+            ok, self.t.ptr, kp, self.akloc(ap), kw, f"EXCEPTION: {msg}",
+            self.offending())])
+
+    def annotate(self, kw: str, value: Any = None,
+                 value_col: Column | None = None) -> None:
+        """Record one annotation entry.  Static values are JSON-encoded at
+        compile time; `value_col` carries a row-dependent value as a
+        JSON-text Column (the applicator annotations — evaluated property
+        names — are per-row in a MapType/struct world)."""
+        kp, ap = self.ptrs(kw)
+        self.c.ctx.annotations.append({
+            "ptr": self.t.ptr, "kloc": kp, "akloc": self.akloc(ap),
+            "keyword": kw, "value": value, "value_col": value_col,
+            "guard": None})
+
+    def annotate_names(self, kw: str, pairs: list) -> None:
+        """Applicator annotation whose value is the list of property names
+        the keyword evaluated on this row (V/Applicator.pm:448,487,523 —
+        properties/patternProperties/additionalProperties push the names
+        seen; name order is sorted here where the reference's Perl hash
+        iteration is unspecified).  `pairs` = (name, presence Column)."""
+        if pairs:
+            arr = F.array_sort(F.array_compact(F.array(
+                *[F.when(p, F.lit(n)) for n, p in pairs])))
+        else:
+            arr = F.array().cast("array<string>")
+        self.annotate(kw, value_col=F.to_json(arr))
+
+    def annotate_keys(self, kw: str, key_sel) -> None:
+        """Same as annotate_names for an open-properties MapType column:
+        the evaluated names are the runtime keys `key_sel` selects."""
+        keys = F.array_sort(F.filter(F.map_keys(self.t.value_col()), key_sel))
+        self.annotate(kw, value_col=F.to_json(keys))
+
+    def cover_matched_names(self) -> None:
+        """Coverage of the names this level's properties/patternProperties
+        claimed (statically known on typed rows/structs — the schema fixes
+        the name set)."""
+        if self.matched_names:
+            self.cov_names.append((None, frozenset(self.matched_names)))
+
+    def alone(self, handler, kw: str, value: Any) -> Compiled:
+        """Run one keyword handler as a node of its own: its conjuncts
+        fold into one, and its coverage stays with it."""
+        part = _Node(self.c, self.schema, self.t, self.kloc, self.base,
+                     self.abs_ptr)
+        handler(part, kw, value)
+        return part.result()
+
+    def result(self) -> Compiled:
+        t = self.t
+        if self.map_fuse:
+            # ONE interpreted map_entries pass for ALL this node's map
+            # keywords: ∀e.(p₁∧…∧pₙ) ≡ (∀e.p₁)∧…∧(∀e.pₙ), and SQL
+            # three-valued logic agrees (false∧null=false; all-true with a
+            # null gives null, coalesced true on both shapes)
+            fns = tuple(self.map_fuse)
+
+            def fused(e: Column) -> Column:
+                # single-param signature: Spark HOFs dispatch on arity
+                c = fns[0](e)
+                for fn in fns[1:]:
+                    c = c & fn(e)
+                return c
+
+            self.oks.append(F.when(t.present, F.coalesce(
+                F.forall(F.map_entries(t.value_col()), fused), F.lit(True)))
+                .otherwise(F.lit(True)))
+        return Compiled(ok=_conj(self.oks), viols=self.viols,
+                        cov_names=self.cov_names, cov_items=self.cov_items)
+
+
+# --- keyword handlers: handler(node, keyword, value) ------------------------
+# Core ----------------------------------------------------------------------
+
+
+def _kw_annotation(n: _Node, kw: str, v: Any) -> None:
+    """MetaData annotations (V/MetaData.pm:42-77), recorded with per-entry
+    guards; basic_output reports them for VALID rows, where every
+    unconditional-path subschema succeeded — so only branch applicators
+    (anyOf/oneOf/not/if, dependentSchemas presence) need runtime guards."""
+    if n.c.options.collect_annotations and n.t.annotatable:
+        n.annotate(kw, value=v)
+
+
+def _kw_ref(n: _Node, kw: str, ref: str) -> Compiled | None:
+    try:
+        res = n.c.registry.resolve(ref, n.base)
+    except SpecError as exc:
+        child = n.ref_exception(kw, str(exc))
+    else:
+        child = n.c._node(
+            res.node, n.t, f"{n.kloc}/$ref", res.base_uri,
+            res.pointer if res.canonical_uri == res.base_uri else "")
+    n.include(child)
+    if n.c.dialect in ("4", "6", "7"):
+        # drafts 4-7: $ref MASKS every sibling keyword — the ref target
+        # is the whole schema (V/Core.pm draft≤7 dispatch)
+        return Compiled(ok=child.ok, viols=n.viols,
+                        cov_names=n.cov_names, cov_items=n.cov_items)
     return None
+
+
+def _kw_dynamic_ref(n: _Node, kw: str, ref: str) -> None:
+    """Full dynamic-scope semantics (V/Core.pm:327-361): resolve like $ref
+    first; if the landing spot carries the matching $dynamicAnchor,
+    re-resolve through the dynamic scope with the OUTERMOST declaration
+    winning.  The compiler's inlining chain is the runtime dynamic scope,
+    so this is exact."""
+    try:
+        res = n.c.registry.resolve(ref, n.base)
+    except SpecError as exc:
+        child = n.ref_exception(kw, str(exc))
+    else:
+        _, frag = urldefrag(urljoin(n.base, ref))
+        if frag and not frag.startswith("/") and isinstance(res.node, dict) \
+                and res.node.get("$dynamicAnchor") == frag:
+            dyn = n.c.registry.resolve_dynamic(frag, n.c.ctx.dynamic_scope)
+            if dyn is not None:
+                res = dyn
+        child = n.c._node(res.node, n.t, f"{n.kloc}/$dynamicRef", res.base_uri, "")
+    n.include(child)
+
+
+def _kw_recursive_ref(n: _Node, kw: str, ref: str) -> None:
+    """2019-09 predecessor (V/Core.pm:262-279): resolve statically like
+    $ref (ANY URI value — the recursive-dynamic corpus points one at a
+    boolean schema); ONLY if the landing spot declares
+    $recursiveAnchor:true does the ref re-resolve against the OUTERMOST
+    in-scope resource declaring a recursive anchor."""
+    reg = n.c.registry
+    try:
+        res = reg.resolve(ref, n.base)
+        if isinstance(res.node, dict) and res.node.get("$recursiveAnchor") is True:
+            for outer in n.c.ctx.dynamic_scope:
+                if outer in reg.recursive_anchors:
+                    res = reg.resolve(ref, outer)
+                    break
+    except SpecError as exc:
+        child = n.ref_exception(kw, str(exc))
+    else:
+        child = n.c._node(res.node, n.t, f"{n.kloc}/$recursiveRef", res.base_uri, "")
+    n.include(child)
+
+
+# Validation ----------------------------------------------------------------
+
+
+def _nonnull_type_ok(wants: list, t: Target) -> Column:
+    """Runtime type check for a definitely-non-null value (the static
+    dtype decides, with the integer⊂number / 2.0-is-integer cases)."""
+    jt = t.json_type()
+    if jt in wants or (jt == "integer" and "number" in wants):
+        return F.lit(True)
+    if jt == "number" and "integer" in wants:
+        v = t.value_col()
+        return v == F.floor(v).cast(t.dtype)
+    return F.lit(False)
+
+
+def _kw_type(n: _Node, kw: str, want: Any) -> None:
+    wants = want if isinstance(want, list) else [want]
+    if not wants:
+        raise SpecError("type array is empty")
+    for w in wants:
+        if w not in ("null", "boolean", "object", "array", "string", "number", "integer"):
+            raise SpecError(f'unrecognized type "{w}"')
+    t, jt = n.t, n.jt
+    if t.null_is_value and "null" not in wants:
+        # a JSON-null element has runtime type "null" even though the
+        # static element type matches — the check cannot constant-fold
+        ok = F.when(t.value_col().isNull(), F.lit(False)) \
+            .otherwise(_nonnull_type_ok(wants, t))
+        n.add(n.E(kw, ok, f"got null or {jt}, not {', '.join(wants)}",
+                  null_vacuous=False))
+    elif jt in wants or (jt == "integer" and "number" in wants):
+        n.add(Compiled(ok=F.lit(True)))
+    elif jt == "number" and "integer" in wants:
+        if n.c.dialect == "4":
+            # draft4 legacy_ints (U.pm:141-147): an integer is "a JSON
+            # number without a fraction part" AS WRITTEN — a
+            # fractional-typed column is never an integer, even at 2.0
+            n.add(n.E(kw, F.lit(False), "got number, not integer"))
+        else:
+            # ≥draft6: 2.0 is an integer (Utilities.pm:152-156); holds for
+            # Double/Float and Decimal alike (floor round-trips)
+            v = t.value_col()
+            n.add(n.E(kw, v == F.floor(v).cast(t.dtype), "got number, not integer"))
+    else:
+        plural = "one of " if len(wants) > 1 else ""
+        n.add(n.E(kw, F.lit(False), f"got {jt}, not {plural}{', '.join(wants)}"))
+
+
+def _kw_enum(n: _Node, kw: str, values: list) -> None:
+    t = n.t
+    if t.is_root:
+        return
+    ok = F.lit(False)
+    for v in values:
+        c = _const_eq(t.value_col(), v, t.dtype)
+        if c is not None:
+            ok = ok | F.coalesce(c, F.lit(False))
+    if t.null_is_value:
+        # type-strict equality: JSON null matches only a null member
+        ok = F.when(t.value_col().isNull(),
+                    F.lit(any(v is None for v in values))).otherwise(ok)
+    n.add(n.E(kw, ok, "value does not match", null_vacuous=False))
+
+
+def _kw_const(n: _Node, kw: str, value: Any) -> None:
+    t = n.t
+    if t.is_root:
+        return
+    c = _const_eq(t.value_col(), value, t.dtype)
+    ok = F.lit(False) if c is None else F.coalesce(c, F.lit(False))
+    if t.null_is_value:
+        ok = F.when(t.value_col().isNull(), F.lit(value is None)).otherwise(ok)
+    n.add(n.E(kw, ok, "value does not match", null_vacuous=False))
+
+
+def _kw_multiple_of(n: _Node, kw: str, m: Any) -> None:
+    if not isinstance(m, (int, float)) or isinstance(m, bool) or m <= 0:
+        raise SpecError("multipleOf value is not a positive number")
+    dec = "decimal(38,12)"
+    v = n.t.value_col()
+    if n.jt == "string":
+        # stringy_numbers: a non-numeric string stays vacuously valid
+        v = v.cast("string").try_cast(dec)
+        ok = F.when(v.isNull(), F.lit(True)).otherwise(
+            F.pmod(v, _num_lit(m).cast(dec)) == F.lit(0).cast(dec))
+    elif isinstance(n.t.dtype, _INTEGRAL_TYPES) and float(m).is_integer():
+        ok = (v % _num_lit(int(m))) == 0
+    else:
+        # bignum-exact float modulo (V/Validation.pm:119-123) →
+        # fixed-point decimal pmod; exact within 38 digits
+        ok = F.pmod(v.cast(dec), _num_lit(m).cast(dec)) == F.lit(0).cast(dec)
+    n.add(n.E(kw, ok, f"value is not a multiple of {_num_str(m)}"))
+
+
+_RANGE_OPS = {
+    "maximum": (operator.le, "value is greater than %s"),
+    "exclusiveMaximum": (operator.lt, "value is greater than or equal to %s"),
+    "minimum": (operator.ge, "value is less than %s"),
+    "exclusiveMinimum": (operator.gt, "value is less than or equal to %s"),
+}
+# draft4 couples exclusiveMaximum/Minimum as BOOLEANS modifying
+# maximum/minimum (V/Validation.pm:129-143)
+_D4_EXCLUSIVE = {"maximum": "exclusiveMaximum", "minimum": "exclusiveMinimum"}
+
+
+def _kw_range(n: _Node, kw: str, bound: Any) -> None:
+    if isinstance(bound, bool):
+        return                  # draft4 boolean form — folded into the base keyword
+    op, msg = _RANGE_OPS[kw]
+    if n.c.dialect == "4" and n.schema.get(_D4_EXCLUSIVE.get(kw)) is True:
+        op, msg = _RANGE_OPS[_D4_EXCLUSIVE[kw]]
+    v = n.t.value_col()
+    if n.jt == "string":
+        # stringy_numbers: number-looking strings compare numerically
+        # (V/Validation.pm:74-75); a non-numeric string stays vacuously valid
+        v = v.cast("string").try_cast("double")
+    ok = op(v, _num_lit(bound))
+    if n.jt == "string":
+        ok = F.when(v.isNull(), F.lit(True)).otherwise(ok)
+    n.add(n.E(kw, ok, msg % _num_str(bound)))
+
+
+def _limit(n: _Node, kw: str, size: Column, lim: int, msg: str) -> None:
+    n.add(n.E(kw, size <= lim if kw.startswith("max") else size >= lim, msg))
+
+
+def _kw_length(n: _Node, kw: str, lim: int) -> None:
+    _limit(n, kw, F.length(n.t.value_col().cast("string")), lim,
+           f"length is {'greater' if kw == 'maxLength' else 'less'} than {lim}")
+
+
+def _kw_item_count(n: _Node, kw: str, lim: int) -> None:
+    _limit(n, kw, F.size(n.t.value_col()), lim,
+           f"array has {'more' if kw == 'maxItems' else 'fewer'} than {lim} "
+           f"item{'s' if lim != 1 else ''}")
+
+
+def _kw_property_count(n: _Node, kw: str, lim: int) -> None:
+    _limit(n, kw, _prop_count(n.t), lim,
+           f"object has {'more' if kw == 'maxProperties' else 'fewer'} than "
+           f"{lim} propert{'ies' if lim != 1 else 'y'}")
+
+
+def _kw_pattern(n: _Node, kw: str, pattern: str) -> None:
+    # partial match, like the reference's =~ (V/Validation.pm:217-228);
+    # Java regex dialect — same deviation class the reference accepts
+    # vs ECMA-262 (t/zzz-acceptance-draft2020-12.t:54-60)
+    n.add(n.E(kw, n.t.value_col().cast("string").rlike(pattern),
+              "pattern does not match"))
+
+
+def _kw_unique_items(n: _Node, kw: str, unique: bool) -> None:
+    if unique is True:
+        v = n.t.value_col()
+        n.add(n.E(kw, F.size(F.array_distinct(v)) == F.size(v), "items are not unique"))
+
+
+def _kw_required(n: _Node, kw: str, names: list[str]) -> None:
+    t = n.t
+    missing_flags = []
+    ok = F.lit(True)
+    for name in names:
+        pt = t.get_property(name)
+        if pt is None and n.is_map:
+            present = F.map_contains_key(t.value_col(), F.lit(name))
+        else:
+            present = pt.present if pt is not None else F.lit(False)
+        ok = ok & present
+        missing_flags.append(F.when(~present, F.lit(name)))
+    missing = F.array_compact(F.array(*missing_flags))
+    msg = F.concat(
+        F.lit("object is missing propert"),
+        F.when(F.size(missing) > 1, F.lit("ies: ")).otherwise(F.lit("y: ")),
+        F.concat_ws(", ", missing),
+    )
+    n.add(n.E(kw, ok, msg))
+
+
+def _kw_dependent_required(n: _Node, kw: str, deps: dict) -> None:
+    t = n.t
+    for prop, names in deps.items():
+        pt = t.get_property(prop)
+        if pt is None:
+            continue
+        dep_ok = F.lit(True)
+        for d in names:
+            dt_ = t.get_property(d)
+            dep_ok = dep_ok & (dt_.present if dt_ is not None else F.lit(False))
+        n.add(n.E(kw, F.when(pt.present, dep_ok).otherwise(F.lit(True)),
+                  "not all dependencies are satisfied"))
+
+
+# Content / Format ------------------------------------------------------------
+
+
+def _kw_content(n: _Node, kw: str, _value: Any) -> None:
+    """contentEncoding / contentMediaType / contentSchema assertions, one
+    pass at whichever of the first two comes first (assertion mode only;
+    annotation-only by default per 2020-12 — Modern.pm:87-93).
+
+    The reference decodes per row through its media-type registry
+    (V/Content.pm:42-114, decoders U.pm:481-743); here each stage is a
+    whole-column expression: base64 validity by regex+shape, JSON
+    well-formedness via try_parse_json (NULL on bad input), and
+    contentSchema by deriving a Spark struct schema from the subschema's
+    type annotations and recursing on the from_json result."""
+    schema, t = n.schema, n.t
+    if not n.c.options.validate_content_schemas or (
+            kw == "contentMediaType" and "contentEncoding" in schema):
+        return
+    v = t.value_col().cast("string")
+    out = []
+    oks = []
+    decoded = v
+    enc = schema.get("contentEncoding")
+    if enc is not None:
+        if enc == "base64":
+            ok_enc = v.rlike(r"^[A-Za-z0-9+/\s]*={0,2}\s*$") & \
+                (F.length(F.regexp_replace(v, r"\s", "")) % 4 == 0)
+            decoded = F.unbase64(F.regexp_replace(v, r"\s", "")).cast("string")
+        elif enc == "base64url":
+            # RFC4648 §5 urlsafe alphabet, padding optional
+            # (Modern.pm:1240-1250): translate -_ → +/ and re-pad to a
+            # multiple of 4 before the JVM decoder
+            s = F.regexp_replace(v, r"\s", "")
+            ok_enc = s.rlike(r"^[A-Za-z0-9_\-]*={0,2}$") & \
+                (F.length(F.regexp_replace(s, "=", "")) % 4 != 1)
+            tr = F.translate(F.regexp_replace(s, "=", ""), "-_", "+/")
+            padded = F.concat(
+                tr,
+                F.when(F.length(tr) % 4 == 2, F.lit("=="))
+                 .when(F.length(tr) % 4 == 3, F.lit("="))
+                 .otherwise(F.lit("")),
+            )
+            decoded = F.unbase64(padded).cast("string")
+        else:
+            # identity, or an unknown encoding: annotation only (the
+            # reference aborts only in strict FormatAssertion-style vocab;
+            # keep lenient)
+            ok_enc = F.lit(True)
+        c = n.E("contentEncoding", ok_enc, f"could not decode {enc} string")
+        out.extend(c.viols)
+        oks.append(c.ok)
+        decoded = F.when(c.ok, decoded)
+    mt = schema.get("contentMediaType")
+    # resolve through the media-type registry: parameter stripping
+    # ("text/plain;charset=utf-8" matches the "text/*" row), wildcard
+    # lookup order exact > suffix > type/* > */*, and custom
+    # register_media_type entries (Utilities.pm:695-742).  Resolution
+    # happens ONCE at compile time — contentMediaType is a schema
+    # literal — so the per-row work stays whole-column expressions.
+    entry = get_media_type(mt) if mt is not None else None
+    mtl = entry.handler if entry is not None else None
+    cs_target: Target | None = None
+    if mtl == "json":
+        parsed_ok = F.try_parse_json(decoded).isNotNull() | decoded.isNull()
+        c = n.E("contentMediaType", parsed_ok, f"could not decode string as {mt}")
+        out.extend(c.viols)
+        oks.append(c.ok)
+        if "contentSchema" in schema:
+            sub_schema = _spark_schema_from_spec(schema["contentSchema"])
+            if sub_schema is not None:
+                parsed = F.from_json(decoded, sub_schema)
+                cs_target = Target(col=parsed, dtype=sub_schema, ptr=t.ptr,
+                                   present=t.present & parsed.isNotNull())
+    elif mtl == "text":
+        # text/* registry entry (U.pm:557-569): any string decodes;
+        # contentSchema sees the decoded STRING.  The charset
+        # parameter participates in MATCHING above; Column-tier
+        # values are already UTF-8 Spark strings, so the decode
+        # itself is identity (the python tier applies charset).
+        cs_target = Target(col=decoded, dtype=T.StringType(), ptr=t.ptr,
+                           present=t.present & decoded.isNotNull())
+    elif mtl == "ndjson":
+        # every non-blank line must parse as JSON (U.pm:600-616)
+        lines = F.filter(F.split(decoded, "\n"),
+                         lambda ln: F.length(F.trim(ln)) > 0)
+        nd_ok = F.forall(lines, lambda ln: F.try_parse_json(ln).isNotNull()) \
+            | decoded.isNull()
+        c = n.E("contentMediaType", nd_ok, f"could not decode string as {mt}")
+        out.extend(c.viols)
+        oks.append(c.ok)
+    elif mtl == "form":
+        # k=v pairs joined by & (U.pm:571-598); contentSchema sees the
+        # parsed MAP — composing with the MapType object keywords
+        form_ok = decoded.rlike(r"^([^=&]*=[^=&]*(&[^=&]*=[^=&]*)*)?$") \
+            | decoded.isNull()
+        c = n.E("contentMediaType", form_ok, f"could not decode string as {mt}")
+        out.extend(c.viols)
+        oks.append(c.ok)
+        if "contentSchema" in schema:
+            parsed = F.str_to_map(decoded, F.lit("&"), F.lit("="))
+            cs_target = Target(col=parsed,
+                               dtype=T.MapType(T.StringType(), T.StringType()),
+                               ptr=t.ptr,
+                               present=t.present & c.ok & decoded.isNotNull())
+    # octet-stream (opaque bytes — anything decodes, U.pm:548-555),
+    # unmatched media types, and custom register_media_type entries that
+    # carry only a python decoder (no Column handler): annotation only —
+    # same as the reference's decoder-less registry rows
+    # (U.pm:668 "return if not $definition->{decode}")
+    if cs_target is not None and "contentSchema" in schema:
+        child = n.sub("contentSchema", schema["contentSchema"], cs_target)
+        oks.append(child.ok)
+        out.extend(child.viols)
+    n.add(Compiled(ok=_conj(oks), viols=out))
+
+
+def _kw_format_annotation(n: _Node, kw: str, fmt: Any) -> None:
+    # the format name is ALWAYS annotated when the keyword is evaluated,
+    # independent of assertion mode (FormatAnnotation.pm:47-48:
+    # A($state, $schema->{format}) before the validate_formats check)
+    if isinstance(fmt, str) and n.c.options.collect_annotations \
+            and n.t.annotatable:
+        n.annotate(kw, value=fmt)
+
+
+def _kw_format(n: _Node, kw: str, fmt: str) -> None:
+    if n.c.options.validate_formats:
+        pred = format_predicate(fmt, n.t.value_col().cast("string"))
+        if pred is not None:
+            n.add(n.E(kw, pred, f"not a valid {fmt}"))
+
+
+# Applicator: arrays ----------------------------------------------------------
+
+
+def _positional(n: _Node, kw: str, subs: list) -> None:
+    """prefixItems / array-form items: one subschema per leading position;
+    an element past the array's end is absent, not null."""
+    t = n.t
+    for i, s in enumerate(subs):
+        idx = F.lit(i)
+        present_i = t.present & (F.size(t.value_col()) > i)
+        elem = Target(col=F.get(t.value_col(), idx), dtype=t.dtype.elementType,
+                      ptr=F.concat(t.ptr, F.lit("/"), idx.cast("string")),
+                      present=present_i, null_is_value=True)
+        n.add(n.sub(kw, s, elem, suffix=f"/{i}", guard=present_i))
+    n.n_prefix = len(subs)
+    n.cov_items.append((None, n.n_prefix))
+
+
+def _items(n: _Node, kw: str, s: Any) -> Compiled:
+    """items (2020-12) / additionalItems (≤2019-09): every element after
+    the positional prefix validates against one subschema.
+
+    ok path: F.forall over the slice — stays in whole-stage codegen.
+    Violations: transform-with-index building per-element violation
+    arrays, flattened (only evaluated for rows that fail)."""
+    t, k = n.t, n.n_prefix
+    arr = t.value_col()
+    et = t.dtype.elementType
+
+    def elem_compiled(x: Column, i: Column) -> Compiled:
+        idx = i + F.lit(k)
+        return n.sub(kw, s, Target(
+            col=x, dtype=et, ptr=F.concat(t.ptr, F.lit("/"), idx.cast("string")),
+            present=F.lit(True), null_is_value=True, annotatable=False))
+
+    rest = arr if k == 0 else F.slice(arr, k + 1, F.greatest(F.size(arr) - k, F.lit(0)))
+    ok_inner = n.c._items_ok_peephole(s, t.dtype, rest)
+    if ok_inner is None:
+        ok_inner = F.forall(rest, lambda x: elem_compiled(x, F.lit(0)).ok)
+    ok = F.when(t.present, F.coalesce(ok_inner, F.lit(True))).otherwise(F.lit(True))
+    leaf = F.flatten(F.transform(rest, lambda x, i: _merge_viols(elem_compiled(x, i).viols)))
+    leaf = F.when(ok, _empty_viols()).otherwise(leaf)
+    adj = "additional " if kw == "additionalItems" else ""
+    return Compiled(ok=ok, viols=[leaf, n.summary(
+        ok, kw, f"subschema is not valid against all {adj}items")])
+
+
+def _kw_prefix_items(n: _Node, kw: str, subs: list) -> None:
+    _positional(n, kw, subs)
+    if n.c.options.collect_annotations and n.t.annotatable:
+        # largest evaluated index, or true when the whole array was
+        # covered (V/Applicator.pm:314)
+        n.annotate(kw, value_col=F.when(F.size(n.t.value_col()) <= n.n_prefix,
+                                        F.lit("true"))
+                   .otherwise(F.lit(str(n.n_prefix - 1))))
+
+
+def _kw_items(n: _Node, kw: str, items: Any) -> None:
+    if isinstance(items, list):
+        # array form (≤2019-09): positional subschemas, with
+        # `additionalItems` as the rest-schema (V/Applicator.pm:250-274);
+        # the reference rejects it in 2020-12 with this same error (:254)
+        if n.c.dialect == "2020-12":
+            raise SpecError('array form of "items" not supported in draft2020-12')
+        _positional(n, kw, items)
+        return
+    n.add(_items(n, kw, items))
+    n.cov_items.append((None, "all"))
+    if n.c.options.collect_annotations and n.t.annotatable:
+        # schema-form items always annotates true after evaluating the
+        # rest of the array (V/Applicator.pm:349)
+        n.annotate(kw, value=True)
+
+
+def _kw_additional_items(n: _Node, kw: str, s: Any) -> None:
+    if isinstance(n.schema.get("items"), list):   # else nothing to extend
+        n.add(_items(n, kw, s))
+        n.cov_items.append((None, "all"))
+
+
+def _kw_contains(n: _Node, kw: str, s: Any) -> None:
+    """contains, with min/maxContains — which are evaluated INSIDE the
+    contains keyword and do nothing without it (V/Applicator.pm:357-405)."""
+    t = n.t
+    et = t.dtype.elementType
+
+    def elem_ok(x: Column) -> Column:
+        return n.sub(kw, s, Target(col=x, dtype=et, ptr=t.ptr, present=F.lit(True),
+                                   null_is_value=True, annotatable=False)).ok
+
+    matches = F.size(F.filter(t.value_col(), elem_ok))
+    min_c = n.schema.get("minContains", 1)
+    max_c = n.schema.get("maxContains")
+    ok = F.lit(True) if min_c == 0 else \
+        F.when(t.present, matches >= 1).otherwise(F.lit(True))
+    oks = [ok]
+    viols = [n.summary(ok, kw, "subschema is not valid against any item")]
+    # matching ELEMENTS count as evaluated for unevaluatedItems (the
+    # reference's matched-index annotation, V/Applicator.pm:360-381 +
+    # V/Unevaluated.pm:41-98), guarded on the contains keyword succeeding
+    n.cov_items.append((ok, ("epred", s)))
+    if max_c is not None:
+        ok = F.when(t.present, matches <= max_c).otherwise(F.lit(True))
+        oks.append(ok)
+        viols.append(n.summary(ok, "maxContains", f"array contains more than "
+                               f"{max_c} matching item{'s' if max_c != 1 else ''}"))
+    if min_c > 1:
+        ok = F.when(t.present, matches >= min_c).otherwise(F.lit(True))
+        oks.append(ok)
+        viols.append(n.summary(ok, "minContains", f"array contains fewer than "
+                               f"{min_c} matching item{'s' if min_c != 1 else ''}"))
+    n.add(Compiled(ok=_conj(oks), viols=viols))
+
+
+# Applicator: objects ---------------------------------------------------------
+
+
+def _map_props(n: _Node, s: Any, sel, kw: str, suffix: str, summary_msg: str,
+               emit_summary: bool = True, sel_all: bool = False) -> Column:
+    """Object keyword over a MapType(String, V) column: the subschema
+    applies to every entry whose key ``sel(key)`` selects.  Adds the
+    keyword to the node and returns its own full predicate.
+
+    Used for properties (exact key), patternProperties (key rlike
+    pattern), additionalProperties (complement of properties ∪
+    patternProperties) and unevaluatedProperties (complement of the
+    coverage set) — V/Applicator.pm:453-526, V/Unevaluated.pm:100-144.
+
+    ok-path: Spark HOFs are CodegenFallback (interpreted), so the
+    per-entry predicate is expensive per map keyword.  Two peepholes:
+
+    - ``sel_all`` (selector covers every key, e.g. additionalProperties
+      with no sibling properties/patternProperties) + range-only value
+      schema → ``array_min/array_max(map_values(col))`` collection
+      expressions, fully codegen'd (precedent: _items_ok_peephole).
+    - otherwise the per-entry predicate joins the node's fuse list and
+      the node emits a SINGLE forall whose body conjoins every map
+      keyword's predicate — ∀e.(p∧q) ≡ (∀e.p)∧(∀e.q), measured ~3.5× on
+      the ok path with 3 map keywords.  The keyword's OWN forall is then
+      used only inside the violation columns (evaluated on failing rows
+      post-filter) and stays out of the node's ok conjunction.
+
+    Violation detail (per-entry child viols at /<escaped key>) is
+    computed only for rows that already failed."""
+    t = n.t
+    vt = t.dtype.valueType
+    entries = F.map_entries(t.value_col())
+
+    def ent_target(e: Column) -> Target:
+        return Target(col=e["value"], dtype=vt,
+                      ptr=F.concat(t.ptr, F.lit("/"), _ptr_escape_col(e["key"])),
+                      present=F.lit(True), null_is_value=True,
+                      annotatable=False)
+
+    def ent_ok(e: Column) -> Column:
+        return ~sel(e["key"]) | n.sub(kw, s, ent_target(e), suffix).ok
+
+    ok_inner = None
+    if sel_all:
+        ok_inner = n.c._items_ok_peephole(
+            s, T.ArrayType(vt, t.dtype.valueContainsNull),
+            F.map_values(t.value_col()))
+    fused = ok_inner is None
+    if fused:
+        n.map_fuse.append(ent_ok)
+        ok_inner = F.forall(entries, ent_ok)
+    ok = F.when(t.present, F.coalesce(ok_inner, F.lit(True))) \
+        .otherwise(F.lit(True))
+
+    def ent_viols(e: Column) -> Column:
+        c = n.sub(kw, s, ent_target(e), suffix)
+        return F.when(sel(e["key"]), _merge_viols(c.viols)).otherwise(_empty_viols())
+
+    viols = [F.when(ok, _empty_viols()).otherwise(F.flatten(F.transform(entries, ent_viols)))]
+    if emit_summary:
+        viols.append(n.summary(ok, kw, summary_msg))
+    n.add(Compiled(ok=F.lit(True) if fused else ok, viols=viols))
+    return ok
+
+
+def _kw_properties(n: _Node, kw: str, props: dict) -> None:
+    t = n.t
+    prop_present: list = []
+    for name, s in props.items():
+        pt = t.get_property(name)
+        n.matched_names.add(name)
+        suffix = f"/{json_pointer_escape(name)}"
+        if pt is None:
+            if not n.is_map:
+                continue
+            if not n.annotating:
+                # join the node's single fused map_entries pass (sel:
+                # exact key) instead of an element_at + map_contains_key
+                # pair: with a DERIVED map column every extra reference
+                # re-builds the map after filter pushdown inlines it — the
+                # fused plan references the column once
+                _map_props(n, s, (lambda k, _n=name: k == _n), kw, suffix,
+                           "not all properties are valid", emit_summary=False)
+                continue
+            pt = _map_value_target(t, name)
+        prop_present.append((name, pt.present))
+        # absent property ⇒ subtree not evaluated ⇒ no annotations
+        n.add(n.sub(kw, s, pt, suffix=suffix, guard=pt.present))
+    if n.annotating:
+        # evaluated-names annotation (V/Applicator.pm:448)
+        n.annotate_names(kw, prop_present)
+    if "patternProperties" not in n.schema:      # else it adds the names
+        n.cover_matched_names()
+
+
+def _kw_pattern_properties(n: _Node, kw: str, pats: dict) -> None:
+    t = n.t
+    pat_matched: list = []
+    map_oks: list = []
+    for pat, s in pats.items():
+        n.pattern_res.append(pat)
+        suffix = f"/{json_pointer_escape(pat)}"
+        if n.is_map:
+            # open-properties map column: the subschema applies to every
+            # entry whose KEY matches at runtime (V/Applicator.pm:453-490);
+            # Java-regex dialect, same deviation class as `pattern`
+            map_oks.append(_map_props(
+                n, s, (lambda k, _p=pat: k.rlike(_p)), kw, suffix,
+                "not all properties are valid", emit_summary=False))
+            n.cov_names.append((None, ("pat", pat)))
+            continue
+        for name in t.field_names():
+            if re.search(pat, name):
+                n.matched_names.add(name)
+                pt = t.get_property(name)
+                if not any(nm == name for nm, _ in pat_matched):
+                    pat_matched.append((name, pt.present))
+                n.add(n.sub(kw, s, pt, suffix=suffix, guard=pt.present))
+    if n.annotating:
+        # matched-names annotation (V/Applicator.pm:487, uniqstr)
+        if n.is_map:
+            n.annotate_keys(kw, _match_any_key(n.pattern_res))
+        else:
+            n.annotate_names(kw, pat_matched)
+    if map_oks:
+        # ONE summary row per patternProperties keyword, however many
+        # patterns fail (Result shape parity: the reference emits a
+        # single 'not all properties are valid' rollup)
+        n.add(Compiled(ok=F.lit(True), viols=[
+            n.summary(_conj(map_oks), kw, "not all properties are valid")]))
+    n.cover_matched_names()
+
+
+def _kw_additional_properties(n: _Node, kw: str, s: Any) -> None:
+    t = n.t
+    if n.is_map:
+        names, pats = sorted(n.matched_names), list(n.pattern_res)
+        _map_props(n, s, _unmatched_key(names, pats), kw, "",
+                   "not all additional properties are valid",
+                   sel_all=not names and not pats)
+        if n.annotating:
+            n.annotate_keys(kw, _unmatched_key(names, pats))
+    else:
+        extras = [nm for nm in t.field_names() if nm not in n.matched_names
+                  and not any(re.search(p, nm) for p in n.pattern_res)]
+        for name in extras:
+            pt = t.get_property(name)
+            n.add(n.sub(kw, s, pt, guard=pt.present))
+        if n.annotating:
+            # evaluated-extras annotation (V/Applicator.pm:523)
+            n.annotate_names(kw, [(nm, t.get_property(nm).present) for nm in extras])
+    n.cov_names.append((None, "all"))
+
+
+def _kw_property_names(n: _Node, kw: str, s: Any) -> None:
+    t = n.t
+    if not n.is_map:
+        for name in t.field_names():
+            # the name is only validated when the property is PRESENT
+            # (NULL column = absent property in our data model) — gate on
+            # the property's own presence, not the object's
+            n.add(n.sub(kw, s, Target(col=F.lit(name), dtype=T.StringType(),
+                                      ptr=t.ptr, present=t.get_property(name).present)))
+        return
+    # over a MapType every KEY validates (V/Applicator.pm:528-548); the
+    # key predicate joins the node's single fused map_entries forall
+    # (see _map_props) instead of paying its own interpreted pass
+    keys = F.map_keys(t.value_col())
+
+    def name_target(k: Column) -> Target:
+        return Target(col=k, dtype=T.StringType(),
+                      ptr=F.concat(t.ptr, F.lit("/"), _ptr_escape_col(k)),
+                      present=F.lit(True), annotatable=False)
+
+    def name_ok(k: Column) -> Column:
+        return n.sub(kw, s, name_target(k)).ok
+
+    n.map_fuse.append(lambda e: name_ok(e["key"]))
+    ok = F.when(t.present, F.coalesce(F.forall(keys, name_ok), F.lit(True))) \
+        .otherwise(F.lit(True))
+    leaf = F.when(ok, _empty_viols()).otherwise(F.flatten(F.transform(
+        keys, lambda k: _merge_viols(n.sub(kw, s, name_target(k)).viols))))
+    n.add(Compiled(ok=F.lit(True), viols=[
+        leaf, n.summary(ok, kw, "not all property names are valid")]))
+
+
+def _kw_dependent_schemas(n: _Node, kw: str, deps: dict) -> None:
+    for prop, s in deps.items():
+        pt = n.t.get_property(prop)
+        if pt is None:
+            continue
+        child = n.sub(kw, s, n.t, suffix=f"/{json_pointer_escape(prop)}",
+                      guard=pt.present)
+        ok = F.when(pt.present, child.ok).otherwise(F.lit(True))
+        gated = [F.when(pt.present, v).otherwise(_empty_viols()) for v in child.viols]
+        n.add(Compiled(ok=ok, viols=gated))
+        n.adopt(child, pt.present & child.ok)
+
+
+def _kw_dependencies(n: _Node, kw: str, deps: dict) -> None:
+    """draft4-7 (V/Applicator.pm:190-245): the array form is
+    dependentRequired and the schema form dependentSchemas, each run as a
+    node of its own.  Documented deviation: violation keyword_locations
+    read /dependentRequired | /dependentSchemas, not /dependencies."""
+    arrays = {k: v for k, v in deps.items() if isinstance(v, list)}
+    schemas = {k: v for k, v in deps.items() if not isinstance(v, list)}
+    if arrays:
+        if not _string_arrays(arrays):
+            raise _shape_error("dependentRequired", "object of arrays of strings",
+                               n.kloc)
+        n.add(n.alone(_kw_dependent_required, "dependentRequired", arrays))
+    if schemas:
+        n.add(n.alone(_kw_dependent_schemas, "dependentSchemas", schemas))
+
+
+# Applicator: in place --------------------------------------------------------
+
+
+def _kw_all_of(n: _Node, kw: str, subs: list) -> None:
+    for i, s in enumerate(subs):
+        n.include(n.sub(kw, s, n.t, suffix=f"/{i}"))
+
+
+def _kw_any_of(n: _Node, kw: str, subs: list) -> None:
+    children = [n.sub(kw, s, n.t, suffix=f"/{i}", guard=True)
+                for i, s in enumerate(subs)]
+    any_ok = F.lit(False)
+    for c in children:
+        any_ok = any_ok | c.ok
+    any_ok = F.when(n.t.present, any_ok).otherwise(F.lit(True))
+    for c in children:
+        n.adopt(c, c.ok)
+    gated = [F.when(any_ok, _empty_viols()).otherwise(v) for c in children for v in c.viols]
+    gated.append(n.summary(any_ok, kw, "no subschemas are valid"))
+    n.add(Compiled(ok=any_ok, viols=gated))
+
+
+def _kw_one_of(n: _Node, kw: str, subs: list) -> None:
+    children = [n.sub(kw, s, n.t, suffix=f"/{i}", guard=True)
+                for i, s in enumerate(subs)]
+    for c in children:
+        n.adopt(c, c.ok)
+    count = sum((c.ok.cast("int") for c in children), F.lit(0))
+    ok = F.when(n.t.present, count == 1).otherwise(F.lit(True))
+    valid_ids = F.concat_ws(", ", F.array_compact(F.array(
+        *[F.when(c.ok, F.lit(str(i))) for i, c in enumerate(children)])))
+    msg = F.when(count == 0, F.lit("no subschemas are valid")).otherwise(
+        F.concat(F.lit("multiple subschemas are valid: "), valid_ids))
+    gated = [F.when(count != 0, _empty_viols()).otherwise(v) for c in children for v in c.viols]
+    gated.append(n.summary(ok, kw, msg))
+    n.add(Compiled(ok=ok, viols=gated))
+
+
+def _kw_not(n: _Node, kw: str, s: Any) -> None:
+    child = n.sub(kw, s, n.t, guard=F.lit(False))
+    ok = F.when(n.t.present, ~child.ok).otherwise(F.lit(True))
+    # inner errors are discarded (V/Applicator.pm:133-145)
+    n.add(Compiled(ok=ok, viols=[n.summary(ok, kw, "subschema is valid")]))
+
+
+def _kw_if(n: _Node, kw: str, s: Any) -> None:
+    t, schema = n.t, n.schema
+    if_c = n.sub(kw, s, t, guard=True)
+    then_c = n.sub("then", schema["then"], t, guard=if_c.ok) \
+        if "then" in schema else Compiled(ok=F.lit(True))
+    else_c = n.sub("else", schema["else"], t, guard=~F.coalesce(if_c.ok, F.lit(False))) \
+        if "else" in schema else Compiled(ok=F.lit(True))
+    ok = F.when(~t.present, F.lit(True)).when(if_c.ok, then_c.ok).otherwise(else_c.ok)
+    n.adopt(if_c, if_c.ok)
+    n.adopt(then_c, if_c.ok & then_c.ok)
+    n.adopt(else_c, ~if_c.ok & else_c.ok)
+    gated = [F.when(if_c.ok, v).otherwise(_empty_viols()) for v in then_c.viols]
+    gated += [F.when(if_c.ok, _empty_viols()).otherwise(v) for v in else_c.viols]
+    gated = [F.when(t.present, v).otherwise(_empty_viols()) for v in gated]
+    n.add(Compiled(ok=ok, viols=gated))
+
+
+# Unevaluated -----------------------------------------------------------------
+# Evaluated after all coverage contributions are known — the reference
+# enforces the same ordering (V/Applicator.pm:37-45).  Static coverage
+# analysis with when()-guarded conditional branches replaces runtime
+# annotation collection (V/Unevaluated.pm:41-144).
+
+
+def _kw_unevaluated_properties(n: _Node, kw: str, s: Any) -> None:
+    t = n.t
+    if n.is_map:
+        # runtime coverage over map entries: a key is covered when a
+        # successful in-scope keyword claimed it — statically for name
+        # sets, by regex for patternProperties, guarded for conditional
+        # branches (V/Unevaluated.pm:100-144)
+        if not any(g is None and p == "all" for g, p in n.cov_names):
+            payloads = list(n.cov_names)
+
+            def uncovered(k: Column) -> Column:
+                cov = F.lit(False)
+                for g, p in payloads:
+                    if p == "all":
+                        c = F.lit(True)
+                    elif isinstance(p, tuple) and p[0] == "pat":
+                        c = k.rlike(p[1])
+                    elif p:
+                        c = k.isin(sorted(p))
+                    else:
+                        c = F.lit(False)
+                    if g is not None:
+                        c = F.coalesce(g, F.lit(False)) & c
+                    cov = cov | c
+                return ~cov
+
+            _map_props(n, s, uncovered, kw, "",
+                       "not all additional properties are valid")
+    else:
+        for name in t.field_names():
+            if any(g is None and _name_covered(name, p) for g, p in n.cov_names):
+                continue            # statically covered
+            covered = F.lit(False)
+            for g, p in n.cov_names:
+                if g is not None and _name_covered(name, p):
+                    covered = covered | F.coalesce(g, F.lit(False))
+            child = n.sub(kw, s, t.get_property(name))
+            n.add(Compiled(
+                ok=F.when(covered, F.lit(True)).otherwise(child.ok),
+                viols=[F.when(covered, _empty_viols()).otherwise(v)
+                       for v in child.viols],
+            ))
+    n.cov_names.append((None, "all"))
+
+
+def _kw_unevaluated_items(n: _Node, kw: str, s: Any) -> None:
+    t, cov = n.t, n.cov_items
+    if not any(g is None and p == "all" for g, p in cov):
+        all_cov = F.lit(False)
+        for g, p in cov:
+            if p == "all" and g is not None:
+                all_cov = all_cov | F.coalesce(g, F.lit(False))
+        static_prefix = max((p for g, p in cov
+                             if g is None and isinstance(p, int)), default=0)
+        n_cov = F.lit(static_prefix)
+        for g, p in cov:
+            if g is not None and isinstance(p, int):
+                n_cov = F.greatest(n_cov, F.when(F.coalesce(g, F.lit(False)),
+                                                 F.lit(p)).otherwise(F.lit(0)))
+        # element-predicate coverage: contains' matched elements count as
+        # evaluated (reference matched-index annotations)
+        epreds = [(g, p[1]) for g, p in cov if isinstance(p, tuple) and p[0] == "epred"]
+        arr = t.value_col()
+        et = t.dtype.elementType
+
+        def elem(x: Column) -> Target:
+            return Target(col=x, dtype=et, ptr=t.ptr, present=F.lit(True),
+                          null_is_value=True, annotatable=False)
+
+        if not epreds:
+            rest = F.slice(arr, n_cov + 1, F.greatest(F.size(arr) - n_cov, F.lit(0)))
+            ok_inner = n.c._items_ok_peephole(s, t.dtype, rest)
+            if ok_inner is None:
+                ok_inner = F.forall(rest, lambda x: n.sub(kw, s, elem(x)).ok)
+        else:
+            def elem_ok(x: Column, i: Column) -> Column:
+                covered = i < n_cov
+                for g, es in epreds:
+                    m = n.sub("contains", es, elem(x)).ok
+                    covered = covered | (
+                        m if g is None else F.coalesce(g, F.lit(False)) & m)
+                return covered | n.sub(kw, s, elem(x)).ok
+            ok_inner = F.forall(F.transform(arr, elem_ok), lambda b: b)
+        ok = F.when(~t.present | all_cov, F.lit(True)) \
+            .otherwise(F.coalesce(ok_inner, F.lit(True)))
+        n.add(Compiled(ok=ok, viols=[n.summary(
+            ok, kw, "subschema is not valid against all additional items")]))
+    cov.append((None, "all"))
+
+
+# Extensions ------------------------------------------------------------------
+
+
+def _kw_set_check(n: _Node, kw: str, value: Any) -> None:
+    """x-* keywords: cross-row checks lifted out of the row-local plan
+    (the pipeline runs them)."""
+    n.c.ctx.set_checks.append(SetCheck(
+        kind=kw[2:], keyword_location=f"{n.kloc}/{kw}", params={"value": value}))
+
+
+def _kw_custom(ks: KeywordSpec, n: _Node, kw: str, value: Any) -> None:
+    """A registered custom-vocabulary keyword (add_vocabulary seam,
+    Modern.pm:940-956), wrapped with the same presence gating and
+    violation bookkeeping as the built-in keywords."""
+    if ks.traverse is not None:
+        try:
+            ks.traverse(value)
+        except ValueError as exc:
+            raise SpecError(f"{kw} {exc} (at {n.kloc or '/'})") from exc
+    if ks.types is not None and not (
+            n.jt in ks.types or (n.jt == "integer" and "number" in ks.types)):
+        return
+    if ks.compile is None or n.t.is_root:
+        return
+    pred = ks.compile(value, n.t.value_col(), n.jt)
+    if pred is not None:
+        n.add(n.E(kw, F.coalesce(pred, F.lit(False)), ks.error))
+
+
+# --- the keyword table -----------------------------------------------------
+
+
+class Keyword(NamedTuple):
+    """One row of the keyword table — the reference's per-vocabulary
+    ``_eval_keyword_*`` subs (V/*.pm).  ``types``: the JSON types the
+    keyword asserts on; on other types it is vacuously true (the
+    ``return 1 if not is_type(...)`` guards in V/Validation.pm); None =
+    every type.  ``dialects``: the drafts that define it (None = all);
+    elsewhere it is an unknown keyword and ignored (the unknownKeyword
+    corpus).  ``handler(node, keyword, value)`` compiles it into the
+    node; None = known, but evaluated by another row (``then`` by ``if``)
+    or never asserting (``$comment``).  A handler that returns a
+    Compiled ends the node: the draft 4-7 ``$ref``."""
+
+    name: str
+    types: tuple[str, ...] | None = None
+    handler: Callable | None = None
+    dialects: tuple[str, ...] | None = None
+
+
+_NUMBER, _STRING, _ARRAY, _OBJECT = ("number",), ("string",), ("array",), ("object",)
+_D2019 = ("2019-09", "2020-12")
+
+# Evaluation order is table order: registered custom keywords follow it,
+# and the node's fused map pass comes last (_Node.result).
+KEYWORDS: tuple[Keyword, ...] = (
+    *(Keyword(k, None, _kw_annotation) for k in (
+        "title", "description", "default", "deprecated", "readOnly",
+        "writeOnly", "examples")),
+    Keyword("$ref", None, _kw_ref),
+    Keyword("$dynamicRef", None, _kw_dynamic_ref, ("2020-12",)),
+    Keyword("$recursiveRef", None, _kw_recursive_ref, ("2019-09",)),
+    Keyword("type", None, _kw_type),
+    Keyword("enum", None, _kw_enum),
+    Keyword("const", None, _kw_const),
+    Keyword("multipleOf", _NUMBER, _kw_multiple_of),
+    *(Keyword(k, _NUMBER, _kw_range) for k in _RANGE_OPS),
+    Keyword("maxLength", _STRING, _kw_length),
+    Keyword("minLength", _STRING, _kw_length),
+    Keyword("pattern", _STRING, _kw_pattern),
+    Keyword("contentEncoding", _STRING, _kw_content),
+    Keyword("contentMediaType", _STRING, _kw_content),
+    Keyword("contentSchema"),
+    Keyword("format", None, _kw_format_annotation),
+    Keyword("format", _STRING, _kw_format),
+    Keyword("maxItems", _ARRAY, _kw_item_count),
+    Keyword("minItems", _ARRAY, _kw_item_count),
+    Keyword("uniqueItems", _ARRAY, _kw_unique_items),
+    Keyword("prefixItems", _ARRAY, _kw_prefix_items, ("2020-12",)),
+    Keyword("items", _ARRAY, _kw_items),
+    Keyword("additionalItems", _ARRAY, _kw_additional_items),
+    Keyword("contains", _ARRAY, _kw_contains),
+    Keyword("maxContains"),
+    Keyword("minContains"),
+    Keyword("required", _OBJECT, _kw_required),
+    Keyword("dependentRequired", _OBJECT, _kw_dependent_required, _D2019),
+    Keyword("dependentSchemas", _OBJECT, _kw_dependent_schemas, _D2019),
+    Keyword("dependencies", _OBJECT, _kw_dependencies, ("4", "6", "7")),
+    Keyword("maxProperties", _OBJECT, _kw_property_count),
+    Keyword("minProperties", _OBJECT, _kw_property_count),
+    Keyword("properties", _OBJECT, _kw_properties),
+    Keyword("patternProperties", _OBJECT, _kw_pattern_properties),
+    Keyword("additionalProperties", _OBJECT, _kw_additional_properties),
+    Keyword("propertyNames", _OBJECT, _kw_property_names),
+    Keyword("allOf", None, _kw_all_of),
+    Keyword("anyOf", None, _kw_any_of),
+    Keyword("oneOf", None, _kw_one_of),
+    Keyword("not", None, _kw_not),
+    Keyword("if", None, _kw_if),
+    Keyword("then"),
+    Keyword("else"),
+    Keyword("unevaluatedProperties", _OBJECT, _kw_unevaluated_properties),
+    Keyword("unevaluatedItems", _ARRAY, _kw_unevaluated_items),
+    *(Keyword(k, None, _kw_set_check) for k in ("x-unique", "x-ref", "x-drift")),
+    *(Keyword(k) for k in (
+        "$schema", "$id", "id", "$anchor", "$dynamicAnchor", "$recursiveAnchor",
+        "$vocabulary", "$defs", "definitions", "$comment")),
+)
+BUILTIN_KEYWORDS = frozenset(k.name for k in KEYWORDS)
 
 
 class ColumnCompiler:
@@ -636,8 +1781,13 @@ class ColumnCompiler:
         self.spec = spec
         self.df_schema = df_schema
         self.ctx = _Ctx(self.registry, self.options)
-        self._deps_dispatch = False
         self.fingerprint = spec_fingerprint(spec)
+        # the built-in table, then the registered custom keywords in
+        # evaluation_order
+        self.keywords = KEYWORDS + tuple(
+            Keyword(kw, None, partial(_kw_custom, ks))
+            for kw, (_voc, ks) in registered_keywords().items())
+        self.known = frozenset(k.name for k in self.keywords)
 
     def compile(self) -> "CompiledPlan":
         root_target = Target(
@@ -690,21 +1840,13 @@ class ColumnCompiler:
             # well-formed for this dialect — unresolvable or invalid
             # metaschemas abort compilation (vocabulary.json semantics,
             # shared check with the pyeval tier)
-            from json_schema_modern_spark.spec.resolver import metaschema_error
-
             _ms_err = metaschema_error(
                 self.registry, self.dialect, schema["$schema"], base)
             if _ms_err:
                 raise SpecError(_ms_err)
         if self.options.strict:
-            from json_schema_modern_spark.spec.vocabulary import (
-                registered_keywords,
-            )
-
-            custom_kws = registered_keywords()
             unknown = sorted(k for k in schema
-                             if k not in _KNOWN_KEYWORDS and not k.startswith("x-")
-                             and k not in custom_kws)
+                             if k not in self.known and not k.startswith("x-"))
             if unknown:
                 # reference strict mode (Modern.pm:817-820)
                 raise SpecError(
@@ -731,821 +1873,18 @@ class ColumnCompiler:
             self.ctx.dynamic_scope.append(base)
             scope_pushed = True
         try:
-            return self._object_schema_body(schema, t, kloc, base, abs_ptr)
+            n = _Node(self, schema, t, kloc, base, abs_ptr)
+            for k in self.keywords:
+                if k.name in schema and k.handler is not None \
+                        and n.applies(k.types) \
+                        and (k.dialects is None or self.dialect in k.dialects):
+                    done = k.handler(n, k.name, schema[k.name])
+                    if done is not None:
+                        return done
+            return n.result()
         finally:
             if scope_pushed:
                 self.ctx.dynamic_scope.pop()
-
-    def _object_schema_body(self, schema: dict, t: Target, kloc: str,
-                            base: str, abs_ptr: str) -> Compiled:
-        oks: list[Column] = []
-        viols: list[Column] = []
-        jt = t.json_type()
-
-        if self.options.collect_annotations and t.annotatable:
-            # MetaData annotations (V/MetaData.pm:42-77) recorded with
-            # per-entry guards; basic_output reports them for VALID rows,
-            # where every unconditional-path subschema succeeded — so only
-            # branch applicators (anyOf/oneOf/not/if, dependentSchemas
-            # presence) need runtime guards, applied below
-            for _akw in ("title", "description", "default", "deprecated",
-                         "readOnly", "writeOnly", "examples"):
-                if _akw in schema:
-                    self.ctx.annotations.append({
-                        "ptr": t.ptr, "kloc": f"{kloc}/{_akw}",
-                        "akloc": self._akloc(base, f"{abs_ptr}/{_akw}"),
-                        "keyword": _akw, "value": schema[_akw], "guard": None})
-
-        cov_names: list = []
-        cov_items: list = []
-        # per-entry predicates from map-object keywords on THIS node's
-        # target, fused into one forall at the end (see _map_props_kw)
-        map_fuse: list = []
-
-        def add(c: Compiled) -> None:
-            oks.append(c.ok)
-            viols.extend(c.viols)
-
-        def adopt(c: Compiled, guard: Column | None) -> None:
-            """Propagate a same-instance child's coverage annotations,
-            conditioned on the child actually succeeding (annotations from
-            failed subschemas are discarded — U.pm:823-829 semantics)."""
-            for g, payload in c.cov_names:
-                gg = guard if g is None else (g if guard is None else guard & g)
-                cov_names.append((gg, payload))
-            for g, payload in c.cov_items:
-                gg = guard if g is None else (g if guard is None else guard & g)
-                cov_items.append((gg, payload))
-
-        def sub(kw: str, node: Any, target: Target, suffix: str = "") -> Compiled:
-            kp = f"{kloc}/{json_pointer_escape(kw)}{suffix}"
-            ap = f"{abs_ptr}/{json_pointer_escape(kw)}{suffix}"
-            return self._node(node, target, kp, base, ap)
-
-        def E(kw: str, ok: Column, error: Column | str, off: Column | None = None,
-              suffix: str = "", null_vacuous: bool = True) -> Compiled:
-            kp = f"{kloc}/{json_pointer_escape(kw)}{suffix}"
-            ap = f"{abs_ptr}/{json_pointer_escape(kw)}{suffix}"
-            offending = off if off is not None else (
-                t.offending_json() if not t.is_root else F.lit(None).cast("string")
-            )
-            if t.null_is_value and null_vacuous:
-                # JSON-null value: type-gated keywords are vacuously true
-                # (the reference skips keywords whose type doesn't match);
-                # keeps the predicate total — no three-valued NULL leaks
-                ok = F.when(t.value_col().isNull(), F.lit(True)).otherwise(ok)
-            ok = F.when(t.present, ok).otherwise(F.lit(True))
-            return Compiled(ok=ok, viols=[_viol(ok, t.ptr, kp, self._akloc(base, ap), kw, error, offending)])
-
-        def applies(kw: str) -> bool:
-            want = _APPLY_TO.get(kw)
-            return want is None or jt in want or (jt == "integer" and "number" in want)
-
-        def ref_exception(kw: str, msg: str) -> Compiled:
-            """Lazy-resolution parity (Modern.pm evaluates $ref on reach;
-            pyeval raises EvalError at eval time): a reference that fails
-            to RESOLVE compiles to a statically-false node instead of
-            aborting compilation, so rows that never consult this branch
-            (if:false/then, untaken anyOf arms) stay valid — the corpus's
-            badRef "good references in schemas" contract.  Granularity
-            deviation vs the reference (whole-evaluation abort when
-            reached) is recorded in docs/DEVIATIONS.md."""
-            self.ctx.static_exceptions.append(f"{kloc}/{kw}: {msg}")
-            ok = ~t.present
-            off = t.offending_json() if not t.is_root else F.lit(None).cast("string")
-            return Compiled(ok=ok, viols=[_viol(
-                ok, t.ptr, f"{kloc}/{kw}", self._akloc(base, f"{abs_ptr}/{kw}"),
-                kw, f"EXCEPTION: {msg}", off)])
-
-        # ---- Core: $ref / $dynamicRef ------------------------------------
-        if "$ref" in schema:
-            try:
-                res = self.registry.resolve(schema["$ref"], base)
-            except SpecError as exc:
-                res, child = None, ref_exception("$ref", str(exc))
-            if res is not None:
-                child = self._node(
-                    res.node, t, kloc=f"{kloc}/$ref", base=res.base_uri,
-                    abs_ptr=res.pointer if res.canonical_uri == res.base_uri else "",
-                )
-            add(child)
-            adopt(child, child.ok)
-            if self.dialect in ("4", "6", "7"):
-                # drafts 4-7: $ref MASKS every sibling keyword — the ref
-                # target is the whole schema (V/Core.pm draft≤7 dispatch)
-                return Compiled(ok=child.ok, viols=viols,
-                                cov_names=cov_names, cov_items=cov_items)
-        if "$dynamicRef" in schema and self.dialect == "2020-12":
-            # full dynamic-scope semantics (V/Core.pm:327-361): resolve
-            # like $ref first; if the landing spot carries the matching
-            # $dynamicAnchor, re-resolve through the dynamic scope with the
-            # OUTERMOST declaration winning.  The compiler's inlining chain
-            # is the runtime dynamic scope, so this is exact.  In earlier
-            # dialects $dynamicRef is an unknown keyword and is ignored
-            # (the unknownKeyword corpus).
-            from urllib.parse import urldefrag, urljoin
-
-            ref = schema["$dynamicRef"]
-            try:
-                res = self.registry.resolve(ref, base)
-            except SpecError as exc:
-                res, child = None, ref_exception("$dynamicRef", str(exc))
-            if res is not None:
-                _, frag = urldefrag(urljoin(base, ref))
-                if frag and not frag.startswith("/") and isinstance(res.node, dict) \
-                        and res.node.get("$dynamicAnchor") == frag:
-                    dyn = self.registry.resolve_dynamic(frag, self.ctx.dynamic_scope)
-                    if dyn is not None:
-                        res = dyn
-                child = self._node(res.node, t, kloc=f"{kloc}/$dynamicRef", base=res.base_uri, abs_ptr="")
-            add(child)
-            adopt(child, child.ok)
-        if "$recursiveRef" in schema and self.dialect == "2019-09":
-            # 2019-09 predecessor (V/Core.pm:262-279): resolve statically
-            # like $ref (ANY URI value — the recursive-dynamic corpus
-            # points one at a boolean schema); ONLY if the landing spot
-            # declares $recursiveAnchor:true does the ref re-resolve
-            # against the OUTERMOST in-scope resource declaring a
-            # recursive anchor.  Other dialects ignore it as unknown.
-            ref = schema["$recursiveRef"]
-            try:
-                res = self.registry.resolve(ref, base)
-                if isinstance(res.node, dict) \
-                        and res.node.get("$recursiveAnchor") is True:
-                    for outer in self.ctx.dynamic_scope:
-                        if outer in self.registry.recursive_anchors:
-                            res = self.registry.resolve(ref, outer)
-                            break
-            except SpecError as exc:
-                res, child = None, ref_exception("$recursiveRef", str(exc))
-            if res is not None:
-                child = self._node(res.node, t, kloc=f"{kloc}/$recursiveRef",
-                                   base=res.base_uri, abs_ptr="")
-            add(child)
-            adopt(child, child.ok)
-
-        # ---- Validation vocabulary ---------------------------------------
-        if "type" in schema:
-            add(self._type_kw(schema["type"], t, E))
-
-        if "enum" in schema and not t.is_root:
-            eqs = [c for c in (_const_eq(t.value_col(), v, t.dtype)
-                               for v in schema["enum"]) if c is not None]
-            ok = F.lit(False)
-            for c in eqs:
-                ok = ok | F.coalesce(c, F.lit(False))
-            if t.null_is_value:
-                # type-strict equality: JSON null matches only a null member
-                null_ok = F.lit(any(v is None for v in schema["enum"]))
-                ok = F.when(t.value_col().isNull(), null_ok).otherwise(ok)
-            add(E("enum", ok, "value does not match", null_vacuous=False))
-        if "const" in schema and not t.is_root:
-            c = _const_eq(t.value_col(), schema["const"], t.dtype)
-            ok = F.lit(False) if c is None else F.coalesce(c, F.lit(False))
-            if t.null_is_value:
-                ok = F.when(t.value_col().isNull(),
-                            F.lit(schema["const"] is None)).otherwise(ok)
-            add(E("const", ok, "value does not match", null_vacuous=False))
-
-        if "multipleOf" in schema and applies("multipleOf"):
-            m = schema["multipleOf"]
-            if not isinstance(m, (int, float)) or isinstance(m, bool) or m <= 0:
-                raise SpecError("multipleOf value is not a positive number")
-            v = t.value_col()
-            if isinstance(t.dtype, _INTEGRAL_TYPES) and float(m).is_integer():
-                ok = (v % _num_lit(int(m))) == 0
-            else:
-                # bignum-exact float modulo (V/Validation.pm:119-123) →
-                # fixed-point decimal pmod; exact within 38 digits
-                dec = "decimal(38,12)"
-                ok = F.pmod(v.cast(dec), _num_lit(m).cast(dec)) == F.lit(0).cast(dec)
-            add(E("multipleOf", ok, f"value is not a multiple of {_num_str(m)}"))
-        elif "multipleOf" in schema and self.options.stringy_numbers and jt == "string":
-            # stringy_numbers applies to ALL numeric keywords (U.pm:255-261),
-            # multipleOf included; a non-numeric string stays vacuously valid
-            m = schema["multipleOf"]
-            if not isinstance(m, (int, float)) or isinstance(m, bool) or m <= 0:
-                raise SpecError("multipleOf value is not a positive number")
-            dec = "decimal(38,12)"
-            v = t.value_col().cast("string").try_cast(dec)
-            ok = F.when(v.isNull(), F.lit(True)).otherwise(
-                F.pmod(v, F.lit(m).cast(dec)) == F.lit(0).cast(dec))
-            add(E("multipleOf", ok, f"value is not a multiple of {_num_str(m)}"))
-
-        # draft4 couples exclusiveMaximum/Minimum as BOOLEANS modifying
-        # maximum/minimum (V/Validation.pm:129-143); detect that form and
-        # fold it into the base keyword's comparison
-        d4_ex_max = self.dialect == "4" and schema.get("exclusiveMaximum") is True
-        d4_ex_min = self.dialect == "4" and schema.get("exclusiveMinimum") is True
-        for kw, op, msg in (
-            ("maximum", "le", "value is greater than %s"),
-            ("exclusiveMaximum", "lt", "value is greater than or equal to %s"),
-            ("minimum", "ge", "value is less than %s"),
-            ("exclusiveMinimum", "gt", "value is less than or equal to %s"),
-        ):
-            if kw in schema and isinstance(schema[kw], bool):
-                if self.dialect != "4" or kw not in ("exclusiveMaximum", "exclusiveMinimum"):
-                    raise SpecError(f"{kw} value is not a number")
-                continue                 # draft4 boolean form — folded below
-            if kw == "maximum" and d4_ex_max:
-                op, msg = "lt", "value is greater than or equal to %s"
-            if kw == "minimum" and d4_ex_min:
-                op, msg = "gt", "value is less than or equal to %s"
-            if kw in schema and applies(kw):
-                b = _num_lit(schema[kw])
-                v = t.value_col()
-                ok = {"le": v <= b, "lt": v < b, "ge": v >= b, "gt": v > b}[op]
-                add(E(kw, ok, msg % _num_str(schema[kw])))
-            elif kw in schema and self.options.stringy_numbers and jt == "string":
-                # optional coercion: number-looking strings compared
-                # numerically (U.pm:255-261, V/Validation.pm:74-75); a
-                # non-numeric string stays vacuously valid (not a number)
-                b = _num_lit(schema[kw])
-                v = t.value_col().cast("string").try_cast("double")
-                cmp = {"le": v <= b, "lt": v < b, "ge": v >= b, "gt": v > b}[op]
-                add(E(kw, F.when(v.isNull(), F.lit(True)).otherwise(cmp),
-                      msg % _num_str(schema[kw])))
-
-        if "maxLength" in schema and applies("maxLength"):
-            n = schema["maxLength"]
-            add(E("maxLength", F.length(t.value_col().cast("string")) <= n, f"length is greater than {n}"))
-        if "minLength" in schema and applies("minLength"):
-            n = schema["minLength"]
-            add(E("minLength", F.length(t.value_col().cast("string")) >= n, f"length is less than {n}"))
-        if "pattern" in schema and applies("pattern"):
-            # partial match, like the reference's =~ (V/Validation.pm:217-228);
-            # Java regex dialect — same deviation class the reference accepts
-            # vs ECMA-262 (t/zzz-acceptance-draft2020-12.t:54-60)
-            add(E("pattern", t.value_col().cast("string").rlike(schema["pattern"]), "pattern does not match"))
-
-        # ---- content vocabulary (assertion mode only; annotation-only by
-        # default per 2020-12 — V/Content.pm:42-114, Modern.pm:87-93) ------
-        if self.options.validate_content_schemas and jt == "string" and (
-            "contentEncoding" in schema or "contentMediaType" in schema
-        ):
-            add(self._content_kw(schema, t, kloc, base, abs_ptr, E))
-
-        if "format" in schema and isinstance(schema["format"], str) \
-                and self.options.collect_annotations and t.annotatable:
-            # the format name is ALWAYS annotated when the keyword is
-            # evaluated, independent of assertion mode
-            # (FormatAnnotation.pm:47-48: A($state, $schema->{format})
-            # before the validate_formats check)
-            self._annotate(t, kloc, base, abs_ptr, "format",
-                           value=schema["format"])
-        if "format" in schema and self.options.validate_formats and applies("format"):
-            pred = format_predicate(schema["format"], t.value_col().cast("string"))
-            if pred is not None:
-                add(E("format", pred, f"not a valid {schema['format']}"))
-
-        if "maxItems" in schema and applies("maxItems"):
-            n = schema["maxItems"]
-            add(E("maxItems", F.size(t.value_col()) <= n, f"array has more than {n} item{'s' if n != 1 else ''}"))
-        if "minItems" in schema and applies("minItems"):
-            n = schema["minItems"]
-            add(E("minItems", F.size(t.value_col()) >= n, f"array has fewer than {n} item{'s' if n != 1 else ''}"))
-        if schema.get("uniqueItems") is True and applies("uniqueItems"):
-            v = t.value_col()
-            add(E("uniqueItems", F.size(F.array_distinct(v)) == F.size(v), "items are not unique"))
-
-        # ---- array applicators -------------------------------------------
-        n_prefix = 0
-        # prefixItems exists only in 2020-12; earlier dialects ignore it
-        # as an unknown keyword (the unknownKeyword corpus)
-        if "prefixItems" in schema and applies("prefixItems") \
-                and self.dialect == "2020-12":
-            subs = schema["prefixItems"]
-            n_prefix = len(subs)
-            for i, s in enumerate(subs):
-                elem = self._elem_target(t, F.lit(i))
-                present_i = t.present & (F.size(t.value_col()) > i)
-                elem = Target(col=elem.col, dtype=elem.dtype, ptr=elem.ptr, present=present_i,
-                              null_is_value=True)
-                _amark = len(self.ctx.annotations)
-                add(sub("prefixItems", s, elem, suffix=f"/{i}"))
-                self._gate_annotations(_amark, present_i)
-            cov_items.append((None, n_prefix))
-            if self.options.collect_annotations and t.annotatable \
-                    and jt == "array":
-                # largest evaluated index, or true when the whole array was
-                # covered (V/Applicator.pm:314)
-                self._annotate(
-                    t, kloc, base, abs_ptr, "prefixItems",
-                    value_col=F.when(F.size(t.value_col()) <= n_prefix,
-                                     F.lit("true"))
-                               .otherwise(F.lit(str(n_prefix - 1))))
-
-        if "items" in schema and applies("items"):
-            items = schema["items"]
-            if isinstance(items, list):
-                # array form (≤2019-09): positional subschemas, with
-                # `additionalItems` as the rest-schema
-                # (V/Applicator.pm:250-274); the reference rejects it in
-                # 2020-12 with this same error (:254)
-                if self.dialect == "2020-12":
-                    raise SpecError('array form of "items" not supported in draft2020-12')
-                for i, s in enumerate(items):
-                    elem = self._elem_target(t, F.lit(i))
-                    present_i = t.present & (F.size(t.value_col()) > i)
-                    elem = Target(col=elem.col, dtype=elem.dtype, ptr=elem.ptr,
-                                  present=present_i, null_is_value=True)
-                    _amark = len(self.ctx.annotations)
-                    add(sub("items", s, elem, suffix=f"/{i}"))
-                    self._gate_annotations(_amark, present_i)
-                n_prefix = len(items)
-                cov_items.append((None, n_prefix))
-                if "additionalItems" in schema:
-                    add(self._items_kw(schema["additionalItems"], t, n_prefix,
-                                       kloc, base, abs_ptr, kw="additionalItems"))
-                    cov_items.append((None, "all"))
-            else:
-                add(self._items_kw(items, t, n_prefix, kloc, base, abs_ptr))
-                cov_items.append((None, "all"))
-                if self.options.collect_annotations and t.annotatable \
-                        and jt == "array":
-                    # schema-form items always annotates true after
-                    # evaluating the rest of the array (V/Applicator.pm:349)
-                    self._annotate(t, kloc, base, abs_ptr, "items",
-                                   value=True)
-
-        # min/maxContains are evaluated INSIDE the contains keyword and do
-        # nothing without it (V/Applicator.pm:357-405: they live in
-        # _eval_keyword_contains, which only runs when `contains` exists)
-        if "contains" in schema and applies("contains"):
-            c = self._contains_kw(schema, t, kloc, base, abs_ptr)
-            add(c)
-            adopt(c, None)   # element-predicate coverage for unevaluatedItems
-
-        # ---- object keywords ---------------------------------------------
-        if "required" in schema and applies("required"):
-            add(self._required_kw(schema["required"], t, E))
-        if "dependentRequired" in schema and applies("dependentRequired") \
-                and (self.dialect in ("2019-09", "2020-12")
-                     or self._deps_dispatch):
-            for prop, deps in schema["dependentRequired"].items():
-                pt = t.get_property(prop)
-                if pt is None:
-                    continue
-                dep_ok = F.lit(True)
-                missing = []
-                for d in deps:
-                    dt_ = t.get_property(d)
-                    present = dt_.present if dt_ is not None else F.lit(False)
-                    dep_ok = dep_ok & present
-                    missing.append(F.when(~present, F.lit(d)))
-                ok = F.when(pt.present, dep_ok).otherwise(F.lit(True))
-                add(E("dependentRequired", ok, "not all dependencies are satisfied"))
-        if "dependentSchemas" in schema and applies("dependentSchemas") \
-                and (self.dialect in ("2019-09", "2020-12")
-                     or self._deps_dispatch):
-            # the dispatch flag authorizes THIS synthetic node only: a
-            # literal dependent* keyword nested inside a draft4-7
-            # `dependencies` subschema is unknown in that dialect and must
-            # NOT inherit the dispatch (the reference compiles the nested
-            # subschema under the document's own dialect)
-            _dispatch = self._deps_dispatch
-            self._deps_dispatch = False
-            try:
-                for prop, s in schema["dependentSchemas"].items():
-                    pt = t.get_property(prop)
-                    if pt is None:
-                        continue
-                    _amark = len(self.ctx.annotations)
-                    child = sub("dependentSchemas", s, t, suffix=f"/{json_pointer_escape(prop)}")
-                    self._gate_annotations(_amark, pt.present)
-                    ok = F.when(pt.present, child.ok).otherwise(F.lit(True))
-                    gated = [F.when(pt.present, v).otherwise(_empty_viols()) for v in child.viols]
-                    add(Compiled(ok=ok, viols=gated))
-                    adopt(child, pt.present & child.ok)
-            finally:
-                self._deps_dispatch = _dispatch
-
-        # draft4-7 keyword; 2019-09+ ignore it (replaced by dependent*)
-        if "dependencies" in schema and applies("dependencies") \
-                and self.dialect in ("4", "6", "7"):
-            # draft4-7 keyword: array form ≡ dependentRequired, schema form
-            # ≡ dependentSchemas, dispatched at compile time
-            # (V/Applicator.pm:190-245).  Documented deviation: violation
-            # keyword_locations read /dependentRequired | /dependentSchemas
-            # (the dispatched form), not /dependencies
-            arrays = {k: v for k, v in schema["dependencies"].items()
-                      if isinstance(v, list)}
-            schemas = {k: v for k, v in schema["dependencies"].items()
-                       if not isinstance(v, list)}
-            self._deps_dispatch = True   # lets dependent* through the
-            try:                          # 2019-09+ dialect gate below
-                if arrays:
-                    add(self._object_schema({"dependentRequired": arrays}, t,
-                                            kloc, base, abs_ptr))
-                if schemas:
-                    add(self._object_schema({"dependentSchemas": schemas}, t,
-                                            kloc, base, abs_ptr))
-            finally:
-                self._deps_dispatch = False
-
-        if "maxProperties" in schema and applies("maxProperties"):
-            n = schema["maxProperties"]
-            add(E("maxProperties", self._prop_count(t) <= n,
-                  f"object has more than {n} propert{'ies' if n != 1 else 'y'}"))
-        if "minProperties" in schema and applies("minProperties"):
-            n = schema["minProperties"]
-            add(E("minProperties", self._prop_count(t) >= n,
-                  f"object has fewer than {n} propert{'ies' if n != 1 else 'y'}"))
-
-        annotating = (self.options.collect_annotations and t.annotatable
-                      and jt == "object")
-        matched_names: set[str] = set()
-        if "properties" in schema and applies("properties"):
-            prop_present: list = []
-            for name, s in schema["properties"].items():
-                pt = t.get_property(name)
-                matched_names.add(name)
-                if pt is None:
-                    if isinstance(t.dtype, T.MapType):
-                        if not annotating:
-                            # join the node's single fused map_entries pass
-                            # (sel: exact key) instead of an element_at +
-                            # map_contains_key pair: with a DERIVED map
-                            # column every extra reference re-builds the
-                            # map after filter pushdown inlines it — the
-                            # fused plan references the column once
-                            add(self._map_props_kw(
-                                s, t, (lambda k, _n=name: k == _n),
-                                kw="properties",
-                                suffix=f"/{json_pointer_escape(name)}",
-                                summary_msg="not all properties are valid",
-                                kloc=kloc, base=base, abs_ptr=abs_ptr,
-                                emit_summary=False, fuse=map_fuse))
-                            continue
-                        pt = self._map_value_target(t, name)
-                    else:
-                        continue
-                prop_present.append((name, pt.present))
-                _amark = len(self.ctx.annotations)
-                add(sub("properties", s, pt, suffix=f"/{json_pointer_escape(name)}"))
-                # absent property ⇒ subtree not evaluated ⇒ no annotations
-                self._gate_annotations(_amark, pt.present)
-            if annotating:
-                # evaluated-names annotation (V/Applicator.pm:448)
-                self._annotate_names("properties", prop_present, t,
-                                     kloc, base, abs_ptr)
-
-        is_map = isinstance(t.dtype, T.MapType)
-        pattern_res: list[str] = []
-        if "patternProperties" in schema and applies("patternProperties"):
-            pat_matched: list = []
-            pat_children: list[Compiled] = []
-            for pat, s in schema["patternProperties"].items():
-                pattern_res.append(pat)
-                if is_map:
-                    # open-properties map column: the subschema applies to
-                    # every entry whose KEY matches at runtime
-                    # (V/Applicator.pm:453-490); Java-regex dialect, same
-                    # deviation class as `pattern`
-                    c = self._map_props_kw(
-                        s, t, (lambda k, _p=pat: k.rlike(_p)),
-                        kw="patternProperties",
-                        suffix=f"/{json_pointer_escape(pat)}",
-                        summary_msg="not all properties are valid",
-                        kloc=kloc, base=base, abs_ptr=abs_ptr,
-                        emit_summary=False, fuse=map_fuse)
-                    add(c)
-                    pat_children.append(c)
-                    cov_names.append((None, ("pat", pat)))
-                else:
-                    for name in t.field_names():
-                        if re.search(pat, name):
-                            matched_names.add(name)
-                            pt = t.get_property(name)
-                            if not any(n == name for n, _ in pat_matched):
-                                pat_matched.append((name, pt.present))
-                            _amark = len(self.ctx.annotations)
-                            add(sub("patternProperties", s, pt, suffix=f"/{json_pointer_escape(pat)}"))
-                            self._gate_annotations(_amark, pt.present)
-            if annotating:
-                # matched-names annotation (V/Applicator.pm:487, uniqstr)
-                if is_map:
-                    self._annotate_map_keys(
-                        "patternProperties", _match_any_key(pattern_res), t,
-                        kloc, base, abs_ptr)
-                else:
-                    self._annotate_names("patternProperties", pat_matched, t,
-                                         kloc, base, abs_ptr)
-            if pat_children:
-                # ONE summary row per patternProperties keyword, however
-                # many patterns fail (Result shape parity: the reference
-                # emits a single 'not all properties are valid' rollup)
-                ok_pp = F.lit(True)
-                for c in pat_children:
-                    ok_pp = ok_pp & c.kw_ok
-                add(Compiled(ok=F.lit(True), viols=[_viol(
-                    ok_pp, t.ptr, f"{kloc}/patternProperties",
-                    self._akloc(base, f"{abs_ptr}/patternProperties"),
-                    "patternProperties", "not all properties are valid",
-                    F.lit(None).cast("string"))]))
-
-        if "additionalProperties" in schema and applies("additionalProperties"):
-            s = schema["additionalProperties"]
-            if is_map:
-                names = sorted(matched_names)
-                pats = list(pattern_res)
-
-                def _extra_sel(k: Column, _names=names, _pats=pats) -> Column:
-                    cond = F.lit(True)
-                    if _names:
-                        cond = cond & ~k.isin(_names)
-                    for p in _pats:
-                        cond = cond & ~k.rlike(p)
-                    return cond
-
-                add(self._map_props_kw(
-                    s, t, _extra_sel, kw="additionalProperties", suffix="",
-                    summary_msg="not all additional properties are valid",
-                    kloc=kloc, base=base, abs_ptr=abs_ptr, fuse=map_fuse,
-                    sel_all=not names and not pats))
-                if annotating:
-                    self._annotate_map_keys(
-                        "additionalProperties",
-                        _unmatched_key(names, pats), t, kloc, base, abs_ptr)
-            else:
-                extras = [n for n in t.field_names() if n not in matched_names
-                          and not any(re.search(p, n) for p in pattern_res)]
-                for name in extras:
-                    pt = t.get_property(name)
-                    _amark = len(self.ctx.annotations)
-                    add(sub("additionalProperties", s, pt))
-                    self._gate_annotations(_amark, pt.present)
-                if annotating:
-                    # evaluated-extras annotation (V/Applicator.pm:523)
-                    self._annotate_names(
-                        "additionalProperties",
-                        [(n, t.get_property(n).present) for n in extras],
-                        t, kloc, base, abs_ptr)
-
-        if "propertyNames" in schema and applies("propertyNames"):
-            s = schema["propertyNames"]
-            if is_map:
-                add(self._map_propertynames_kw(s, t, kloc, base, abs_ptr,
-                                               fuse=map_fuse))
-            else:
-                for name in t.field_names():
-                    # the name is only validated when the property is PRESENT
-                    # (NULL column = absent property in our data model) — gate
-                    # on the property's own presence, not the object's
-                    pt = t.get_property(name)
-                    present = pt.present if pt is not None else F.lit(False)
-                    nt = Target(col=F.lit(name), dtype=T.StringType(), ptr=t.ptr,
-                                present=present)
-                    add(sub("propertyNames", s, nt))
-
-        # coverage produced by this level's property keywords (statically
-        # known on typed rows/structs — the schema fixes the name set)
-        if matched_names:
-            cov_names.append((None, frozenset(matched_names)))
-        if "additionalProperties" in schema and applies("additionalProperties"):
-            cov_names.append((None, "all"))
-
-        # ---- in-place applicators ----------------------------------------
-        if "allOf" in schema:
-            children = [sub("allOf", s, t, suffix=f"/{i}") for i, s in enumerate(schema["allOf"])]
-            for c in children:
-                add(c)
-                adopt(c, c.ok)
-        if "anyOf" in schema:
-            children = []
-            for i, s in enumerate(schema["anyOf"]):
-                _amark = len(self.ctx.annotations)
-                c = sub("anyOf", s, t, suffix=f"/{i}")
-                self._gate_annotations(_amark, c.ok)
-                children.append(c)
-            any_ok = F.lit(False)
-            for c in children:
-                any_ok = any_ok | c.ok
-            any_ok = F.when(t.present, any_ok).otherwise(F.lit(True))
-            for c in children:
-                adopt(c, c.ok)
-            gated = [F.when(any_ok, _empty_viols()).otherwise(v) for c in children for v in c.viols]
-            gated.append(_viol(any_ok, t.ptr, f"{kloc}/anyOf", self._akloc(base, f"{abs_ptr}/anyOf"),
-                               "anyOf", "no subschemas are valid", F.lit(None).cast("string")))
-            add(Compiled(ok=any_ok, viols=gated))
-        if "oneOf" in schema:
-            children = []
-            for i, s in enumerate(schema["oneOf"]):
-                _amark = len(self.ctx.annotations)
-                c = sub("oneOf", s, t, suffix=f"/{i}")
-                self._gate_annotations(_amark, c.ok)
-                children.append(c)
-            for c in children:
-                adopt(c, c.ok)
-            count = sum((c.ok.cast("int") for c in children), F.lit(0))
-            ok = F.when(t.present, count == 1).otherwise(F.lit(True))
-            valid_ids = F.concat_ws(", ", F.array_compact(F.array(
-                *[F.when(c.ok, F.lit(str(i))) for i, c in enumerate(children)])))
-            msg = F.when(count == 0, F.lit("no subschemas are valid")).otherwise(
-                F.concat(F.lit("multiple subschemas are valid: "), valid_ids))
-            gated = [F.when(count != 0, _empty_viols()).otherwise(v) for c in children for v in c.viols]
-            gated.append(_viol(ok, t.ptr, f"{kloc}/oneOf", self._akloc(base, f"{abs_ptr}/oneOf"),
-                               "oneOf", msg, F.lit(None).cast("string")))
-            add(Compiled(ok=ok, viols=gated))
-        if "not" in schema:
-            _amark = len(self.ctx.annotations)
-            child = sub("not", schema["not"], t)
-            self._gate_annotations(_amark, F.lit(False))
-            ok = F.when(t.present, ~child.ok).otherwise(F.lit(True))
-            # inner errors are discarded (V/Applicator.pm:133-145)
-            add(Compiled(ok=ok, viols=[_viol(ok, t.ptr, f"{kloc}/not",
-                self._akloc(base, f"{abs_ptr}/not"), "not", "subschema is valid",
-                F.lit(None).cast("string"))]))
-        if "if" in schema:
-            _m_if = len(self.ctx.annotations)
-            if_c = self._node(schema["if"], t, f"{kloc}/if", base, f"{abs_ptr}/if")
-            self._gate_annotations(_m_if, if_c.ok)
-            _m_then = len(self.ctx.annotations)
-            then_c = sub("then", schema["then"], t) if "then" in schema else Compiled(ok=F.lit(True))
-            self._gate_annotations(_m_then, if_c.ok)
-            _m_else = len(self.ctx.annotations)
-            else_c = sub("else", schema["else"], t) if "else" in schema else Compiled(ok=F.lit(True))
-            self._gate_annotations(_m_else, ~F.coalesce(if_c.ok, F.lit(False)))
-            ok = F.when(~t.present, F.lit(True)).when(if_c.ok, then_c.ok).otherwise(else_c.ok)
-            adopt(if_c, if_c.ok)
-            adopt(then_c, if_c.ok & then_c.ok)
-            adopt(else_c, ~if_c.ok & else_c.ok)
-            gated = [F.when(if_c.ok, v).otherwise(_empty_viols()) for v in then_c.viols]
-            gated += [F.when(if_c.ok, _empty_viols()).otherwise(v) for v in else_c.viols]
-            gated = [F.when(t.present, v).otherwise(_empty_viols()) for v in gated]
-            add(Compiled(ok=ok, viols=gated))
-
-        # ---- unevaluatedItems / unevaluatedProperties ---------------------
-        # Evaluated last (after all coverage contributions are known) —
-        # the reference enforces the same ordering (V/Applicator.pm:37-45).
-        # Static coverage analysis with when()-guarded conditional branches
-        # replaces runtime annotation collection (V/Unevaluated.pm:41-144);
-        # `contains`-based item coverage is a documented TODO subset,
-        # mirroring the reference's own acceptance-test skips.
-        if "unevaluatedProperties" in schema and applies("unevaluatedProperties"):
-            s = schema["unevaluatedProperties"]
-            if is_map:
-                # runtime coverage over map entries: a key is covered when a
-                # successful in-scope keyword claimed it — statically for
-                # name sets, by regex for patternProperties, guarded for
-                # conditional branches (V/Unevaluated.pm:100-144)
-                if not any(g is None and p == "all" for g, p in cov_names):
-                    payloads = list(cov_names)
-
-                    def _uncov_sel(k: Column, _ps=payloads) -> Column:
-                        cov = F.lit(False)
-                        for g, p in _ps:
-                            if p == "all":
-                                c = F.lit(True)
-                            elif isinstance(p, tuple) and p[0] == "pat":
-                                c = k.rlike(p[1])
-                            elif p:
-                                c = k.isin(sorted(p))
-                            else:
-                                c = F.lit(False)
-                            if g is not None:
-                                c = F.coalesce(g, F.lit(False)) & c
-                            cov = cov | c
-                        return ~cov
-
-                    add(self._map_props_kw(
-                        s, t, _uncov_sel, kw="unevaluatedProperties", suffix="",
-                        summary_msg="not all additional properties are valid",
-                        kloc=kloc, base=base, abs_ptr=abs_ptr, fuse=map_fuse))
-            else:
-                for name in t.field_names():
-                    if any(g is None and _name_covered(name, p) for g, p in cov_names):
-                        continue            # statically covered
-                    guards = [g for g, p in cov_names
-                              if g is not None and _name_covered(name, p)]
-                    covered = F.lit(False)
-                    for g in guards:
-                        covered = covered | F.coalesce(g, F.lit(False))
-                    pt = t.get_property(name)
-                    if pt is None:
-                        continue
-                    child = sub("unevaluatedProperties", s, pt)
-                    add(Compiled(
-                        ok=F.when(covered, F.lit(True)).otherwise(child.ok),
-                        viols=[F.when(covered, _empty_viols()).otherwise(v)
-                               for v in child.viols],
-                    ))
-            cov_names.append((None, "all"))
-
-        if "unevaluatedItems" in schema and applies("unevaluatedItems"):
-            s = schema["unevaluatedItems"]
-            if not any(g is None and p == "all" for g, p in cov_items):
-                all_cov = F.lit(False)
-                for g, p in cov_items:
-                    if p == "all" and g is not None:
-                        all_cov = all_cov | F.coalesce(g, F.lit(False))
-                static_prefix = max((p for g, p in cov_items
-                                     if g is None and isinstance(p, int)), default=0)
-                n_cov = F.lit(static_prefix)
-                for g, p in cov_items:
-                    if g is not None and isinstance(p, int):
-                        n_cov = F.greatest(n_cov, F.when(F.coalesce(g, F.lit(False)),
-                                                         F.lit(p)).otherwise(F.lit(0)))
-                # element-predicate coverage: contains' matched elements
-                # count as evaluated (reference matched-index annotations)
-                epreds = [(g, p[1]) for g, p in cov_items
-                          if isinstance(p, tuple) and p[0] == "epred"]
-                arr = t.value_col()
-                et = t.dtype.elementType
-                if not epreds:
-                    rest = F.slice(arr, n_cov + 1, F.greatest(F.size(arr) - n_cov, F.lit(0)))
-                    ok_inner = self._items_ok_peephole(s, t.dtype, rest)
-                    if ok_inner is None:
-                        def _uneval_pred(x: Column) -> Column:
-                            elem = Target(col=x, dtype=et, ptr=t.ptr, present=F.lit(True),
-                                          null_is_value=True, annotatable=False)
-                            return self._node(s, elem, f"{kloc}/unevaluatedItems",
-                                              base, f"{abs_ptr}/unevaluatedItems").ok
-                        ok_inner = F.forall(rest, _uneval_pred)
-                else:
-                    def _uneval_elem_ok(x: Column, i: Column) -> Column:
-                        elem = Target(col=x, dtype=et, ptr=t.ptr, present=F.lit(True),
-                                      null_is_value=True, annotatable=False)
-                        covered = i < n_cov
-                        for g, es in epreds:
-                            m = self._node(es, elem, f"{kloc}/contains",
-                                           base, f"{abs_ptr}/contains").ok
-                            covered = covered | (
-                                m if g is None else F.coalesce(g, F.lit(False)) & m)
-                        return covered | self._node(
-                            s, elem, f"{kloc}/unevaluatedItems",
-                            base, f"{abs_ptr}/unevaluatedItems").ok
-                    ok_inner = F.forall(
-                        F.transform(arr, _uneval_elem_ok), lambda b: b)
-                ok = F.when(~t.present | all_cov, F.lit(True)) \
-                    .otherwise(F.coalesce(ok_inner, F.lit(True)))
-                add(Compiled(ok=ok, viols=[_viol(
-                    ok, t.ptr, f"{kloc}/unevaluatedItems",
-                    self._akloc(base, f"{abs_ptr}/unevaluatedItems"),
-                    "unevaluatedItems",
-                    "subschema is not valid against all additional items",
-                    F.lit(None).cast("string"))]))
-            cov_items.append((None, "all"))
-
-        # ---- x-* extension keywords (set-oriented; runner executes) -------
-        for kw in ("x-unique", "x-ref", "x-drift"):
-            if kw in schema:
-                self.ctx.set_checks.append(SetCheck(
-                    kind=kw[2:], keyword_location=f"{kloc}/{kw}", params={"value": schema[kw]},
-                ))
-
-        # ---- registered custom vocabularies (add_vocabulary seam,
-        # Modern.pm:940-956) — dispatched in evaluation_order AFTER the
-        # built-in keywords, wrapped with the same presence gating and
-        # violation bookkeeping ----------------------------------------
-        from json_schema_modern_spark.spec.vocabulary import (
-            registered_keywords,
-        )
-
-        for kw, (_voc, ks) in registered_keywords().items():
-            if kw not in schema:
-                continue
-            if ks.traverse is not None:
-                try:
-                    ks.traverse(schema[kw])
-                except ValueError as exc:
-                    raise SpecError(
-                        f"{kw} {exc} (at {kloc or '/'})") from exc
-            if ks.types is not None and not (
-                    jt in ks.types
-                    or (jt == "integer" and "number" in ks.types)):
-                continue
-            if ks.compile is None or t.is_root:
-                continue
-            pred = ks.compile(schema[kw], t.value_col(), jt)
-            if pred is None:
-                continue
-            add(E(kw, F.coalesce(pred, F.lit(False)), ks.error))
-
-        if map_fuse:
-            # ONE interpreted map_entries pass for ALL this node's map
-            # keywords: ∀e.(p₁∧…∧pₙ) ≡ (∀e.p₁)∧…∧(∀e.pₙ), and SQL
-            # three-valued logic agrees (false∧null=false; all-true with a
-            # null gives null, coalesced true on both shapes)
-            _fns = tuple(map_fuse)
-
-            def _fused_pred(e: Column) -> Column:
-                # single-param signature: Spark HOFs dispatch on arity
-                c = _fns[0](e)
-                for fn in _fns[1:]:
-                    c = c & fn(e)
-                return c
-
-            fused_ok = F.when(
-                t.present,
-                F.coalesce(F.forall(F.map_entries(t.value_col()), _fused_pred),
-                           F.lit(True))).otherwise(F.lit(True))
-            oks.append(fused_ok)
-
-        ok_all = F.lit(True)
-        for o in oks:
-            ok_all = ok_all & o
-        return Compiled(ok=ok_all, viols=viols, cov_names=cov_names, cov_items=cov_items)
 
     # -- helpers ------------------------------------------------------------
 
@@ -1555,280 +1894,6 @@ class ColumnCompiler:
         U.pm:823-829)."""
         for a in self.ctx.annotations[start:]:
             a["guard"] = guard if a["guard"] is None else (a["guard"] & guard)
-
-    def _annotate(self, t: Target, kloc: str, base: str, abs_ptr: str,
-                  keyword: str, value: Any = None,
-                  value_col: Column | None = None) -> None:
-        """Record one annotation entry.  Static values are JSON-encoded at
-        compile time; `value_col` carries a row-dependent value as a
-        JSON-text Column (the applicator annotations — evaluated property
-        names — are per-row in a MapType/struct world)."""
-        self.ctx.annotations.append({
-            "ptr": t.ptr, "kloc": f"{kloc}/{keyword}",
-            "akloc": self._akloc(base, f"{abs_ptr}/{keyword}"),
-            "keyword": keyword, "value": value, "value_col": value_col,
-            "guard": None})
-
-    def _annotate_names(self, kw: str, pairs: list, t: Target, kloc: str,
-                        base: str, abs_ptr: str) -> None:
-        """Applicator annotation whose value is the list of property names
-        the keyword evaluated on this row (V/Applicator.pm:448,487,523 —
-        properties/patternProperties/additionalProperties push the names
-        seen; name order is sorted here where the reference's Perl hash
-        iteration is unspecified).  `pairs` = (name, presence Column)."""
-        if pairs:
-            arr = F.array_sort(F.array_compact(F.array(
-                *[F.when(p, F.lit(n)) for n, p in pairs])))
-        else:
-            arr = F.array().cast("array<string>")
-        self._annotate(t, kloc, base, abs_ptr, kw, value_col=F.to_json(arr))
-
-    def _annotate_map_keys(self, kw: str, key_sel, t: Target, kloc: str,
-                           base: str, abs_ptr: str) -> None:
-        """Same as _annotate_names for an open-properties MapType column:
-        the evaluated names are the runtime keys `key_sel` selects."""
-        keys = F.array_sort(F.filter(F.map_keys(t.value_col()), key_sel))
-        self._annotate(t, kloc, base, abs_ptr, kw, value_col=F.to_json(keys))
-
-    def _type_kw(self, want: Any, t: Target, E) -> Compiled:
-        wants = want if isinstance(want, list) else [want]
-        if not wants:
-            raise SpecError("type array is empty")
-        for w in wants:
-            if w not in ("null", "boolean", "object", "array", "string", "number", "integer"):
-                raise SpecError(f'unrecognized type "{w}"')
-        jt = t.json_type()
-        got = jt
-        if t.null_is_value and "null" not in wants:
-            # a JSON-null element has runtime type "null" even though the
-            # static element type matches — the check cannot constant-fold
-            nonnull = self._type_kw_nonnull(wants, t)
-            return E("type", F.when(t.value_col().isNull(), F.lit(False))
-                     .otherwise(nonnull),
-                     f"got null or {got}, not {', '.join(wants)}",
-                     null_vacuous=False)
-        if jt in wants or (jt == "integer" and "number" in wants):
-            return Compiled(ok=F.lit(True))
-        if jt == "number" and "integer" in wants:
-            if self.dialect == "4":
-                # draft4 legacy_ints (U.pm:141-147): an integer is "a JSON
-                # number without a fraction part" AS WRITTEN — a
-                # fractional-typed column is never an integer, even at 2.0
-                return E("type", F.lit(False), "got number, not integer")
-            # ≥draft6: 2.0 is an integer (Utilities.pm:152-156); holds for
-            # Double/Float and Decimal alike (floor round-trips)
-            v = t.value_col()
-            ok = v == F.floor(v).cast(t.dtype)
-            return E("type", ok, f"got number, not integer")
-        plural = "one of " if len(wants) > 1 else ""
-        return E("type", F.lit(False), f"got {got}, not {plural}{', '.join(wants)}")
-
-    def _type_kw_nonnull(self, wants: list, t: Target) -> Column:
-        """Runtime type check for a definitely-non-null value (the static
-        dtype decides, with the integer⊂number / 2.0-is-integer cases)."""
-        jt = t.json_type()
-        if jt in wants or (jt == "integer" and "number" in wants):
-            return F.lit(True)
-        if jt == "number" and "integer" in wants:
-            v = t.value_col()
-            return v == F.floor(v).cast(t.dtype)
-        return F.lit(False)
-
-    def _prop_count(self, t: Target) -> Column:
-        if t.is_root:
-            return sum((F.col(n).isNotNull().cast("int") for n in t.field_names()), F.lit(0))
-        if isinstance(t.dtype, T.MapType):
-            return F.size(t.value_col())
-        if isinstance(t.dtype, T.StructType):
-            return sum((t.col.getField(n).isNotNull().cast("int") for n in t.field_names()), F.lit(0))
-        return F.lit(0)
-
-    def _required_kw(self, names: list[str], t: Target, E) -> Compiled:
-        missing_flags = []
-        ok = F.lit(True)
-        for name in names:
-            pt = t.get_property(name)
-            if pt is None and isinstance(t.dtype, T.MapType):
-                present = F.map_contains_key(t.value_col(), F.lit(name))
-            else:
-                present = pt.present if pt is not None else F.lit(False)
-            ok = ok & present
-            missing_flags.append(F.when(~present, F.lit(name)))
-        missing = F.array_compact(F.array(*missing_flags))
-        msg = F.concat(
-            F.lit("object is missing propert"),
-            F.when(F.size(missing) > 1, F.lit("ies: ")).otherwise(F.lit("y: ")),
-            F.concat_ws(", ", missing),
-        )
-        return E("required", ok, msg)
-
-    def _elem_target(self, t: Target, idx: Column, col: Column | None = None) -> Target:
-        et = t.dtype.elementType
-        c = col if col is not None else F.get(t.value_col(), idx)
-        return Target(
-            col=c, dtype=et,
-            ptr=F.concat(t.ptr, F.lit("/"), idx.cast("string")),
-            present=t.present,  # element exists; NULL element = JSON null value
-            null_is_value=True,
-        )
-
-    def _map_value_target(self, t: Target, name: str) -> Target:
-        vt = t.dtype.valueType
-        col = F.element_at(t.value_col(), F.lit(name))
-        return Target(
-            col=col, dtype=vt,
-            ptr=F.concat(t.ptr, F.lit("/" + json_pointer_escape(name))),
-            present=t.present & F.map_contains_key(t.value_col(), F.lit(name)),
-            null_is_value=True,  # a present map key with NULL value = JSON null
-        )
-
-    def _map_props_kw(self, s: Any, t: Target, sel, kw: str, suffix: str,
-                      summary_msg: str, kloc: str, base: str, abs_ptr: str,
-                      emit_summary: bool = True, fuse: list | None = None,
-                      sel_all: bool = False) -> Compiled:
-        """Object keyword over a MapType(String, V) column: the subschema
-        applies to every entry whose key ``sel(key)`` selects.
-
-        Used for patternProperties (key rlike pattern), additionalProperties
-        (complement of properties ∪ patternProperties) and
-        unevaluatedProperties (complement of the coverage set) —
-        V/Applicator.pm:453-526, V/Unevaluated.pm:100-144.
-
-        ok-path: Spark HOFs are CodegenFallback (interpreted), so the
-        per-entry predicate is expensive per map keyword.  Two peepholes:
-
-        - ``sel_all`` (selector covers every key, e.g. additionalProperties
-          with no sibling properties/patternProperties) + range-only value
-          schema → ``array_min/array_max(map_values(col))`` collection
-          expressions, fully codegen'd (precedent: _items_ok_peephole).
-        - ``fuse``: instead of one forall PER keyword, the per-entry
-          predicate is appended to the node-level fuse list and the caller
-          emits a SINGLE forall whose body conjoins every map keyword's
-          predicate — ∀e.(p∧q) ≡ (∀e.p)∧(∀e.q), measured ~3.5× on the
-          ok path with 3 map keywords.  The returned Compiled.ok is then
-          the keyword's OWN forall, used only inside the violation columns
-          (evaluated on failing rows post-filter); the caller must exclude
-          it from the node's ok conjunction.
-
-        Violation detail (per-entry child viols at /<escaped key>) is
-        computed only for rows that already failed."""
-        vt = t.dtype.valueType
-        kp = f"{kloc}/{json_pointer_escape(kw)}{suffix}"
-        ap = f"{abs_ptr}/{json_pointer_escape(kw)}{suffix}"
-        kp_sum = f"{kloc}/{json_pointer_escape(kw)}"
-        ap_sum = f"{abs_ptr}/{json_pointer_escape(kw)}"
-        entries = F.map_entries(t.value_col())
-
-        def ent_target(e: Column) -> Target:
-            return Target(col=e["value"], dtype=vt,
-                          ptr=F.concat(t.ptr, F.lit("/"), _ptr_escape_col(e["key"])),
-                          present=F.lit(True), null_is_value=True,
-                          annotatable=False)
-
-        def ent_ok(e: Column) -> Column:
-            return ~sel(e["key"]) | self._node(s, ent_target(e), kp, base, ap).ok
-
-        ok_inner = None
-        fused = False
-        if sel_all:
-            ok_inner = self._items_ok_peephole(
-                s, T.ArrayType(vt, t.dtype.valueContainsNull),
-                F.map_values(t.value_col()))
-        if ok_inner is None:
-            if fuse is not None:
-                fuse.append(ent_ok)
-                fused = True
-            ok_inner = F.forall(entries, ent_ok)
-        ok = F.when(t.present, F.coalesce(ok_inner, F.lit(True))) \
-            .otherwise(F.lit(True))
-
-        def ent_viols(e: Column) -> Column:
-            c = self._node(s, ent_target(e), kp, base, ap)
-            return F.when(sel(e["key"]), _merge_viols(c.viols)).otherwise(_empty_viols())
-
-        leaf = F.when(ok, _empty_viols()).otherwise(F.flatten(F.transform(entries, ent_viols)))
-        node_ok = F.lit(True) if fused else ok
-        if not emit_summary:
-            out = Compiled(ok=node_ok, viols=[leaf])
-        else:
-            summary = _viol(ok, t.ptr, kp_sum, self._akloc(base, ap_sum), kw,
-                            summary_msg, F.lit(None).cast("string"))
-            out = Compiled(ok=node_ok, viols=[leaf, summary])
-        # the keyword's own full predicate, for callers that gate rollup
-        # summary rows on it (always evaluated post-filter, failing rows only)
-        out.kw_ok = ok
-        return out
-
-    def _map_propertynames_kw(self, s: Any, t: Target, kloc: str, base: str,
-                              abs_ptr: str, fuse: list | None = None) -> Compiled:
-        """propertyNames over MapType: every KEY validates against the
-        subschema (V/Applicator.pm:528-548).  With ``fuse``, the key
-        predicate joins the node's single fused map_entries forall (see
-        _map_props_kw) instead of paying its own interpreted pass."""
-        kp = f"{kloc}/propertyNames"
-        ap = f"{abs_ptr}/propertyNames"
-        keys = F.map_keys(t.value_col())
-
-        def name_target(k: Column) -> Target:
-            return Target(col=k, dtype=T.StringType(),
-                          ptr=F.concat(t.ptr, F.lit("/"), _ptr_escape_col(k)),
-                          present=F.lit(True), annotatable=False)
-
-        def name_ok(k: Column) -> Column:
-            return self._node(s, name_target(k), kp, base, ap).ok
-
-        fused = False
-        if fuse is not None:
-            fuse.append(lambda e: name_ok(e["key"]))
-            fused = True
-        ok = F.when(t.present, F.coalesce(F.forall(keys, name_ok), F.lit(True))) \
-            .otherwise(F.lit(True))
-
-        def name_viols(k: Column) -> Column:
-            return _merge_viols(self._node(s, name_target(k), kp, base, ap).viols)
-
-        leaf = F.when(ok, _empty_viols()).otherwise(F.flatten(F.transform(keys, name_viols)))
-        summary = _viol(ok, t.ptr, kp, self._akloc(base, ap), "propertyNames",
-                        "not all property names are valid", F.lit(None).cast("string"))
-        return Compiled(ok=F.lit(True) if fused else ok, viols=[leaf, summary])
-
-    def _items_kw(self, items_schema: Any, t: Target, n_prefix: int,
-                  kloc: str, base: str, abs_ptr: str, kw: str = "items") -> Compiled:
-        """items (2020-12) / additionalItems (≤2019-09): every element
-        after the positional prefix validates against one subschema.
-
-        ok path: F.forall over the slice — stays in whole-stage codegen.
-        Violations: transform-with-index building per-element violation
-        arrays, flattened (only evaluated for rows that fail).
-        """
-        arr = t.value_col()
-        et = t.dtype.elementType
-        kp, ap = f"{kloc}/{kw}", f"{abs_ptr}/{kw}"
-
-        def elem_compiled(x: Column, i: Column) -> Compiled:
-            idx = i + F.lit(n_prefix)
-            elem = Target(col=x, dtype=et,
-                          ptr=F.concat(t.ptr, F.lit("/"), idx.cast("string")),
-                          present=F.lit(True), null_is_value=True,
-                          annotatable=False)
-            return self._node(items_schema, elem, kp, base, ap)
-
-        rest = arr if n_prefix == 0 else F.slice(arr, n_prefix + 1, F.greatest(F.size(arr) - n_prefix, F.lit(0)))
-        ok_inner = self._items_ok_peephole(items_schema, t.dtype, rest)
-        if ok_inner is None:
-            ok_inner = F.forall(rest, lambda x: elem_compiled(x, F.lit(0)).ok)
-        ok = F.when(t.present, F.coalesce(ok_inner, F.lit(True))).otherwise(F.lit(True))
-
-        def viols_of(x: Column, i: Column) -> Column:
-            return _merge_viols(elem_compiled(x, i).viols)
-
-        leaf = F.flatten(F.transform(rest, viols_of))
-        leaf = F.when(ok, _empty_viols()).otherwise(leaf)
-        adj = "additional " if kw == "additionalItems" else ""
-        summary = _viol(ok, t.ptr, kp, self._akloc(base, ap), kw,
-                        f"subschema is not valid against all {adj}items",
-                        F.lit(None).cast("string"))
-        return Compiled(ok=ok, viols=[leaf, summary])
 
     _RANGE_ONLY_KEYS = {"type", "minimum", "maximum", "exclusiveMinimum", "exclusiveMaximum"}
 
@@ -1887,178 +1952,6 @@ class ColumnCompiler:
         for c in conds[1:]:
             ok = ok & c
         return F.coalesce(ok, F.lit(True))
-
-    def _content_kw(self, schema: dict, t: Target, kloc: str, base: str,
-                    abs_ptr: str, E) -> Compiled:
-        """contentEncoding / contentMediaType / contentSchema assertions.
-
-        The reference decodes per row through its media-type registry
-        (V/Content.pm:42-114, decoders U.pm:481-743); here each stage is a
-        whole-column expression: base64 validity by regex+shape, JSON
-        well-formedness via try_parse_json (NULL on bad input), and
-        contentSchema by deriving a Spark struct schema from the subschema's
-        type annotations and recursing on the from_json result."""
-        v = t.value_col().cast("string")
-        out = []
-        oks = []
-        decoded = v
-        enc = schema.get("contentEncoding")
-        if enc is not None:
-            if enc == "base64":
-                ok_enc = v.rlike(r"^[A-Za-z0-9+/\s]*={0,2}\s*$") & \
-                    (F.length(F.regexp_replace(v, r"\s", "")) % 4 == 0)
-                decoded = F.unbase64(F.regexp_replace(v, r"\s", "")).cast("string")
-            elif enc == "base64url":
-                # RFC4648 §5 urlsafe alphabet, padding optional
-                # (Modern.pm:1240-1250): translate -_ → +/ and re-pad to a
-                # multiple of 4 before the JVM decoder
-                s = F.regexp_replace(v, r"\s", "")
-                ok_enc = s.rlike(r"^[A-Za-z0-9_\-]*={0,2}$") & \
-                    (F.length(F.regexp_replace(s, "=", "")) % 4 != 1)
-                tr = F.translate(F.regexp_replace(s, "=", ""), "-_", "+/")
-                padded = F.concat(
-                    tr,
-                    F.when(F.length(tr) % 4 == 2, F.lit("=="))
-                     .when(F.length(tr) % 4 == 3, F.lit("="))
-                     .otherwise(F.lit("")),
-                )
-                decoded = F.unbase64(padded).cast("string")
-            elif enc in ("identity", ""):
-                ok_enc = F.lit(True)
-            else:
-                # unknown encoding: annotation only (reference aborts only
-                # in strict FormatAssertion-style vocab; keep lenient)
-                ok_enc = F.lit(True)
-            c = E("contentEncoding", ok_enc,
-                  f"could not decode {enc} string")
-            out.extend(c.viols)
-            oks.append(c.ok)
-            decoded = F.when(c.ok, decoded)
-        mt = schema.get("contentMediaType")
-        # resolve through the media-type registry: parameter stripping
-        # ("text/plain;charset=utf-8" matches the "text/*" row), wildcard
-        # lookup order exact > suffix > type/* > */*, and custom
-        # register_media_type entries (Utilities.pm:695-742).  Resolution
-        # happens ONCE at compile time — contentMediaType is a schema
-        # literal — so the per-row work stays whole-column expressions.
-        from ..spec.media_types import get_media_type
-
-        entry = get_media_type(mt) if mt is not None else None
-        mtl = entry.handler if entry is not None else None
-        cs_target: Target | None = None
-        if mtl == "json":
-            parsed_ok = F.try_parse_json(decoded).isNotNull() | decoded.isNull()
-            c = E("contentMediaType", parsed_ok,
-                  f"could not decode string as {mt}")
-            out.extend(c.viols)
-            oks.append(c.ok)
-            if "contentSchema" in schema:
-                sub_schema = _spark_schema_from_spec(schema["contentSchema"])
-                if sub_schema is not None:
-                    parsed = F.from_json(decoded, sub_schema)
-                    cs_target = Target(col=parsed, dtype=sub_schema, ptr=t.ptr,
-                                       present=t.present & parsed.isNotNull())
-        elif mtl == "text":
-            # text/* registry entry (U.pm:557-569): any string decodes;
-            # contentSchema sees the decoded STRING.  The charset
-            # parameter participates in MATCHING above; Column-tier
-            # values are already UTF-8 Spark strings, so the decode
-            # itself is identity (the python tier applies charset).
-            cs_target = Target(col=decoded, dtype=T.StringType(), ptr=t.ptr,
-                               present=t.present & decoded.isNotNull())
-        elif mtl == "octet-stream":
-            pass  # opaque bytes — anything decodes (U.pm:548-555)
-        elif mtl == "ndjson":
-            # every non-blank line must parse as JSON (U.pm:600-616)
-            lines = F.filter(F.split(decoded, "\n"),
-                             lambda ln: F.length(F.trim(ln)) > 0)
-            nd_ok = F.forall(lines, lambda ln: F.try_parse_json(ln).isNotNull()) \
-                | decoded.isNull()
-            c = E("contentMediaType", nd_ok, f"could not decode string as {mt}")
-            out.extend(c.viols)
-            oks.append(c.ok)
-        elif mtl == "form":
-            # k=v pairs joined by & (U.pm:571-598); contentSchema sees the
-            # parsed MAP — composing with the MapType object keywords
-            form_ok = decoded.rlike(r"^([^=&]*=[^=&]*(&[^=&]*=[^=&]*)*)?$") \
-                | decoded.isNull()
-            c = E("contentMediaType", form_ok, f"could not decode string as {mt}")
-            out.extend(c.viols)
-            oks.append(c.ok)
-            if "contentSchema" in schema:
-                parsed = F.str_to_map(decoded, F.lit("&"), F.lit("="))
-                cs_target = Target(col=parsed,
-                                   dtype=T.MapType(T.StringType(), T.StringType()),
-                                   ptr=t.ptr,
-                                   present=t.present & c.ok & decoded.isNotNull())
-        # unmatched media types, and custom register_media_type entries
-        # that carry only a python decoder (no Column handler): annotation
-        # only — same as the reference's decoder-less registry rows
-        # (U.pm:668 "return if not $definition->{decode}")
-        if cs_target is not None and "contentSchema" in schema:
-            child = self._node(schema["contentSchema"], cs_target,
-                               f"{kloc}/contentSchema",
-                               base, f"{abs_ptr}/contentSchema")
-            oks.append(child.ok)
-            out.extend(child.viols)
-        ok_all = F.lit(True)
-        for o in oks:
-            ok_all = ok_all & o
-        return Compiled(ok=ok_all, viols=out)
-
-    def _contains_kw(self, schema: dict, t: Target, kloc: str, base: str, abs_ptr: str) -> Compiled:
-        arr = t.value_col()
-        et = t.dtype.elementType
-        contains_schema = schema.get("contains", True)
-
-        def elem_ok(x: Column) -> Column:
-            elem = Target(col=x, dtype=et, ptr=t.ptr, present=F.lit(True),
-                          null_is_value=True, annotatable=False)
-            return self._node(contains_schema, elem, f"{kloc}/contains", base, f"{abs_ptr}/contains").ok
-
-        matches = F.size(F.filter(arr, elem_ok))
-        min_c = schema.get("minContains", 1)
-        max_c = schema.get("maxContains")
-        out_oks = []
-        out_viols = []
-
-        def loc(kw: str) -> tuple[str, str]:
-            return f"{kloc}/{kw}", self._akloc(base, f"{abs_ptr}/{kw}")
-
-        cov_items: list = []
-        if "contains" in schema:
-            if min_c == 0:
-                ok = F.lit(True)
-            else:
-                ok = F.when(t.present, matches >= 1).otherwise(F.lit(True))
-            out_oks.append(ok)
-            kp, ap = loc("contains")
-            out_viols.append(_viol(ok, t.ptr, kp, ap, "contains",
-                                   "subschema is not valid against any item", F.lit(None).cast("string")))
-            # matching ELEMENTS count as evaluated for unevaluatedItems
-            # (the reference's matched-index annotation,
-            # V/Applicator.pm:360-381 + V/Unevaluated.pm:41-98), guarded on
-            # the contains keyword succeeding (failed-subschema annotations
-            # are discarded)
-            cov_items.append((ok, ("epred", contains_schema)))
-        if max_c is not None:
-            ok = F.when(t.present, matches <= max_c).otherwise(F.lit(True))
-            out_oks.append(ok)
-            kp, ap = loc("maxContains")
-            out_viols.append(_viol(ok, t.ptr, kp, ap, "maxContains",
-                                   f"array contains more than {max_c} matching item{'s' if max_c != 1 else ''}",
-                                   F.lit(None).cast("string")))
-        if "minContains" in schema and "contains" in schema and min_c > 1:
-            ok = F.when(t.present, matches >= min_c).otherwise(F.lit(True))
-            out_oks.append(ok)
-            kp, ap = loc("minContains")
-            out_viols.append(_viol(ok, t.ptr, kp, ap, "minContains",
-                                   f"array contains fewer than {min_c} matching item{'s' if min_c != 1 else ''}",
-                                   F.lit(None).cast("string")))
-        ok_all = F.lit(True)
-        for o in out_oks:
-            ok_all = ok_all & o
-        return Compiled(ok=ok_all, viols=out_viols, cov_items=cov_items)
 
 
 @dataclass

@@ -176,9 +176,11 @@ def unimax_allocation(
     (caps ascending ⇒ the capped set is a prefix), and every uncapped
     source receives the equal share (B - Σ_capped c) / (S - K).
 
-    All sums are over BIGINT caps, so ranks, prefix sums and the capped
-    test reproduce bit-for-bit in any engine; the only doubles are the
-    two final divisions (identical integer operands both sides).  If the
+    All sums are over BIGINT caps, so ranks and prefix sums reproduce
+    bit-for-bit in any engine.  The capped test is a double division and
+    comparison, as are the two final divisions; they agree across engines
+    because both compute the same IEEE quotient from identical integer
+    operands.  If the
     budget exceeds Σ c_s every source is capped and `alloc` = its cap.
 
     The budget is either an absolute `budget_tokens` int, or

@@ -26,15 +26,16 @@ through TableIO when a catalog exists):
   files.  Global checks that need all rows (KS drift per source, non-id
   uniqueness) write a second wave, ``<run_id>-g``, under bucket = -1;
 - right after a wave's write commits, its lineage rows (run_id = the wave
-  id, snapshot, fingerprint, bucket, status, doc_count, error_count) are
-  appended, so a crash redoes only the waves without lineage.  A bucket's
-  live wave is the one named by its latest done lineage row; readers read
-  exactly those directories, by path, and a run deletes the wave
-  directories no such row names (crashed or superseded waves).  A wave is
-  live for all of its buckets or none: it holds every bucket pending at
-  its start, so a later run either redoes all of them (``resume=False``)
-  or none (resume skips them).  Old ``fp=<fp>/bucket=<b>/`` workdirs still
-  read and resume;
+  id, snapshot, fingerprint, bucket, status, doc_count, error_count,
+  n_buckets) are appended, so a crash redoes only the waves without
+  lineage.  A bucket's live wave is the one named by its latest done
+  lineage row written under the run's bucket count; readers read exactly
+  those directories, by path, and a run deletes the wave directories no
+  latest row of any bucket count names (crashed or superseded waves).  A
+  wave is live for all of its buckets or none: it holds every bucket
+  pending at its start, so a later run either redoes all of them
+  (``resume=False``) or none (resume skips them).  Old
+  ``fp=<fp>/bucket=<b>/`` workdirs still read and resume;
 - a wave's violations are counted on the driver from its files with pyarrow,
   as (bucket, keyword, keyword_location), and the input once, before the
   waves, as (bucket, n_tok histogram bin).  Every other table derives from
@@ -87,6 +88,10 @@ LINEAGE_SCHEMA = (
     "bucket int, status string, doc_count long, error_count long, "
     "updated_at double"
 )
+# rows also record the bucket count of the run that wrote them: a bucket id
+# names rows only under the count that hashed them.  Lineage written before
+# the column existed reads it as NULL, which matches any count.
+LINEAGE_SCHEMA_NB = LINEAGE_SCHEMA + ", n_buckets int"
 HISTOGRAM_SCHEMA = "bucket long, lo double, hi double, cnt long"
 HISTOGRAM_BINS = 32
 PARTITION_RESULTS_SCHEMA = (
@@ -167,22 +172,32 @@ class ValidationPipeline:
         return os.path.join(self.workdir, "lineage")
 
     def done_buckets(self, snapshot_id: str, fingerprint: str) -> set[int]:
-        """Buckets whose lineage marks them done for (snapshot, spec)."""
-        return {b for s, b in self._latest_waves(fingerprint) if s == snapshot_id}
+        """Buckets whose lineage marks them done for (snapshot, spec) under
+        this pipeline's bucket count."""
+        return set(self._live(self._latest_waves(fingerprint), snapshot_id))
 
-    def _latest_waves(self, fingerprint: str) -> dict[tuple[str, int], str]:
-        """(snapshot_id, bucket) → the wave id (lineage ``run_id``) of the
-        latest done lineage row for this spec: the wave that holds that
-        bucket's live violations."""
+    def _latest_waves(self, fingerprint: str) -> dict[tuple[str, int | None, int], str]:
+        """(snapshot_id, bucket count, bucket) → the wave id (lineage
+        ``run_id``) of the latest done lineage row for this spec: the wave
+        that holds that bucket's live violations under that count (None:
+        a row written before lineage recorded the count)."""
         p = self._lineage_path()
         if not os.path.isdir(p):
             return {}
-        rows = pads.dataset(p, schema=_arrow_schema(LINEAGE_SCHEMA), format="parquet") \
+        rows = pads.dataset(p, schema=_arrow_schema(LINEAGE_SCHEMA_NB), format="parquet") \
             .to_table(columns=["run_id", "snapshot_id", "spec_fingerprint", "bucket",
-                               "status", "updated_at"]).to_pylist()
-        return {(r["snapshot_id"], r["bucket"]): r["run_id"]
+                               "status", "updated_at", "n_buckets"]).to_pylist()
+        return {(r["snapshot_id"], r["n_buckets"], r["bucket"]): r["run_id"]
                 for r in sorted(rows, key=lambda r: r["updated_at"] or 0.0)
                 if (r["spec_fingerprint"], r["status"]) == (fingerprint, "done")}
+
+    def _live(self, waves: dict, snapshot_id: str) -> dict[int, str]:
+        """bucket → live wave of ``snapshot_id`` under this pipeline's
+        bucket count.  A row without a count matches any count; a row
+        with this count is newer and wins over it."""
+        newest_last = sorted(waves.items(), key=lambda kv: kv[0][1] is not None)
+        return {b: w for (s, n, b), w in newest_last
+                if s == snapshot_id and n in (None, self.n_buckets)}
 
     # -- per-bucket row-local + bucket-safe set checks ----------------------
 
@@ -341,7 +356,7 @@ class ValidationPipeline:
                         self.n_buckets, self.id_col, self.drift_bins,
                         self.drift_hi)
         latest = self._latest_waves(fingerprint)
-        done = {b for s, b in latest if s == snapshot_id} if resume else set()
+        done = set(self._live(latest, snapshot_id)) if resume else set()
         pending = [b for b in range(self.n_buckets) if b not in done]
         redo_global = bool(pending) or -1 not in done
         fp_dir = os.path.join(self.workdir, "violations", f"fp={fingerprint}")
@@ -373,10 +388,10 @@ class ValidationPipeline:
             for (b, _, _), n in counted[path].items():
                 errors[b] += n
             now = time.time()
-            _write_driver_table(self._lineage_path(), LINEAGE_SCHEMA, [
-                (wave_id, snapshot_id, fingerprint, b, "done", doc_counts[b], errors[b], now)
-                for b in buckets], append=True)
-            latest.update({(snapshot_id, b): wave_id for b in buckets})
+            _write_driver_table(self._lineage_path(), LINEAGE_SCHEMA_NB, [
+                (wave_id, snapshot_id, fingerprint, b, "done", doc_counts[b], errors[b], now,
+                 self.n_buckets) for b in buckets], append=True)
+            latest.update({(snapshot_id, self.n_buckets, b): wave_id for b in buckets})
 
         # the pending buckets are one wave: each wave scans the whole input,
         # so splitting them would multiply the scans
@@ -394,16 +409,17 @@ class ValidationPipeline:
         # done lineage row; a live wave is live for all of its buckets, so
         # it is read whole.  A run_id without "-" names a run that wrote the
         # old fp=<fp>/bucket=<b>/ layout, whose files hold no bucket column.
-        live = {b: w for (s, b), w in latest.items() if s == snapshot_id}
+        live = self._live(latest, snapshot_id)
         dirs = {os.path.join(fp_dir, f"wave={w}" if "-" in w else f"bucket={b}"):
                 None if "-" in w else b for b, w in live.items()}
         dirs = {p: b for p, b in dirs.items() if os.path.isdir(p)}
         rollup: Counter = Counter()
         for p, b in dirs.items():
             rollup.update(counted[p] if p in counted else _count_violations(p, b))
-        # delete what no latest done lineage row (of any snapshot of this
-        # spec) names: crashed waves' orphans, waves a later run superseded
-        # and old bucket= directories this snapshot has rewritten as waves
+        # delete what no latest done lineage row (of any snapshot and
+        # bucket count of this spec) names: crashed waves' orphans, waves a
+        # later run superseded and old bucket= directories this snapshot
+        # has rewritten as waves
         named = set(latest.values())
         for name in os.listdir(fp_dir) if os.path.isdir(fp_dir) else ():
             key, _, val = name.partition("=")

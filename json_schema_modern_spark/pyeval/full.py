@@ -37,36 +37,12 @@ from json_schema_modern_spark.functions.formats_py import check_format
 from json_schema_modern_spark.pyeval.evaluator import _deep_eq, _type_matches, json_type
 from json_schema_modern_spark.spec.resolver import (
     _DIALECT_RANK,
+    STANDARD_DIALECTS,
     SchemaRegistry,
     SpecError,
     json_pointer_escape,
+    metaschema_error,
 )
-
-STANDARD_DIALECTS = {
-    "https://json-schema.org/draft/2020-12/schema",
-    "https://json-schema.org/draft/2019-09/schema",
-    "http://json-schema.org/draft-07/schema",
-    "http://json-schema.org/draft-07/schema#",
-    "http://json-schema.org/draft-06/schema",
-    "http://json-schema.org/draft-06/schema#",
-    "http://json-schema.org/draft-04/schema",
-    "http://json-schema.org/draft-04/schema#",
-}
-
-VOCABS_BY_DIALECT = {
-    "2020-12": {
-        f"https://json-schema.org/draft/2020-12/vocab/{n}"
-        for n in ("core", "applicator", "validation", "unevaluated",
-                  "format-annotation", "format-assertion", "content",
-                  "meta-data")
-    },
-    "2019-09": {
-        f"https://json-schema.org/draft/2019-09/vocab/{n}"
-        for n in ("core", "applicator", "validation", "format", "content",
-                  "meta-data")
-    },
-}
-VOCABS_2020_12 = VOCABS_BY_DIALECT["2020-12"]
 
 _MAX_DEPTH = 256
 
@@ -193,8 +169,6 @@ class PyEvaluator:
     def _metaschema_error(self, meta_uri: str, base: str) -> str | None:
         # shared with the Spark compiler (spec.resolver.metaschema_error);
         # this wrapper only adds the per-evaluator memo
-        from json_schema_modern_spark.spec.resolver import metaschema_error
-
         key = urldefrag(urljoin(base, meta_uri))[0]
         if meta_uri in STANDARD_DIALECTS or key in STANDARD_DIALECTS:
             return None

@@ -34,25 +34,6 @@ __all__ = [
     "unregister_vocabulary", "registered_uris", "registered_keywords",
 ]
 
-# keywords owned by the built-in vocabularies may not be overridden
-# (the reference dies on vocabulary keyword collisions at registration)
-_BUILTIN = {
-    "$schema", "$id", "$anchor", "$dynamicAnchor", "$ref", "$dynamicRef",
-    "$recursiveRef", "$recursiveAnchor", "$vocabulary", "$defs", "$comment",
-    "definitions", "id",
-    "type", "enum", "const", "multipleOf", "maximum", "exclusiveMaximum",
-    "minimum", "exclusiveMinimum", "maxLength", "minLength", "pattern",
-    "maxItems", "minItems", "uniqueItems", "maxContains", "minContains",
-    "maxProperties", "minProperties", "required", "dependentRequired",
-    "allOf", "anyOf", "oneOf", "not", "if", "then", "else",
-    "dependentSchemas", "dependencies", "prefixItems", "items",
-    "additionalItems", "contains", "properties", "patternProperties",
-    "additionalProperties", "propertyNames", "unevaluatedItems",
-    "unevaluatedProperties", "format", "contentEncoding",
-    "contentMediaType", "contentSchema", "title", "description", "default",
-    "deprecated", "readOnly", "writeOnly", "examples",
-}
-
 
 @dataclass(frozen=True)
 class KeywordSpec:
@@ -85,9 +66,15 @@ def register_vocabulary(vocab: CustomVocabulary) -> None:
     """Register a custom vocabulary (reference: add_vocabulary,
     Modern.pm:940-956).  Its keywords become known to strict mode, its URI
     becomes a supported REQUIRED ``$vocabulary`` entry, and its compile /
-    evaluate hooks run in evaluation_order after the built-in keywords."""
+    evaluate hooks run in evaluation_order after the built-in keywords.
+    Keywords of the compiler's keyword table may not be overridden (the
+    reference dies on vocabulary keyword collisions at registration)."""
+    from json_schema_modern_spark.compiler.column_compiler import (
+        BUILTIN_KEYWORDS,
+    )
+
     for ks in vocab.keywords:
-        if ks.name in _BUILTIN:
+        if ks.name in BUILTIN_KEYWORDS:
             raise ValueError(
                 f"keyword {ks.name!r} is owned by a built-in vocabulary")
         for other_uri, other in _REGISTRY.items():

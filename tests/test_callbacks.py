@@ -192,6 +192,27 @@ def test_compile_callbacks_per_keyword_location(spark):
     assert ("required", "/required") in seen
 
 
+def test_compile_callbacks_dependencies_at_own_location(spark):
+    """A draft-7 ``dependencies`` compiles through the dependentRequired /
+    dependentSchemas handlers, but only its own keyword and location fire:
+    the schema has no dependent* keyword to report."""
+    seen = []
+
+    def cb(kw, kloc, akloc, value):
+        seen.append((kw, kloc))
+
+    schema = T.StructType([T.StructField("a", T.LongType()),
+                           T.StructField("b", T.LongType())])
+    compile_spec(
+        {"$schema": "http://json-schema.org/draft-07/schema#",
+         "dependencies": {"a": ["b"], "b": {"required": ["a"]}}},
+        schema,
+        CompileOptions(callbacks={k: cb for k in (
+            "dependencies", "dependentRequired", "dependentSchemas")}),
+    )
+    assert seen == [("dependencies", "/dependencies")]
+
+
 def test_draft4_boolean_exclusive_callbacks_fire():
     """Draft-4 boolean exclusiveMinimum/exclusiveMaximum are modifiers of
     minimum/maximum, but tooling hooked on those keywords must still see

@@ -135,3 +135,18 @@ def test_ks_drift_matches_python_binned_ks(spark):
         assert math.isclose(r.ks_d, d, abs_tol=1e-9), (g, r.ks_d, d)
         assert math.isclose(r.threshold, thr, abs_tol=1e-9)
         assert r.drifted == (d > thr)
+
+
+def test_drift_skips_nan_like_null(spark):
+    """KS and PSI drift skip NaN values the way they skip NULLs
+    (docs/DEVIATIONS.md): adding NaN rows leaves every result row as is."""
+    from json_schema_modern_spark.operators.drift import ks_drift, psi_drift
+
+    base = [("a", float(v)) for v in (0, 1, 1, 2, 3)] \
+        + [("b", float(v)) for v in (5, 6, 7, 7)]
+    with_nan = base + [("a", float("nan")), ("b", float("nan"))]
+    for drift in (ks_drift, psi_drift):
+        def result(rows):
+            df = spark.createDataFrame(rows, "src string, v double")
+            return sorted(tuple(r) for r in drift(df, "v", "src", 0.0, 10.0, 10).collect())
+        assert result(with_nan) == result(base), drift.__name__

@@ -215,6 +215,18 @@ def test_vocabulary_enforcement(spark):
     bad = {"$vocabulary": {"https://example.org/custom": True}, "type": "object"}
     with pytest.raises(SpecError, match="vocabulary"):
         Validator(bad).validate(df, id_cols=[])
+    # no draft defines a 2020-12 "format" vocabulary (2019-09 has one;
+    # 2020-12 splits it into format-annotation / format-assertion)
+    for vocab, known in (("2020-12/vocab/format", False),
+                         ("2019-09/vocab/format", True),
+                         ("2020-12/vocab/format-assertion", True)):
+        spec = {"$vocabulary": {
+            f"https://json-schema.org/draft/{vocab}": True}, "type": "object"}
+        if known:
+            assert Validator(spec).validate(df, id_cols=[]).flag() is True
+        else:
+            with pytest.raises(SpecError, match="not supported"):
+                Validator(spec).validate(df, id_cols=[])
 
 
 def test_traverse_shape_errors(spark):
@@ -251,6 +263,10 @@ def test_strict_unknown_keyword(spark):
     ok = {"type": "object", "x-unique": ["v"]}
     assert Validator(ok, CompileOptions(strict=True)) \
         .validate(df, id_cols=[]).flag() is True
+    # not a keyword of any draft
+    with pytest.raises(SpecError, match="format_annotation"):
+        Validator({"type": "object", "format_annotation": "email"},
+                  CompileOptions(strict=True)).validate(df, id_cols=[])
 
 
 def test_uneval_items_after_array_items(spark):
@@ -285,6 +301,20 @@ def test_draft7_ref_masks_siblings(spark):
                                              "minimum": 100}}})
     bad = {r.v for r in modern.validate(df, id_cols=["v"]).violations.collect()}
     assert bad == {5}                              # sibling minimum applies
+
+
+def test_draft7_dependencies_report_dispatched_location(spark):
+    """Draft-7 `dependencies` compiles as dependentRequired (array form)
+    and dependentSchemas (schema form), and its violations report at
+    those keywords' locations (docs/DEVIATIONS.md)."""
+    spec = {"$schema": D7, "type": "object",
+            "dependencies": {"a": ["b"], "b": {"required": ["c"]}}}
+    df = spark.createDataFrame([(1, 1, None, None), (2, None, 2, None)],
+                               "id bigint, a bigint, b bigint, c bigint")
+    rows = Validator(spec).validate(df, id_cols=["id"]).violations.collect()
+    assert sorted((r.id, r.keyword, r.keyword_location) for r in rows) == [
+        (1, "dependentRequired", "/dependentRequired"),
+        (2, "required", "/dependentSchemas/b/required")]
 
 
 def test_nested_dependent_kw_not_enforced_in_draft7(spark):

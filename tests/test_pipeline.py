@@ -314,6 +314,29 @@ def test_crash_resume_reruns_only_unfinished_waves(
     assert set(os.listdir(_fp_dir(wd))) == {f"wave={w}" for w in _live_waves(wd)}
 
 
+def test_resume_under_another_bucket_count(spark, corrupt, tmp_path):
+    """A bucket id names rows only under the bucket count that hashed
+    them: a resume with another count redoes every bucket and reads none
+    of the other count's waves, which stay live for a run with their own
+    count."""
+    sd = source_dict_df(spark)
+    want = ValidationPipeline(SPEC, workdir=str(tmp_path / "fresh"), n_buckets=8).run(
+        spark, corrupt, source_dict=sd, snapshot_id="s")
+    wd = str(tmp_path / "wd")
+    four = ValidationPipeline(SPEC, workdir=wd, n_buckets=4).run(
+        spark, corrupt, source_dict=sd, snapshot_id="s")
+    four_rows = _viol_rows(four.violations)
+    res = ValidationPipeline(SPEC, workdir=wd, n_buckets=8).run(
+        spark, corrupt, source_dict=sd, snapshot_id="s", resume=True)
+    assert res.buckets_done == 8
+    assert _viol_rows(res.violations) == _viol_rows(want.violations)
+    assert res.counts == want.counts
+    again = ValidationPipeline(SPEC, workdir=wd, n_buckets=4).run(
+        spark, corrupt, source_dict=sd, snapshot_id="s")
+    assert again.buckets_done == 0 and again.counts == four.counts
+    assert _viol_rows(again.violations) == four_rows
+
+
 def test_orphan_wave_deleted_and_never_read(spark, corrupt, tmp_path):
     import shutil
 

@@ -53,6 +53,36 @@ def test_builtin_keyword_collision_rejected():
             keywords=(KeywordSpec(name="maximum"),)))
 
 
+def test_every_table_keyword_is_builtin(spark):
+    """The compiler's keyword table is the one inventory: registration
+    refuses each of its keywords, and strict mode accepts each one."""
+    import pyspark.sql.types as T
+
+    from json_schema_modern_spark.compiler.column_compiler import (
+        BUILTIN_KEYWORDS,
+    )
+
+    sample = {
+        "$schema": "https://json-schema.org/draft/2020-12/schema",
+        "$id": "https://example.com/s", "id": "s", "$anchor": "a",
+        "$dynamicAnchor": "a", "$ref": "#/$defs/none",
+        "$dynamicRef": "#/$defs/none", "$recursiveRef": "#",
+        "type": "object", "enum": [1], "pattern": "x", "format": "email",
+        "contentEncoding": "base64", "contentMediaType": "application/json",
+        "required": ["v"], "uniqueItems": True, "allOf": [{}], "anyOf": [{}],
+        "oneOf": [{}], "prefixItems": [{}],
+    }
+    schema = T.StructType([T.StructField("v", T.LongType())])
+    assert len(BUILTIN_KEYWORDS) > 60
+    for kw in sorted(BUILTIN_KEYWORDS):
+        with pytest.raises(ValueError, match="built-in"):
+            register_vocabulary(CustomVocabulary(
+                uri="https://example.com/vocab/bad",
+                keywords=(KeywordSpec(name=kw),)))
+        value = sample.get(kw, 1 if kw.startswith(("max", "min", "excl")) else {})
+        compile_spec({kw: value}, schema, CompileOptions(strict=True))
+
+
 def test_cross_vocabulary_collision_rejected(even_vocab):
     with pytest.raises(ValueError, match="already registered"):
         register_vocabulary(CustomVocabulary(
