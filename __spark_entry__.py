@@ -3182,10 +3182,12 @@ FROM m
         "ELSE CAST(0.0 AS DOUBLE) END AS dup_frac FROM g"
     )
     # cohort retention: same timezone-free epoch-day bucketing as the
-    # windowed counts (floor(epoch)/86400), distinct (user, day) spine
+    # windowed counts (floor(epoch)/86400), distinct (user, day) spine;
+    # events with a NULL user or ts are dropped, as the operator drops them
     o["events_retention"] = (
         "WITH act AS (SELECT DISTINCT user_id AS u, "
-        "CAST(floor(floor(epoch(ts)) / 86400) AS BIGINT) AS d FROM events), "
+        "CAST(floor(floor(epoch(ts)) / 86400) AS BIGINT) AS d FROM events "
+        "WHERE ts IS NOT NULL AND user_id IS NOT NULL), "
         "f AS (SELECT u, min(d) AS cohort_day FROM act GROUP BY 1), "
         "cells AS (SELECT cohort_day, d - cohort_day AS day_offset, "
         "count(*) AS n_users FROM act JOIN f USING (u) GROUP BY 1, 2), "

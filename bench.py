@@ -25,12 +25,14 @@ import subprocess
 import sys
 import time
 
+from json_schema_modern_spark.session import default_cpus
+
 SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-# Default 8, not 32: this sandbox VM's effective parallel capacity is ~8
-# threads (measured: a 32-process CPU burn runs at 0.62 efficiency, and a
-# 32-thread JVM collapses into 70-90% kernel time — see BASELINE.md
-# "hardware ceiling").  An explicit SPARK_GRAFT_CPUS always wins.
-CPUS = int(os.environ.get("SPARK_GRAFT_CPUS", "8"))
+# The CPUs this process may run on (session.default_cpus); an explicit
+# SPARK_GRAFT_CPUS always wins.  On a many-core VM whose parallel capacity
+# is below its CPU count, set it (a 32-thread JVM there collapsed into
+# 70-90% kernel time — see BASELINE.md "hardware ceiling").
+CPUS = default_cpus()
 # 2M rows, not 200k: at 200k the per-job fixed costs (scheduling, codegen
 # dispatch, shuffle setup) dominate and the recorded seq/s understates the
 # engine ~10× (measured: 200k → ~13-19k seq/s, 2M → 139-255k seq/s).

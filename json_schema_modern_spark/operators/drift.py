@@ -7,12 +7,18 @@ critical value c(α)·sqrt((n+m)/(n·m)).
 
 Two implementations:
 
-- `ks_drift` (default, pure DataFrame): values are first binned
-  (width_bucket, B buckets) → ONE groupBy(source, bucket) count, gathered
-  into per-source grids over the pooled buckets → one running-sum fold per
-  source.  The input is scanned once and every shuffle carries at most
-  |groups|×(B+2) rows regardless of input size — this is the 100 TB path.
-  For an integer column like n_tok∈[1,2048], binning at B=max is EXACT.
+- `ks_drift` (default): values are first binned (width_bucket, B buckets)
+  → ONE groupBy(group, bin) count (`drift_counts`), whose at most
+  |groups|×(B+2) rows are collected → one running-sum fold per group, on
+  the driver, in plain Python.  The input is scanned once and the shuffle
+  carries at most |groups|×(B+2) rows regardless of input size — this is
+  the 100 TB path.  For an integer column like n_tok∈[1,2048], binning at
+  B=max is EXACT.  `ks_drift` and `psi_drift` run their aggregate when
+  called and return a local DataFrame; `drift_table` also folds counts
+  another aggregate already made (the checkpointed pipeline counts them
+  on its one input aggregate).  The fold's rounding and threshold
+  comparisons are Spark expressions projected over the folded rows, which
+  Spark evaluates on the driver without a job.
 - `ks_drift_pandas` (applyInPandas): the reference-shape implementation on
   raw values per group, used to cross-check the binned one and as the
   engine's demonstration of a custom grouped aggregate (vectorized Arrow
@@ -22,10 +28,12 @@ Two implementations:
 from __future__ import annotations
 
 import math
+from collections import Counter
 
 import pandas as pd
-from pyspark.sql import DataFrame, Window
+from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
+from pyspark.sql import types as T
 
 from json_schema_modern_spark.operators.stats import histogram_bin
 
@@ -39,45 +47,96 @@ def _c_alpha(alpha: float) -> float:
     return math.sqrt(-0.5 * math.log(alpha / 2.0))
 
 
-def _drift_stats(df: DataFrame, value_col: str, group_col: str, lo: float,
-                 hi: float, n_buckets: int, stat: str) -> DataFrame:
-    """(grp, n_grp, n_glob, stat) per group, from the ONE aggregate every
-    binned drift test reads.
-
-    The input is scanned once: (grp, bucket) counts → per-bucket cells →
-    one row holding every pooled bucket; each shuffle carries at most
-    |groups|×(B+2) rows regardless of input size.  On that row each group
-    gets its grid — every pooled bucket in bucket order as
-    struct(bucket, cnt, gcnt), its own count (0 where it has none) next to
-    the pooled one — and ``stat``, a SQL expression over ``s.grid``,
-    ``s.n_grp`` and ``s.n_glob``, folds it.  Everything per group happens
-    inside that one projection, ahead of the explode: Catalyst inlines a
-    projection into the filters pushed through it, and a fold re-deriving
-    its inputs on every step would cost O(B²).  (SQL text, not nested
-    Python lambdas: building those costs a py4j round trip per node.)
-    Values width_bucket cannot place (NULL, NaN) are skipped; a NULL group
-    counts toward the pool but gets no row of its own."""
-    pooled = (
+def drift_counts(df: DataFrame, value_col: str, group_col: str, lo: float,
+                 hi: float, n_buckets: int) -> DataFrame:
+    """(grp, bin, cnt): the one aggregate every binned drift test reads —
+    one scan, one map-side-combined groupBy, at most |groups|×(B+2) rows
+    out regardless of input size.  Values width_bucket cannot place (NULL,
+    NaN) are skipped; a NULL group is counted (it pools)."""
+    return (
         df.select(F.col(group_col).alias("grp"),
-                  histogram_bin(value_col, lo, hi, n_buckets).alias("bucket"))
-        .where(F.col("bucket").isNotNull())
-        .groupBy("grp", "bucket")
+                  histogram_bin(value_col, lo, hi, n_buckets).alias("bin"))
+        .where(F.col("bin").isNotNull())
+        .groupBy("grp", "bin")
         .agg(F.count(F.lit(1)).alias("cnt"))
-        .groupBy("bucket")
-        .agg(F.sum("cnt").alias("gcnt"), F.collect_list(F.struct("grp", "cnt")).alias("cells"))
-        .agg(F.array_sort(F.collect_list(F.struct("bucket", "gcnt", "cells"))).alias("pooled"))
     )
-    grids = """transform(
-        array_distinct(filter(flatten(transform(pooled, p -> p.cells.grp)), g -> g IS NOT NULL)),
-        g -> named_struct('grp', g, 'grid', transform(pooled, p -> named_struct(
-            'bucket', p.bucket,
-            'cnt', aggregate(filter(p.cells, c -> c.grp = g), 0L, (acc, c) -> acc + c.cnt),
-            'gcnt', p.gcnt))))"""
-    sized = f"""transform({grids}, s -> named_struct('grp', s.grp, 'grid', s.grid,
-        'n_grp', aggregate(s.grid, 0L, (acc, x) -> acc + x.cnt),
-        'n_glob', aggregate(s.grid, 0L, (acc, x) -> acc + x.gcnt)))"""
-    return pooled.select(F.expr(f"""inline(transform({sized}, s -> named_struct(
-        'grp', s.grp, 'n_grp', s.n_grp, 'n_glob', s.n_glob, 'stat', {stat})))"""))
+
+
+def _largest_gap(grid: list[int], pool: list[int], n_grp: int, n_glob: int) -> float:
+    """KS D: both running sums and the largest ECDF gap seen so far."""
+    cum_grp = cum_glob = 0
+    d = 0.0
+    for cnt, gcnt in zip(grid, pool):
+        cum_grp += cnt
+        cum_glob += gcnt
+        d = max(d, abs(cum_grp / n_grp - cum_glob / n_glob))
+    return d
+
+
+def _psi(grid: list[int], pool: list[int], n_grp: int, n_glob: int) -> float:
+    """PSI with +0.5 Laplace smoothing per pooled bin, summed in bin order:
+    float addition is not associative, so the order is part of the value."""
+    half = 0.5 * len(grid)
+    acc = 0.0
+    for cnt, gcnt in zip(grid, pool):
+        p = (cnt + 0.5) / (n_grp + half)
+        q = (gcnt + 0.5) / (n_glob + half)
+        acc = acc + (p - q) * math.log(p / q)
+    return acc
+
+
+def _fold(spark: SparkSession, counts: dict, group_type: T.DataType,
+          stat) -> DataFrame:
+    """(grp, n_grp, n_glob, stat) per non-NULL group from the counted
+    (grp, bin) → cnt cells, folded on the driver (at most |groups|×(B+2)
+    cells).  Each group's grid is every pooled bin in bin order, its own
+    count 0 where it has none; ``stat(grid, pool, n_grp, n_glob)`` folds
+    it.  The rows come back as a local DataFrame, so the rounding and
+    comparisons projected over it run in Spark on the driver, without a
+    job."""
+    pooled: Counter = Counter()
+    for (_, b), n in counts.items():
+        pooled[b] += n
+    bins = sorted(pooled)
+    pool = [pooled[b] for b in bins]
+    n_glob = sum(pool)
+    groups = sorted({g for g, _ in counts if g is not None})
+    # an inline table is a local relation: projections over it fold on the
+    # driver.  A typed NULL row (filtered out) types the empty case; the
+    # stat travels as its shortest round-trip decimal string, exactly.
+    gtype = group_type.simpleString()
+    cells = [f"(CAST(NULL AS {gtype}), 0L, 0L, 0D)"]
+    for i, g in enumerate(groups):
+        grid = [counts.get((g, b), 0) for b in bins]
+        n_grp = sum(grid)
+        cells.append(f"(CAST(:g{i} AS {gtype}), {n_grp}L, {n_glob}L, "
+                     f"CAST('{stat(grid, pool, n_grp, n_glob)!r}' AS DOUBLE))")
+    return spark.sql(
+        f"SELECT * FROM VALUES {', '.join(cells)} AS t(grp, n_grp, n_glob, stat) "
+        "WHERE grp IS NOT NULL", args={f"g{i}": g for i, g in enumerate(groups)})
+
+
+def drift_table(df: DataFrame, value_col: str, group_col: str, lo: float, hi: float,
+                n_buckets: int, test: str = "ks", alpha: float = 0.01,
+                threshold: float = 0.2, cells: dict | None = None) -> DataFrame:
+    """The ``ks_drift`` (``test="ks"``) or ``psi_drift`` table.  ``cells``:
+    the (grp, bin) → cnt counts of ``drift_counts`` when another aggregate
+    already made them; by default the aggregate runs here."""
+    if cells is None:
+        cells = {(r.grp, r.bin): r.cnt for r in
+                 drift_counts(df, value_col, group_col, lo, hi, n_buckets).collect()}
+    stats = _fold(df.sparkSession, cells, df.select(group_col).schema[0].dataType,
+                  _psi if test == "psi" else _largest_gap)
+    sizes = [F.col("grp").alias(group_col), F.col("n_grp").alias("n_group"),
+             F.col("n_glob").alias("n_global")]
+    if test == "psi":
+        return stats.select(*sizes, F.round(F.round("stat", 9), 6).alias("psi"),
+                            (F.col("stat") > threshold).alias("drifted"))
+    crit = F.lit(_c_alpha(alpha)) * F.sqrt(
+        (F.col("n_grp") + F.col("n_glob")) / (F.col("n_grp") * F.col("n_glob")))
+    return stats.select(*sizes, F.round("stat", 9).alias("ks_d"),
+                        F.round(crit, 9).alias("threshold"),
+                        (F.col("stat") > crit).alias("drifted"))
 
 
 def ks_drift(
@@ -93,31 +152,10 @@ def ks_drift(
 
     Each group is compared against the pooled global distribution: one
     fold over the group's grid carries both running sums and the largest
-    ECDF gap seen so far.
+    ECDF gap seen so far.  Runs the ``drift_counts`` aggregate when
+    called; the result is a local DataFrame.
     """
-    largest_gap = """aggregate(s.grid,
-        named_struct('cum_grp', 0L, 'cum_glob', 0L, 'd', 0D),
-        (acc, x) -> named_struct(
-            'cum_grp', acc.cum_grp + x.cnt,
-            'cum_glob', acc.cum_glob + x.gcnt,
-            'd', greatest(acc.d, abs((acc.cum_grp + x.cnt) / s.n_grp
-                                     - (acc.cum_glob + x.gcnt) / s.n_glob)))).d"""
-    stats = _drift_stats(df, value_col, group_col, lo, hi, n_buckets, largest_gap) \
-        .withColumnRenamed("stat", "ks_d")
-    c = _c_alpha(alpha)
-    return stats.select(
-        F.col("grp").alias(group_col),
-        F.col("n_grp").alias("n_group"),
-        F.col("n_glob").alias("n_global"),
-        F.round("ks_d", 9).alias("ks_d"),
-        F.round(
-            F.lit(c) * F.sqrt((F.col("n_grp") + F.col("n_glob")) / (F.col("n_grp") * F.col("n_glob"))), 9
-        ).alias("threshold"),
-        (
-            F.col("ks_d")
-            > F.lit(c) * F.sqrt((F.col("n_grp") + F.col("n_glob")) / (F.col("n_grp") * F.col("n_glob")))
-        ).alias("drifted"),
-    )
+    return drift_table(df, value_col, group_col, lo, hi, n_buckets, "ks", alpha=alpha)
 
 
 def psi_drift(
@@ -137,23 +175,12 @@ def psi_drift(
     over fixed width_bucket bins with Laplace smoothing (+0.5 per bucket)
     so empty buckets stay finite.  The conventional industry reading:
     psi < 0.1 stable, 0.1–0.25 moderate, > 0.25 major shift; `drifted`
-    flags psi > threshold.  Same 100 TB shape as the binned KS check (the
-    same one-scan grid).  The terms fold in DETERMINISTIC bucket order —
-    the grid's order — because float addition isn't associative and a
-    shuffle-arrival-order sum would wobble the oracle hash."""
-    # 0.5D, not 0.5: a bare SQL 0.5 is a DECIMAL literal
-    p = "(x.cnt + 0.5D) / (s.n_grp + 0.5D * size(s.grid))"
-    q = "(x.gcnt + 0.5D) / (s.n_glob + 0.5D * size(s.grid))"
-    psi = f"aggregate(s.grid, 0D, (acc, x) -> acc + ({p} - {q}) * ln({p} / {q}))"
-    stats = _drift_stats(df, value_col, group_col, lo, hi, n_buckets, psi) \
-        .withColumnRenamed("stat", "psi")
-    return stats.select(
-        F.col("grp").alias(group_col),
-        F.col("n_grp").alias("n_group"),
-        F.col("n_glob").alias("n_global"),
-        F.round(F.round("psi", 9), 6).alias("psi"),
-        (F.col("psi") > threshold).alias("drifted"),
-    )
+    flags psi > threshold.  Same shape as the binned KS check (the same
+    one-scan aggregate, run when called, and the same driver-side fold).
+    The terms fold in DETERMINISTIC bin order because float addition
+    isn't associative and an arrival-order sum would wobble the oracle
+    hash."""
+    return drift_table(df, value_col, group_col, lo, hi, n_buckets, "psi", threshold=threshold)
 
 
 def ks_drift_pandas(

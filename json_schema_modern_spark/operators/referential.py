@@ -19,7 +19,7 @@ Two physical paths, chosen by dimension size (SURVEY.md §2.8):
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 
@@ -61,6 +61,32 @@ def missing_references(
     raise ValueError(f"unknown strategy {strategy!r}")
 
 
+def reference_missing(fact_col: str, dim: DataFrame, dim_col: str) -> Column:
+    """Per-row form of the broadcast anti join, for a projection over the
+    fact table: true when ``fact_col`` is non-NULL and no ``dim.dim_col``
+    equals it.  The correlated EXISTS plans as an existence join (a
+    broadcast hash join for a small dictionary), which neither drops nor
+    duplicates fact rows, and whose equality never matches a NULL
+    dictionary entry — the anti join's rule."""
+    # behind an alias the dictionary's own columns are out of reach, so the
+    # outer name cannot bind to a dictionary column of the same name
+    keys = F.broadcast(dim.select(F.col(dim_col).alias("key"))).alias("_ref")
+    found = keys.where(F.col("_ref.key") == F.col(fact_col).outer()).exists()
+    return F.col(fact_col).isNotNull() & ~found
+
+
+def violation_fields(fact_col: str, keyword_location: str = "/x-ref") -> list[Column]:
+    """The violation columns of a missing reference in ``fact_col``."""
+    return [
+        F.lit(f"/{fact_col}").alias("instance_location"),
+        F.lit(f"{keyword_location}/{fact_col}").alias("keyword_location"),
+        F.lit(None).cast("string").alias("absolute_keyword_location"),
+        F.lit("x-ref").alias("keyword"),
+        F.lit(f"value not found in reference dictionary for {fact_col}").alias("error"),
+        F.col(fact_col).cast("string").alias("offending_value"),
+    ]
+
+
 def referential_violations(
     fact: DataFrame,
     fact_col: str,
@@ -71,12 +97,5 @@ def referential_violations(
     strategy: str = "broadcast",
 ) -> DataFrame:
     missing = missing_references(fact, fact_col, dim, dim_col, strategy=strategy)
-    return missing.select(
-        F.col(id_col).cast("string").alias("doc_id"),
-        F.lit(f"/{fact_col}").alias("instance_location"),
-        F.lit(f"{keyword_location}/{fact_col}").alias("keyword_location"),
-        F.lit(None).cast("string").alias("absolute_keyword_location"),
-        F.lit("x-ref").alias("keyword"),
-        F.lit(f"value not found in reference dictionary for {fact_col}").alias("error"),
-        F.col(fact_col).cast("string").alias("offending_value"),
-    )
+    return missing.select(F.col(id_col).cast("string").alias("doc_id"),
+                          *violation_fields(fact_col, keyword_location))

@@ -92,10 +92,15 @@ def retention_matrix(
     row-locally; a naive distinct + min-day groupBy + cohort join costs
     three exchanges on two different keys.  The two downstream
     aggregates run over |users| rows, and the cohort-size join is a
-    broadcast of the |cohorts|-row table."""
+    broadcast of the |cohorts|-row table.
+
+    Events with a NULL user or a NULL timestamp belong to no cohort and no
+    cell: they are dropped first (the ``events_retention`` oracle drops
+    the same rows)."""
     day = F.floor(_epoch_s(F.col(ts_col)) / 86400).cast("long")
     per_user = (
-        df.select(F.col(user_col).alias("_u"), day.alias("_d"))
+        df.where(F.col(user_col).isNotNull() & F.col(ts_col).isNotNull())
+        .select(F.col(user_col).alias("_u"), day.alias("_d"))
         .groupBy("_u").agg(F.collect_set("_d").alias("_ds"))
         .select(F.array_min("_ds").alias("cohort_day"), "_ds")
     )

@@ -25,6 +25,10 @@ from pyspark.sql import types as T
 HLL_LG_K = 14
 
 
+STATS_SCHEMA = ("column string, n_rows long, null_count long, null_fraction double, "
+                "min string, max string, distinct_count long")
+
+
 def column_stats(
     df: DataFrame,
     columns: list[str] | None = None,
@@ -37,21 +41,7 @@ def column_stats(
     count(DISTINCT) — used by the DuckDB-oracle correctness gate.
     """
     cols = columns or df.columns
-    types = {f.name: f.dataType for f in df.schema.fields}
-    total = F.count(F.lit(1))
-    aggs = [total.alias("_n")]
-    for c in cols:
-        aggs.append(F.sum(F.col(c).isNull().cast("long")).alias(f"{c}__nulls"))
-        # min/max in the column's native ordering, cast to string only for
-        # the unified output row (casting first would sort lexicographically)
-        aggs.append(F.min(F.col(c)).cast("string").alias(f"{c}__min"))
-        aggs.append(F.max(F.col(c)).cast("string").alias(f"{c}__max"))
-        if exact_distinct:
-            aggs.append(F.count_distinct(F.col(c)).alias(f"{c}__dist"))
-        else:
-            aggs.append(F.hll_sketch_estimate(
-                F.hll_sketch_agg(_sketchable(c, types[c]), HLL_LG_K)).alias(f"{c}__dist"))
-    row = df.agg(*aggs)
+    row = df.agg(*stats_aggs(df, cols, exact_distinct))
 
     # unpivot the single wide row into (column, measures...) — driver-free
     structs = [
@@ -67,6 +57,41 @@ def column_stats(
         for c in cols
     ]
     return row.select(F.explode(F.array(*structs)).alias("s")).select("s.*")
+
+
+def stats_aggs(df: DataFrame, cols: list[str], exact_distinct: bool = False) -> list[Column]:
+    """The aggregates behind ``column_stats``: ``_n`` and, per column,
+    ``<c>__nulls``, ``<c>__min``, ``<c>__max`` and ``<c>__dist`` — one list
+    for a ``df.agg`` or an ``Observation`` on another aggregate's scan."""
+    types = {f.name: f.dataType for f in df.schema.fields}
+    aggs = [F.count(F.lit(1)).alias("_n")]
+    for c in cols:
+        aggs.append(F.sum(F.col(c).isNull().cast("long")).alias(f"{c}__nulls"))
+        # min/max in the column's native ordering, cast to string only for
+        # the unified output row (casting first would sort lexicographically)
+        aggs.append(F.min(F.col(c)).cast("string").alias(f"{c}__min"))
+        aggs.append(F.max(F.col(c)).cast("string").alias(f"{c}__max"))
+        if exact_distinct:
+            aggs.append(F.count_distinct(F.col(c)).alias(f"{c}__dist"))
+        else:
+            # the union of the sketch with itself makes the estimate a
+            # function of the registers alone (the composite estimator):
+            # a sketch built by merging partial sketches carries an
+            # estimate that depends on the merge order otherwise
+            sketch = F.hll_sketch_agg(_sketchable(c, types[c]), HLL_LG_K)
+            aggs.append(F.hll_sketch_estimate(F.hll_union(sketch, sketch)).alias(f"{c}__dist"))
+    return aggs
+
+
+def stats_rows(values: dict, cols: list[str]) -> list[tuple]:
+    """``column_stats`` rows (``STATS_SCHEMA``) from the ``stats_aggs``
+    values, unpivoted on the driver; null_fraction is the same double
+    division Spark does (NULL for an empty input)."""
+    n = values["_n"]
+    return [(c, n, values[f"{c}__nulls"],
+             None if values[f"{c}__nulls"] is None else float(values[f"{c}__nulls"]) / float(n),
+             values[f"{c}__min"], values[f"{c}__max"], values[f"{c}__dist"])
+            for c in cols]
 
 
 def _sketchable(c: str, dtype: T.DataType):

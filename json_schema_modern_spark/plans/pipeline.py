@@ -20,11 +20,20 @@ through TableIO when a catalog exists):
   the bucket key is a hash of the uniqueness key, duplicate doc_ids always
   land in the same bucket, so the uniqueness check is per-bucket-complete —
   no cross-bucket pass needed;
+- a checkpointed run reads its input three times: the row pass, doc_id
+  uniqueness and one aggregate.  The row pass evaluates the compiled plan
+  and the broadcast ``x-ref`` lookup (an existence join against the
+  dictionary) in one projection; a ``strategy: sortmerge`` reference keeps
+  a join of its own.  The aggregate runs first, over grouping sets
+  (bucket, n_tok histogram bin) and, per ``x-drift`` check, (group, drift
+  bin), with the column stats an ``Observation`` on its scan;
 - a wave is the unit of write and restart.  A run's pending buckets are
   one wave: one plain Spark write into a directory of its own,
   ``violations/fp=<fp>/wave=<run_id>-0/``, with ``bucket`` a column of the
-  files.  Global checks that need all rows (KS drift per source, non-id
-  uniqueness) write a second wave, ``<run_id>-g``, under bucket = -1;
+  files.  Global checks that need all rows (drift per group, non-id
+  uniqueness) write a second wave, ``<run_id>-g``, under bucket = -1.
+  Drift folds the aggregate's (group, bin) counts on the driver, so its
+  rows are written from the driver; non-id uniqueness is a Spark write;
 - right after a wave's write commits, its lineage rows (run_id = the wave
   id, snapshot, fingerprint, bucket, status, doc_count, error_count,
   n_buckets) are appended, so a crash redoes only the waves without
@@ -36,15 +45,16 @@ through TableIO when a catalog exists):
   pending at its start, so a later run either redoes all of them
   (``resume=False``) or none (resume skips them).  Old
   ``fp=<fp>/bucket=<b>/`` workdirs still read and resume;
-- a wave's violations are counted on the driver from its files with pyarrow,
-  as (bucket, keyword, keyword_location), and the input once, before the
-  waves, as (bucket, n_tok histogram bin).  Every other table derives from
-  those counts: the lineage ``doc_count``/``error_count``,
-  ``partition_results``, ``violation_counts``, the histogram, and
-  ``PipelineResult.counts`` (the CLI's total).  Lineage, the column stats
-  and the count-derived tables are a few hundred rows at most, so the
-  driver writes them with pyarrow (one file each, written under a hidden
-  name and renamed into place) instead of a Spark write per table;
+- a wave's violations are counted on the driver from its files with
+  pyarrow, as (bucket, keyword, keyword_location).  Every other table
+  derives from those counts and the aggregate's: the lineage
+  ``doc_count``/``error_count``, ``partition_results``,
+  ``violation_counts``, the histogram, and ``PipelineResult.counts`` (the
+  CLI's total).  Lineage, the column stats and the count-derived tables
+  are a few hundred rows at most, so the driver writes them with pyarrow
+  (one file each, written under a hidden name and renamed into place)
+  instead of a Spark write per table.  A resume with nothing to redo reads
+  the input once, for the aggregate;
 - a run holds the workdir through a claim file (run_id, pid, host):
   a second run on it fails while the first one lives;
 - resume = read lineage, skip done buckets, process the rest.
@@ -53,6 +63,7 @@ through TableIO when a catalog exists):
 from __future__ import annotations
 
 import contextlib
+import functools
 import json
 import os
 import shutil
@@ -65,14 +76,19 @@ from dataclasses import dataclass, field
 import pyarrow as pa
 import pyarrow.dataset as pads
 import pyarrow.parquet as pq
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 
 from json_schema_modern_spark.compiler.column_compiler import SetCheck
-from json_schema_modern_spark.operators.drift import drift_violations, ks_drift
-from json_schema_modern_spark.operators.referential import referential_violations
+from json_schema_modern_spark.operators.drift import (
+    drift_table, drift_violations, psi_violations,
+)
+from json_schema_modern_spark.operators.referential import (
+    reference_missing, referential_violations, violation_fields,
+)
 from json_schema_modern_spark.operators.stats import (
-    column_stats, histogram_bin, histogram_edges, numeric_histogram,
+    STATS_SCHEMA, column_stats, histogram_bin, histogram_edges, numeric_histogram,
+    stats_aggs, stats_rows,
 )
 from json_schema_modern_spark.operators.uniqueness import uniqueness_violations
 from json_schema_modern_spark.validator import Validator
@@ -201,24 +217,54 @@ class ValidationPipeline:
 
     # -- per-bucket row-local + bucket-safe set checks ----------------------
 
-    def _bucket_violations(self, bucketed: DataFrame, set_checks: list[SetCheck],
+    def _bucket_violations(self, bucketed: DataFrame, plan,
                            source_dict: DataFrame | None) -> DataFrame:
         """All checks that are complete within a hash bucket of doc_id:
-        row-local keywords, doc_id uniqueness (hash-colocated), and the
-        referential semijoin (row-local w.r.t. the broadcast dictionary)."""
-        res = self.validator.validate(bucketed, id_cols=[self.id_col, "_bucket"])
+        row-local keywords and the broadcast referential lookup (one pass;
+        row-local w.r.t. the broadcast dictionary), doc_id uniqueness
+        (hash-colocated) and sort-merge referential joins."""
+        rows, extra, more = bucketed, [], []
+        for check in plan.set_checks:
+            if check.kind == "unique" and _unique_cols(check) == [self.id_col]:
+                # duplicates of id_col are colocated in its hash bucket; other
+                # keys run in the global pass, as a resume over pending buckets
+                # would miss their cross-bucket duplicates
+                more.append(uniqueness_violations(
+                    bucketed, [self.id_col], keyword_location=check.keyword_location))
+            elif check.kind == "ref" and source_dict is not None:
+                for fact_col, target in check.params["value"].items():
+                    # spec forms: "dict.col" (broadcast, the small-dim default)
+                    # or {"target": "dict.col", "strategy": "sortmerge"} for
+                    # large dictionaries — salted sort-merge: fact side gets a
+                    # salt, dim side replicates ×S, bounding any hot key's
+                    # reducer at 1/S (north rule: explicit repartition + skew
+                    # salting on the source column)
+                    if not isinstance(target, dict):
+                        target = {"target": target}
+                    dim_col = target["target"].split(".")[-1]
+                    strategy = target.get("strategy", "broadcast")
+                    if strategy == "broadcast":
+                        # a lookup column of the row pass, not a join of its own
+                        name = f"_xref{len(extra)}"
+                        rows = rows.withColumn(name, reference_missing(fact_col, source_dict, dim_col))
+                        extra.append((F.col(name), F.struct(
+                            *violation_fields(fact_col, check.keyword_location))))
+                        continue
+                    more.append(referential_violations(
+                        bucketed, fact_col, source_dict, dim_col, id_col=self.id_col,
+                        keyword_location=check.keyword_location, strategy=strategy))
+        res = self.validator.validate(rows, id_cols=[self.id_col, "_bucket"],
+                                      plan=plan, extra=extra)
         viols = res.violations.select(
             F.col(self.id_col).cast("string").alias("doc_id"),
             *VIOL_COLS[1:], F.col("_bucket"),
         )
-        for check in set_checks:
-            extra = self._bucket_set_check(check, bucketed, source_dict)
-            if extra is not None:
-                viols = viols.unionByName(extra)
+        for v in more:
+            viols = viols.unionByName(
+                v.withColumn("_bucket", _bucket_expr(F.col("doc_id"), self.n_buckets)))
         return viols
 
-    def _wave_violations(self, bucketed: DataFrame, wave: list[int],
-                         set_checks: list[SetCheck],
+    def _wave_violations(self, bucketed: DataFrame, wave: list[int], plan,
                          source_dict: DataFrame | None) -> DataFrame:
         """The rows one wave writes: its buckets' violations, ``bucket`` a
         column.  The wave's buckets are one IN predicate (one py4j call,
@@ -226,93 +272,91 @@ class ValidationPipeline:
         wave holds every bucket."""
         if len(wave) < self.n_buckets:
             bucketed = bucketed.filter(F.expr(f"_bucket IN ({', '.join(map(str, wave))})"))
-        return self._bucket_violations(bucketed, set_checks, source_dict) \
+        return self._bucket_violations(bucketed, plan, source_dict) \
             .withColumnRenamed("_bucket", "bucket")
 
-    def _bucket_set_check(
-        self, check: SetCheck, bucketed: DataFrame, source_dict: DataFrame | None
-    ) -> DataFrame | None:
-        val = check.params["value"]
-        if check.kind == "unique":
-            cols = val if isinstance(val, list) else [val]
-            if cols != [self.id_col]:
-                # rows are bucketed by hash(id_col); a resume over pending
-                # buckets would miss cross-bucket duplicates of any OTHER
-                # key — those checks run in the global (bucket=-1) pass
-                return None
-            out = uniqueness_violations(bucketed, cols, keyword_location=check.keyword_location)
-            # duplicates of id_col are colocated in its hash bucket
-            return out.withColumn("_bucket", _bucket_expr(F.col("doc_id"), self.n_buckets))
-        if check.kind == "ref":
-            if source_dict is None:
-                return None
-            viols = []
-            for fact_col, target in val.items():
-                # spec forms: "dict.col" (broadcast, the small-dim default)
-                # or {"target": "dict.col", "strategy": "sortmerge"} for
-                # large dictionaries — salted sort-merge: fact side gets a
-                # salt, dim side replicates ×S, bounding any hot key's
-                # reducer at 1/S (north rule: explicit repartition + skew
-                # salting on the source column)
-                if isinstance(target, dict):
-                    dim_col = target["target"].split(".")[-1]
-                    strategy = target.get("strategy", "broadcast")
-                else:
-                    dim_col = target.split(".")[-1]
-                    strategy = "broadcast"
-                v = referential_violations(
-                    bucketed, fact_col, source_dict, dim_col,
-                    id_col=self.id_col, keyword_location=check.keyword_location,
-                    strategy=strategy,
-                ).withColumn("_bucket", _bucket_expr(F.col("doc_id"), self.n_buckets))
-                viols.append(v)
-            out = viols[0]
-            for v in viols[1:]:
-                out = out.unionByName(v)
-            return out
-        return None  # drift is global — handled in _global_violations
-
-    def _global_violations(self, df: DataFrame, set_checks: list[SetCheck]) -> DataFrame | None:
-        """Checks needing the whole table: KS drift per group, and
-        uniqueness on keys other than id_col (not bucket-complete)."""
-        outs = []
+    def _drifts(self, set_checks: list[SetCheck]) -> list[_Drift]:
+        out = []
         for check in set_checks:
-            if check.kind == "unique":
-                cols = (check.params["value"] if isinstance(check.params["value"], list)
-                        else [check.params["value"]])
-                if cols != [self.id_col]:
-                    outs.append(uniqueness_violations(
-                        df, cols, keyword_location=check.keyword_location))
-                continue
             if check.kind != "drift":
                 continue
             for value_col, cfg in check.params["value"].items():
-                group_col = cfg.get("per", "source")
                 test = cfg.get("test", "ks")
-                if test == "psi":
-                    from json_schema_modern_spark.operators.drift import (
-                        psi_drift, psi_violations,
-                    )
-
-                    d = psi_drift(df, value_col, group_col, 0.0, self.drift_hi,
-                                  min(self.drift_bins, 64),
-                                  threshold=float(cfg.get("threshold", 0.2)))
-                    outs.append(psi_violations(
-                        d, group_col, value_col,
-                        keyword_location=check.keyword_location))
-                    continue
-                alpha = float(cfg.get("alpha", 0.01))
-                d = ks_drift(df, value_col, group_col, 0.0, self.drift_hi,
-                             self.drift_bins, alpha=alpha)
-                outs.append(
-                    drift_violations(d, group_col, value_col,
-                                     keyword_location=check.keyword_location))
-        if not outs:
-            return None
-        out = outs[0]
-        for o in outs[1:]:
-            out = out.unionByName(o)
+                out.append(_Drift(value_col, cfg.get("per", "source"), test,
+                                  min(self.drift_bins, 64) if test == "psi" else self.drift_bins,
+                                  float(cfg.get("alpha", 0.01)),
+                                  float(cfg.get("threshold", 0.2)), check.keyword_location))
         return out
+
+    def _global_violations(self, df: DataFrame, set_checks: list[SetCheck],
+                           cells: list[dict] | None = None
+                           ) -> tuple[DataFrame | None, list[DataFrame]]:
+        """Checks needing the whole table: uniqueness on keys other than
+        id_col (not bucket-complete), and drift per group.  Each drift
+        check folds its (group, bin) counts — ``cells``, counted by the
+        checkpointed run's input aggregate, or counted here — into a local
+        DataFrame of its violations."""
+        uniq = [uniqueness_violations(df, _unique_cols(c), keyword_location=c.keyword_location)
+                for c in set_checks
+                if c.kind == "unique" and _unique_cols(c) != [self.id_col]]
+        drift = []
+        for i, d in enumerate(self._drifts(set_checks)):
+            table = drift_table(df, d.value_col, d.group_col, 0.0, self.drift_hi, d.bins,
+                                d.test, alpha=d.alpha, threshold=d.threshold,
+                                cells=None if cells is None else cells[i])
+            viols = psi_violations if d.test == "psi" else drift_violations
+            drift.append(viols(table, d.group_col, d.value_col,
+                               keyword_location=d.keyword_location))
+        return _union(uniq), drift
+
+    def _input_aggregate(self, bucketed: DataFrame, drifts: list[_Drift],
+                         stats_cols: list[str]) -> tuple[DataFrame, Observation, dict]:
+        """The run's one aggregate over the input: grouping sets
+        (bucket, n_tok histogram bin) and, per drift check, (group, drift
+        bin), counted as ``_n``, with the column stats an ``Observation``
+        on the same scan.  Also returns ``_set`` (grouping_id) → the index
+        of the grouping set."""
+        hist = ["n_tok"] if "n_tok" in bucketed.columns else []
+        keys = {"_bucket": F.col("_bucket"),
+                "_h": (histogram_bin("n_tok", 0.0, self.drift_hi, HISTOGRAM_BINS)
+                       if hist else F.lit(None).cast("long"))}
+        sets = [["_bucket", "_h"]]
+        for i, d in enumerate(drifts):
+            keys[f"_g{i}"] = F.col(d.group_col)
+            keys[f"_d{i}"] = histogram_bin(d.value_col, 0.0, self.drift_hi, d.bins)
+            sets.append([f"_g{i}", f"_d{i}"])
+        names = list(keys)
+        # grouping_id() sets bit j (most significant first) when names[j]
+        # is not in the row's grouping set
+        set_of = {sum(1 << (len(names) - 1 - j) for j, k in enumerate(names) if k not in s): i
+                  for i, s in enumerate(sets)}
+        obs = Observation()
+        agg = (bucketed.select(*dict.fromkeys(["_bucket", *stats_cols, *hist, *(
+                    c for d in drifts for c in (d.value_col, d.group_col))]))
+               .observe(obs, *stats_aggs(bucketed, stats_cols))
+               .select(*(c.alias(k) for k, c in keys.items()))
+               .groupingSets(sets, *names)
+               .agg(F.count(F.lit(1)).alias("_n"), F.grouping_id().alias("_set")))
+        return agg, obs, set_of
+
+    def _count_input(self, bucketed: DataFrame, drifts: list[_Drift],
+                     stats_cols: list[str]) -> tuple[Counter, Counter, list[dict], list[tuple]]:
+        """Runs ``_input_aggregate``: the per-bucket doc counts, the
+        histogram counts, each drift check's (group, bin) → count cells and
+        the stats rows."""
+        agg, obs, set_of = self._input_aggregate(bucketed, drifts, stats_cols)
+        doc_counts: Counter = Counter()
+        hist_counts: Counter = Counter()
+        cells: list[dict] = [{} for _ in drifts]
+        for r in agg.collect():
+            i = set_of[r._set]
+            if i == 0:
+                doc_counts[r._bucket] += r._n
+                if r._h is not None:
+                    hist_counts[r._h] += r._n
+            elif r[f"_d{i - 1}"] is not None:
+                cells[i - 1][(r[f"_g{i - 1}"], r[f"_d{i - 1}"])] = r._n
+        return doc_counts, hist_counts, cells, stats_rows(obs.get, stats_cols)
 
     # -- main entry ---------------------------------------------------------
 
@@ -325,23 +369,23 @@ class ValidationPipeline:
         resume: bool = True,
         stats_columns: list[str] | None = None,
     ) -> PipelineResult:
-        # the one compile of the run: bucketed and plain frames share the
-        # plan's set checks, which depend on the spec alone
-        plan = self.validator.compile_for(df.withColumn("_bucket", F.lit(0)))
+        # the one compile of the run, for the input's own columns: the
+        # bucket and lookup columns the passes add are not properties
+        plan = self.validator.compile_for(df)
         run_id = uuid.uuid4().hex[:12]
         bucketed = df.withColumn("_bucket", _bucket_expr(F.col(self.id_col), self.n_buckets))
-        stats = column_stats(df, stats_columns or [c for c in df.columns if c != "tokens"])
+        stats_cols = stats_columns or [c for c in df.columns if c != "tokens"]
 
         if self.workdir is None:
-            return self._run_inmemory(run_id, bucketed, plan.set_checks, source_dict, stats)
+            return self._run_inmemory(run_id, df, bucketed, plan, source_dict, stats_cols)
 
         os.makedirs(self.workdir, exist_ok=True)
         with _claim_workdir(self.workdir, run_id):
             return self._run_checkpointed(spark, df, bucketed, plan, run_id,
-                                          snapshot_id, resume, source_dict, stats)
+                                          snapshot_id, resume, source_dict, stats_cols)
 
     def _run_checkpointed(self, spark, df, bucketed, plan, run_id, snapshot_id,
-                          resume, source_dict, stats) -> PipelineResult:
+                          resume, source_dict, stats_cols) -> PipelineResult:
         fingerprint = plan.fingerprint
         # persist the frozen validator next to the lineage (reference
         # serialization caching, Modern.pm:1259-1279 / README.pod CACHING):
@@ -361,29 +405,26 @@ class ValidationPipeline:
         redo_global = bool(pending) or -1 not in done
         fp_dir = os.path.join(self.workdir, "violations", f"fp={fingerprint}")
 
-        # one small aggregate over the input gives both the per-bucket doc
-        # counts and the n_tok histogram: (bucket, histogram bin) → rows.
-        # It runs first: each wave's lineage rows carry its doc counts.
-        hist_bin = (histogram_bin("n_tok", 0.0, self.drift_hi, HISTOGRAM_BINS)
-                    if "n_tok" in df.columns else F.lit(None))
-        doc_counts: Counter = Counter()
-        hist_counts: Counter = Counter()
-        for r in bucketed.groupBy("_bucket", hist_bin.alias("bin")).count().collect():
-            doc_counts[r._bucket] += r["count"]
-            if r.bin is not None:
-                hist_counts[r.bin] += r["count"]
+        # the input's one aggregate runs first: each wave's lineage rows
+        # carry its doc counts, and the global wave's drift folds its cells
+        doc_counts, hist_counts, cells, stats = self._count_input(
+            bucketed, self._drifts(plan.set_checks) if redo_global else [], stats_cols)
 
         counted: dict[str, Counter] = {}
 
-        def write_wave(wave_id: str, buckets: list[int], viols: DataFrame | None):
+        def write_wave(wave_id: str, buckets: list[int], viols: DataFrame | None,
+                       local: list[DataFrame] = ()):
             # a plain write into a directory no other wave uses; the wave
             # is live only once its lineage rows land, so a crash before
-            # that leaves an orphan directory that nothing reads
+            # that leaves an orphan directory that nothing reads.  Rows a
+            # local DataFrame holds are written from the driver.
             path = os.path.join(fp_dir, f"wave={wave_id}")
-            counted[path] = Counter()
             if viols is not None:
                 viols.write.parquet(path)
-                counted[path] = _count_violations(path)
+            if local:
+                _write_driver_table(path, WRITTEN_VIOL_SCHEMA, [
+                    (*r, -1) for v in local for r in v.collect()], append=True)
+            counted[path] = _count_violations(path) if os.path.isdir(path) else Counter()
             errors: Counter = Counter()
             for (b, _, _), n in counted[path].items():
                 errors[b] += n
@@ -397,13 +438,13 @@ class ValidationPipeline:
         # so splitting them would multiply the scans
         if pending:
             write_wave(f"{run_id}-0", pending,
-                       self._wave_violations(bucketed, pending, plan.set_checks, source_dict))
+                       self._wave_violations(bucketed, pending, plan, source_dict))
         # global pass (drift, non-id uniqueness) — bucket -1, a wave of its
         # own, re-done on every run that re-does any bucket
         if redo_global:
-            gv = self._global_violations(df, plan.set_checks)
+            uniq, drift = self._global_violations(df, plan.set_checks, cells)
             write_wave(f"{run_id}-g", [-1],
-                       None if gv is None else gv.withColumn("bucket", F.lit(-1)))
+                       None if uniq is None else uniq.withColumn("bucket", F.lit(-1)), drift)
 
         # this snapshot's live data: for each bucket, the wave of its latest
         # done lineage row; a live wave is live for all of its buckets, so
@@ -443,7 +484,7 @@ class ValidationPipeline:
         # column stats, value histogram, per-bucket pass/fail rollup,
         # per-keyword violation rollup — tiny outputs, one file each
         tables = {
-            "stats": (_ddl(stats.schema), [tuple(r) for r in stats.collect()]),
+            "stats": (STATS_SCHEMA, stats),
             "partition_results": (PARTITION_RESULTS_SCHEMA, [
                 (b, errors[b] == 0, n, errors[b]) for b, n in sorted(doc_counts.items())]),
             "violation_counts": (VIOLATION_COUNTS_SCHEMA, [
@@ -471,20 +512,45 @@ class ValidationPipeline:
             counts={"violations": sum(rollup.values())},
         )
 
-    def _run_inmemory(self, run_id, bucketed, set_checks, source_dict, stats) -> PipelineResult:
-        viols = self._bucket_violations(bucketed, set_checks, source_dict)
-        gv = self._global_violations(bucketed.drop("_bucket"), set_checks)
+    def _run_inmemory(self, run_id, df, bucketed, plan, source_dict, stats_cols) -> PipelineResult:
+        viols = self._bucket_violations(bucketed, plan, source_dict)
+        uniq, drift = self._global_violations(df, plan.set_checks)
+        gv = _union(([] if uniq is None else [uniq]) + drift)
         if gv is not None:
             viols = viols.unionByName(gv.withColumn("_bucket", F.lit(-1)))
         return PipelineResult(
-            run_id=run_id, violations=viols.drop("_bucket"), stats=stats,
-            histogram=(numeric_histogram(bucketed, "n_tok", 0.0, self.drift_hi, HISTOGRAM_BINS)
-                       if "n_tok" in bucketed.columns else None),
+            run_id=run_id, violations=viols.drop("_bucket"),
+            stats=column_stats(df, stats_cols),
+            histogram=(numeric_histogram(df, "n_tok", 0.0, self.drift_hi, HISTOGRAM_BINS)
+                       if "n_tok" in df.columns else None),
             partition_results=_partition_results(bucketed, viols),
             violation_counts=viols.groupBy("keyword", "keyword_location")
             .agg(F.count(F.lit(1)).alias("n_violations")),
             buckets_done=self.n_buckets,
         )
+
+
+@dataclass
+class _Drift:
+    """One x-drift entry: ``value_col`` binned into ``bins`` over
+    [0, drift_hi), tested per ``group_col``."""
+
+    value_col: str
+    group_col: str
+    test: str
+    bins: int
+    alpha: float
+    threshold: float
+    keyword_location: str
+
+
+def _unique_cols(check: SetCheck) -> list[str]:
+    val = check.params["value"]
+    return val if isinstance(val, list) else [val]
+
+
+def _union(frames: list[DataFrame]) -> DataFrame | None:
+    return functools.reduce(DataFrame.unionByName, frames) if frames else None
 
 
 def _local_path(workdir: str) -> str:
@@ -591,11 +657,6 @@ def _count_violations(path: str, bucket: int | None = None) -> Counter:
 
 _ARROW_TYPES = {"string": pa.string(), "int": pa.int32(), "long": pa.int64(),
                 "bigint": pa.int64(), "double": pa.float64(), "boolean": pa.bool_()}
-
-
-def _ddl(schema) -> str:
-    """The flat DDL string of a Spark ``StructType``."""
-    return ", ".join(f"{f.name} {f.dataType.simpleString()}" for f in schema)
 
 
 def _arrow_schema(ddl: str) -> pa.Schema:

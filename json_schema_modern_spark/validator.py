@@ -331,9 +331,24 @@ class Validator:
             raise RuntimeError("compile_for must run before set_checks")
         return next(iter(self._plan_cache.values())).set_checks
 
-    def validate(self, df: DataFrame, id_cols: list[str] | None = None) -> ValidationResult:
-        plan = self.compile_for(df)
+    def validate(self, df: DataFrame, id_cols: list[str] | None = None, *,
+                 plan: CompiledPlan | None = None,
+                 extra: list[tuple[Column, Column]] = ()) -> ValidationResult:
+        """``plan``: a plan compiled for a frame whose columns ``df`` holds
+        (default: compiled for ``df``); columns ``df`` adds are then not
+        instance properties.  ``extra``: (condition, violation struct)
+        pairs, row checks outside the plan evaluated in the same pass — a
+        row whose condition holds fails with that violation."""
+        plan = plan or self.compile_for(df)
         id_cols = id_cols or ([df.columns[0]] if df.columns else [])
+        empty = F.array().cast(_VIOL_ARR)
+        ok, viols = plan.ok, plan.viols
+        for cond, _ in extra:
+            ok = ok & ~cond
+        if extra:
+            viols = F.concat(F.when(plan.ok, empty).otherwise(plan.viols), *[
+                F.when(cond, F.array(node).cast(_VIOL_ARR)).otherwise(empty)
+                for cond, node in extra])
         # Two-phase split for whole-stage codegen: plan.ok is pure codegen'd
         # expressions (the items peephole keeps higher-order functions out of
         # the hot path), while plan.viols contains transform/flatten detail
@@ -341,19 +356,23 @@ class Validator:
         # projection knocks the whole operator out of WSCG.  So the scan +
         # filter runs codegen'd over all rows, and the interpreted violation
         # assembly only ever sees the (rare) failing rows.
-        annotated = df.withColumns({"_valid": plan.ok, "_viols": F.when(
-            plan.ok, F.array().cast(_VIOL_ARR)).otherwise(plan.viols)})
+        annotated = df.withColumns({"_valid": ok, "_viols": F.when(
+            ok, empty).otherwise(viols)})
         # repartition between filter and detail: Catalyst fuses a Filter
         # with its parent Generate stage, and the Generate's interpreted
         # higher-order expressions would drag the filter out of whole-stage
         # codegen.  The exchange moves only the failing rows (rare by
         # design), guaranteeing the full-table scan stage stays codegen'd
-        # regardless of what the detail projection contains.
+        # regardless of what the detail projection contains.  explode_outer
+        # plus a NULL filter, not explode: Catalyst infers size(_viols) > 0
+        # from a plain explode and pushes it through the exchange, which
+        # puts the detail expression back into the scan stage's filter.
         violations = (
-            df.filter(~plan.ok)                    # codegen'd hot path
+            df.filter(~ok)                         # codegen'd hot path
             .repartition(df.sparkSession.sparkContext.defaultParallelism)
-            .withColumn("_viols", plan.viols)      # interpreted, failing rows only
-            .select(*id_cols, F.explode("_viols").alias("_vnode"))
+            .withColumn("_viols", viols)           # interpreted, failing rows only
+            .select(*id_cols, F.explode_outer("_viols").alias("_vnode"))
+            .where(F.col("_vnode").isNotNull())
             .select(*id_cols, "_vnode.*")
         )
         return ValidationResult(

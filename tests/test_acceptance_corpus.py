@@ -298,7 +298,7 @@ def spark_tier_cases(with_remainder: bool = False):
                                       json.dumps(t["data"]), t["valid"]))
                     continue
                 units.setdefault(dt.simpleString(), (dt, []))[1].append((ti, t))
-            for dt, cases in units.values():
+            for type_name, (dt, cases) in units.items():
                 decode = T.StructType([T.StructField("v", dt)])
 
                 def make(s=schema, u=uri_g, d=dialect, tgt=target_g,
@@ -314,7 +314,8 @@ def spark_tier_cases(with_remainder: bool = False):
                                      extra_schemas=ex + [(u, s)])
 
                 sid = len(specs)
-                specs.append((make, f"{label}/v", decode))
+                # one WRAPPED unit per decode type: the type names the unit
+                specs.append((make, f"{label}/v:{type_name}", decode))
                 t_["spark"] += len(cases)
                 rows.extend(
                     (sid, f"{label}#{ti}", json.dumps({"v": t["data"]}),
@@ -323,6 +324,16 @@ def spark_tier_cases(with_remainder: bool = False):
     if with_remainder:
         return specs, rows, tally, remainder
     return specs, rows, tally
+
+
+def test_spark_tier_labels_are_unique():
+    """Every Spark-tier spec has a label of its own: a group whose WRAPPED
+    instances decode to several types yields one spec per type, and the
+    label names the type (``<group>/v:<type>``)."""
+    labels = [label for _, label, _ in spark_tier_cases()[0]]
+    dups = sorted({x for x in labels if labels.count(x) > 1})
+    assert not dups, dups[:10]
+    assert any(x.endswith("/v:bigint") for x in labels)
 
 
 def test_corpus_spark_cross_check(spark):

@@ -279,7 +279,10 @@ def test_crash_resume_reruns_only_unfinished_waves(
         ValidationPipeline(SPEC, workdir=wd, n_buckets=4).run(
             spark, corrupt, source_dict=sd, snapshot_id="s")
     before = _lineage(wd) if prior else []
+    from json_schema_modern_spark.plans import pipeline
+
     orig = DataFrameWriter.parquet
+    orig_driver = pipeline._write_driver_table
     waves = []
 
     def failing_parquet(self, path, *args, **kwargs):
@@ -291,8 +294,17 @@ def test_crash_resume_reruns_only_unfinished_waves(
                 raise RuntimeError("injected wave failure")
         return orig(self, path, *args, **kwargs)
 
+    def failing_driver_write(path, *args, **kwargs):
+        # the global wave holds only drift rows here: the driver writes it
+        if "wave=" in path:
+            waves.append(path)
+            if len(waves) > after:
+                raise RuntimeError("injected wave failure")
+        return orig_driver(path, *args, **kwargs)
+
     with monkeypatch.context() as m:
         m.setattr(DataFrameWriter, "parquet", failing_parquet)
+        m.setattr(pipeline, "_write_driver_table", failing_driver_write)
         with pytest.raises(RuntimeError, match="injected wave failure"):
             ValidationPipeline(SPEC, workdir=wd, n_buckets=4).run(
                 spark, corrupt, source_dict=sd, snapshot_id="s", resume=not prior)
@@ -447,3 +459,66 @@ def test_workdir_claim(spark, corrupt, tmp_path, capsys):
     res = pipe.run(spark, corrupt, source_dict=source_dict_df(spark), snapshot_id="s")
     assert res.buckets_done == 0 and not os.path.exists(claim)
     assert not [f for f in os.listdir(wd) if f.startswith(".claim")]
+
+
+# -- the columns the passes add are not instance properties -----------------
+
+@pytest.mark.parametrize("keyword", [
+    {"additionalProperties": False}, {"unevaluatedProperties": False},
+    {"maxProperties": 4}, {"propertyNames": {"pattern": "^[a-z]"}}])
+def test_added_columns_are_not_properties(spark, tmp_path, capsys, keyword):
+    """The plan compiles for the input's own columns: the ``_bucket`` column
+    and the x-ref lookup column the run evaluates over are no properties of
+    a row, so object keywords on valid rows give no violation — in memory,
+    checkpointed and through the CLI."""
+    import json
+
+    from json_schema_modern_spark import Validator, cli
+
+    spec = {k: v for k, v in SPEC.items() if k not in ("x-unique", "x-drift")}
+    spec.update(keyword)
+    rows = sequences_df(spark, 2, seed=7)
+    sd = source_dict_df(spark)
+    assert Validator(spec).validate(rows).violations.count() == 0
+    assert ValidationPipeline(spec, n_buckets=4).run(
+        spark, rows, source_dict=sd).violations.count() == 0
+    ck = ValidationPipeline(spec, workdir=str(tmp_path / "ck"), n_buckets=4).run(
+        spark, rows, source_dict=sd, snapshot_id="s")
+    assert ck.counts["violations"] == ck.violations.count() == 0
+
+    table, sd_path, spec_path = (str(tmp_path / n) for n in ("t", "sd", "spec.json"))
+    rows.write.parquet(table)
+    sd.write.parquet(sd_path)
+    with open(spec_path, "w") as f:
+        json.dump(spec, f)
+    capsys.readouterr()
+    assert cli.main(["--spec", spec_path, "--table", table, "--source-dict", sd_path,
+                     "--output", str(tmp_path / "out"), "--n-buckets", "4"]) == 0
+    assert json.loads(capsys.readouterr().out.splitlines()[-1])["violations"] == 0
+
+
+def test_ref_lookup_matches_anti_join(spark, tmp_path):
+    """The broadcast x-ref check is a lookup column of the row pass; with
+    NULL and unknown fact keys and a dictionary holding NULL and duplicate
+    entries it flags exactly the rows ``referential_violations`` (the anti
+    join) flags — NULL keys are not violations, nothing is duplicated —
+    in memory and checkpointed."""
+    from json_schema_modern_spark.operators.referential import referential_violations
+    from json_schema_modern_spark.plans.pipeline import VIOL_COLS
+
+    spec = {"type": "object", "x-ref": {"source": "source_dict.source"}}
+    facts = spark.createDataFrame(
+        [(f"d{i}", s) for i, s in enumerate(
+            ["web", "web", None, "smuggled", "books", None, "smuggled", "code", "zz"])],
+        "doc_id string, source string")
+    dim = spark.createDataFrame([("web",), ("web",), (None,), ("books",), ("code",),
+                                 ("code",), (None,)], "source string")
+    want = sorted(tuple(r) for r in referential_violations(
+        facts, "source", dim, "source").select(*VIOL_COLS).collect())
+    assert sorted(r[-1] for r in want) == ["smuggled", "smuggled", "zz"]
+
+    mem = ValidationPipeline(spec, n_buckets=4).run(spark, facts, source_dict=dim)
+    assert sorted(tuple(r) for r in mem.violations.select(*VIOL_COLS).collect()) == want
+    ck = ValidationPipeline(spec, workdir=str(tmp_path / "ck"), n_buckets=4).run(
+        spark, facts, source_dict=dim, snapshot_id="s")
+    assert sorted(tuple(r) for r in ck.violations.select(*VIOL_COLS).collect()) == want

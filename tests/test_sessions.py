@@ -105,3 +105,43 @@ def test_retention_matrix_hand_case(spark):
     plan = retention_matrix(df)._jdf.queryExecution().executedPlan().toString()
     final = plan.split("== Initial Plan ==")[0]
     assert "SortMergeJoin" not in final
+
+
+def test_retention_matrix_drops_null_users_and_ts(spark):
+    """Events with a NULL user or a NULL ts join no cohort and no cell, in
+    the operator and in its events_retention oracle alike; both equal a
+    plain-Python retention matrix over the remaining events."""
+    import datetime
+
+    import duckdb
+
+    from __spark_entry__ import oracle_sql
+    from json_schema_modern_spark.operators.sessions import retention_matrix
+
+    def ts(day):
+        return datetime.datetime(1970, 1, 1) + datetime.timedelta(days=day, hours=3)
+
+    events = [(1, ts(0), "a"), (2, ts(2), "a"), (3, ts(1), "b"), (4, ts(3), "b"),
+              (5, ts(0), None), (6, ts(5), None),      # NULL user: no cohort
+              (7, None, "a"), (8, None, "c"),          # NULL ts: no day
+              (9, None, None), (10, ts(1), "d")]
+    df = spark.createDataFrame(
+        [(e, t, u, "click", 1.0) for e, t, u in events],
+        "event_id int, ts timestamp, user_id string, event_type string, value double")
+
+    days: dict = {}
+    for _, t, u in events:
+        if t is not None and u is not None:
+            days.setdefault(u, set()).add((t - datetime.datetime(1970, 1, 1)).days)
+    cohort = {u: min(ds) for u, ds in days.items()}
+    size = {c: sum(1 for v in cohort.values() if v == c) for c in set(cohort.values())}
+    cells: dict = {}
+    for u, ds in days.items():
+        for d in ds:
+            cells[(cohort[u], d - cohort[u])] = cells.get((cohort[u], d - cohort[u]), 0) + 1
+    want = sorted((c, k, n, size[c], round(n / size[c], 6)) for (c, k), n in cells.items())
+
+    assert sorted(tuple(r) for r in retention_matrix(df).collect()) == want
+    con = duckdb.connect()
+    con.register("events", df.toPandas())
+    assert sorted(con.execute(oracle_sql()["events_retention"]).fetchall()) == want

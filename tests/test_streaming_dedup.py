@@ -1,5 +1,7 @@
 """Stateful streaming first-seen dedup (applyInPandasWithState)."""
 
+import time
+
 import pytest
 from pyspark.sql import functions as F
 
@@ -17,6 +19,24 @@ def _run_stream(spark, src_dir, ckpt, name, max_files=None):
          .trigger(availableNow=True).start())
     q.awaitTermination(120)
     return spark.table(name)
+
+
+def _stop_when_drained(q, n_rows, timeout=120):
+    """Stop an availableNow query over ``dedup_stream_ttl`` once it has read
+    all ``n_rows`` input rows and a later batch has run.  Such a query never
+    ends by itself: with a processing-time timeout Spark runs another
+    (no-data) batch after every batch, to expire state, so the trigger never
+    sees the input drained — and ``processAllAvailable`` never returns
+    either, as every loop constructs a batch."""
+    deadline = time.time() + timeout
+    while time.time() < deadline:
+        progress = q.recentProgress
+        if (sum(p["numInputRows"] for p in progress) >= n_rows
+                and progress[-1]["numInputRows"] == 0):
+            break
+        time.sleep(0.2)
+    q.stop()
+    assert not q.isActive
 
 
 def test_first_seen_dedup_across_batches(spark, tmp_path):
@@ -82,7 +102,7 @@ def test_ttl_dedup_window_expiry(spark, tmp_path):
          .writeStream.format("memory").queryName("dedup_ttl")
          .option("checkpointLocation", str(tmp_path / "ttl_ckpt"))
          .trigger(availableNow=True).start())
-    q.awaitTermination(120)
+    _stop_when_drained(q, 5)
     got = {(r.keep_id, r.n_docs, r.window_start_ms)
            for r in spark.table("dedup_ttl").collect()}
     assert (2, 2, 0) in got          # window 1: both t=0 occurrences
@@ -109,7 +129,7 @@ def test_ttl_dedup_window_start_is_first_occurrence(spark, tmp_path):
          .writeStream.format("memory").queryName("dedup_ttl2")
          .option("checkpointLocation", str(tmp_path / "ttl_ckpt2"))
          .trigger(availableNow=True).start())
-    q.awaitTermination(120)
+    _stop_when_drained(q, 2)
     rows = spark.table("dedup_ttl2").collect()
     assert len(rows) == 1
     assert (rows[0].keep_id, rows[0].n_docs, rows[0].window_start_ms) \

@@ -83,16 +83,25 @@ def main() -> None:
     #    higher-order exprs) must be isolated from the scan+filter stage by
     #    an Exchange — otherwise Catalyst fuses them and the filter loses
     #    codegen.  (Under AQE the formatted plan hides codegen ids, so this
-    #    is a structural assertion: Filter → Exchange → … → Generate.)
+    #    is a structural assertion: scan Filter → Exchange → … → Generate;
+    #    the scan Filter is the lowest one, a NULL filter on the generated
+    #    rows sits above the Generate.)  The scan Filter must not hold the
+    #    detail expression either (a size() of the violation array that
+    #    Catalyst infers from an explode and pushes through the Exchange).
     viol_plan = explain_str(res.violations)
     tree = [ln.strip() for ln in viol_plan.splitlines()[:12]]
     order = [next((k for k in ("Generate", "Exchange", "Filter") if k in ln), None)
              for ln in tree]
     order = [k for k in order if k]
+    scan_filter = len(order) - 1 - order[::-1].index("Filter") if "Filter" in order else -1
     check("violations: Exchange isolates detail from scan stage",
-          order.index("Filter") > order.index("Exchange") > order.index("Generate")
+          scan_filter > order.index("Exchange") > order.index("Generate")
           if all(k in order for k in ("Filter", "Exchange", "Generate")) else False,
           f"plan order (top-down): {order}")
+    details = viol_plan.split("\n\n")
+    scan_filter_text = next((d for d in reversed(details) if "Filter\nInput" in d), "")
+    check("violations: scan Filter does not evaluate the violation array",
+          bool(scan_filter_text) and "array(struct(" not in scan_filter_text)
 
     # 3. stats: must prune tokens out of the scan
     stats_plan = explain_str(column_stats(df, ["doc_id", "n_tok", "source"]))
@@ -106,31 +115,55 @@ def main() -> None:
     check("stats: no HyperLogLogPlusPlus (hll_sketch_agg instead)",
           "HyperLogLogPlusPlus" not in stats_plan)
 
-    # 3c. drift: every KS consumer reads ONE (grp, bucket) aggregate — a
-    #     single scan of the input, not one per consumer
-    from json_schema_modern_spark.operators.drift import ks_drift
+    # 3c. drift: every KS/PSI test reads ONE (grp, bin) counting aggregate —
+    #     a single scan of the input; the fold over its rows runs on the
+    #     driver, so ks_drift's own result holds no scan
+    from json_schema_modern_spark.operators.drift import drift_counts
 
-    ks_plan = explain_str(ks_drift(df, "n_tok", "source", 0.0, 2048.0, 256))
-    n_scans = sum(1 for ln in ks_plan.splitlines()
+    counts_plan = explain_str(drift_counts(df, "n_tok", "source", 0.0, 2048.0, 256))
+    n_scans = sum(1 for ln in counts_plan.splitlines()
                   if ln.strip().startswith("(") and "Scan parquet" in ln)
-    check("drift: ks_drift plan holds exactly one FileScan", n_scans == 1,
-          f"{n_scans} scans")
+    check("drift: the (grp, bin) counting aggregate holds exactly one FileScan",
+          n_scans == 1, f"{n_scans} scans")
 
     # 3d. checkpointed pipeline: one wave's write reads the token table
-    #     once per bucket-local check — row pass, uniqueness, referential —
-    #     and no more (drift runs in the global pass)
+    #     once per bucket-local pass — the row pass (with the x-ref lookup)
+    #     and uniqueness — and no more (drift and stats run in the input
+    #     aggregate)
     from json_schema_modern_spark.plans.pipeline import ValidationPipeline, _bucket_expr
 
     pipe = ValidationPipeline(_flagship_spec(), n_buckets=256,
                               options=CompileOptions(assume_dense_arrays=True))
     bucketed = df.withColumn("_bucket", _bucket_expr(F.col("doc_id"), 256))
+    run_plan = pipe.validator.compile_for(df)
     wave_plan = explain_str(pipe._wave_violations(
-        bucketed, list(range(256)), pipe.validator.compile_for(bucketed).set_checks,
-        source_dict_df(spark)))
+        bucketed, list(range(256)), run_plan, source_dict_df(spark)))
     n_scans = sum(1 for ln in wave_plan.splitlines()
                   if ln.strip().startswith("(") and "Scan parquet" in ln)
-    check("pipeline: wave write scans the token table exactly 3 times", n_scans == 3,
+    check("pipeline: wave write scans the token table exactly 2 times", n_scans == 2,
           f"{n_scans} scans")
+
+    # 3e. the broadcast x-ref check is a lookup inside the row pass: an
+    #     existence join against the broadcast dictionary, not a join of
+    #     its own over a second scan
+    check("pipeline: in-row x-ref lookup plans as a BroadcastHashJoin",
+          "BroadcastHashJoin" in wave_plan and "ExistenceJoin" in wave_plan
+          and "SortMergeJoin" not in wave_plan and "NestedLoopJoin" not in wave_plan)
+
+    # 3f. the run's one input aggregate (doc counts, histogram, drift bins,
+    #     stats as an Observation on the same scan): one scan, tokens
+    #     pruned, sketch stats rather than HyperLogLog++
+    agg_plan = explain_str(pipe._input_aggregate(
+        bucketed, pipe._drifts(run_plan.set_checks), ["doc_id", "n_tok", "source"])[0])
+    n_scans = sum(1 for ln in agg_plan.splitlines()
+                  if ln.strip().startswith("(") and "Scan parquet" in ln)
+    rs = [ln for ln in agg_plan.splitlines() if "ReadSchema" in ln]
+    check("pipeline: input aggregate holds exactly one FileScan", n_scans == 1,
+          f"{n_scans} scans")
+    check("pipeline: input aggregate prunes tokens from its scan",
+          bool(rs) and all("tokens" not in ln for ln in rs), rs[0] if rs else "no ReadSchema")
+    check("pipeline: input aggregate has no HyperLogLogPlusPlus",
+          "HyperLogLogPlusPlus" not in agg_plan)
 
     # 4. uniqueness: only doc_id read; partial aggregation before shuffle
     uniq_plan = explain_str(duplicate_keys(df, ["doc_id"]))

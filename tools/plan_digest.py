@@ -1,7 +1,9 @@
 """Compiled-plan digests: one line per (spec, option set), so two versions
 of the compiler can be shown to build the same Column trees.
 
-Each line is ``<label> <option set> <digest>``.  The digest covers the
+Each line is ``<label> <option set> <digest>``; a corpus label is the
+group's (``<dir>/<file>#<group>``), with ``/v:<decode type>`` appended for
+a WRAPPED unit, so every label names one spec.  The digest covers the
 plan's ``ok`` and ``viols`` Columns, its annotations (kloc, akloc,
 keyword, value, guard), ``set_checks`` and ``static_exceptions`` — or the
 ``SpecError`` text when the spec does not compile.  Spark names lambda
