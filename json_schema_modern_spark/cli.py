@@ -27,6 +27,7 @@ from __future__ import annotations
 
 import argparse
 import json
+import os
 import sys
 
 
@@ -183,19 +184,23 @@ def run_validation(spec, args) -> int:
     if args.json_col:
         # JSON-document column (evaluate_json_string analogue): tier
         # routing decides per row between the codegen'd typed plan and
-        # the exact executor-side python evaluator
+        # the exact executor-side python evaluator.  The one action is the
+        # write, its rows counted by an Observation, or else a count()
         res = Validator(spec, extra_schemas=extra).validate_json_strings(
             df, args.json_col, id_cols=[args.id_col], tier=args.tier)
         if args.flag_only:
             valid = res.flag()
             print(json.dumps({"valid": bool(valid)}))
             return 0 if valid else 1
-        n_viol = res.violations.count()
         if args.output:
-            import os as _os
+            from pyspark.sql import Observation, functions as F
 
-            res.violations.write.mode("overwrite").parquet(
-                _os.path.join(args.output, "violations_json"))
+            obs = Observation()
+            res.violations.observe(obs, F.count(F.lit(1)).alias("n")).write \
+                .mode("overwrite").parquet(os.path.join(args.output, "violations_json"))
+            n_viol = obs.get["n"]
+        else:
+            n_viol = res.violations.count()
         valid = n_viol == 0
         print(json.dumps({"valid": bool(valid), "tier": args.tier,
                           "violations": n_viol}))
@@ -224,14 +229,12 @@ def run_validation(spec, args) -> int:
             }[args.output_format]()
             n_rows = out_df.count()
             if args.output:
-                import os as _os
-
                 # terse is a violation-rows table, not per-row result
                 # documents — name the artifact accordingly
                 artifact = ("violations_terse" if args.output_format == "terse"
                             else f"results_{args.output_format}")
                 out_df.write.mode("overwrite").parquet(
-                    _os.path.join(args.output, artifact))
+                    os.path.join(args.output, artifact))
             valid = res.flag()
         finally:
             res.annotated.unpersist()

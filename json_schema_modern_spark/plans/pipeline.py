@@ -26,7 +26,9 @@ through TableIO when a catalog exists):
   dictionary) in one projection; a ``strategy: sortmerge`` reference keeps
   a join of its own.  The aggregate runs first, over grouping sets
   (bucket, n_tok histogram bin) and, per ``x-drift`` check, (group, drift
-  bin), with the column stats an ``Observation`` on its scan;
+  bin), with the column stats an ``Observation`` on its scan.  An
+  in-memory run (no workdir) runs the same aggregate and takes its stats,
+  histogram, doc counts and drift from it too;
 - a wave is the unit of write and restart.  A run's pending buckets are
   one wave: one plain Spark write into a directory of its own,
   ``violations/fp=<fp>/wave=<run_id>-0/``, with ``bucket`` a column of the
@@ -87,8 +89,7 @@ from json_schema_modern_spark.operators.referential import (
     reference_missing, referential_violations, violation_fields,
 )
 from json_schema_modern_spark.operators.stats import (
-    STATS_SCHEMA, column_stats, histogram_bin, histogram_edges, numeric_histogram,
-    stats_aggs, stats_rows,
+    STATS_SCHEMA, histogram_bin, histogram_edges, stats_aggs, stats_rows,
 )
 from json_schema_modern_spark.operators.uniqueness import uniqueness_violations
 from json_schema_modern_spark.validator import Validator
@@ -377,7 +378,7 @@ class ValidationPipeline:
         stats_cols = stats_columns or [c for c in df.columns if c != "tokens"]
 
         if self.workdir is None:
-            return self._run_inmemory(run_id, df, bucketed, plan, source_dict, stats_cols)
+            return self._run_inmemory(spark, df, bucketed, plan, run_id, source_dict, stats_cols)
 
         os.makedirs(self.workdir, exist_ok=True)
         with _claim_workdir(self.workdir, run_id):
@@ -483,17 +484,12 @@ class ValidationPipeline:
         # metrics tables (north rule: per-partition lineage + metrics):
         # column stats, value histogram, per-bucket pass/fail rollup,
         # per-keyword violation rollup — tiny outputs, one file each
-        tables = {
-            "stats": (STATS_SCHEMA, stats),
+        tables = self._input_tables(df, stats, hist_counts) | {
             "partition_results": (PARTITION_RESULTS_SCHEMA, [
                 (b, errors[b] == 0, n, errors[b]) for b, n in sorted(doc_counts.items())]),
             "violation_counts": (VIOLATION_COUNTS_SCHEMA, [
                 (kw, loc, n) for (kw, loc), n in sorted(per_keyword.items())]),
         }
-        if "n_tok" in df.columns:
-            tables["histogram"] = (HISTOGRAM_SCHEMA, [
-                (b, *histogram_edges(b, 0.0, self.drift_hi, HISTOGRAM_BINS), n)
-                for b, n in sorted(hist_counts.items())])
         written = {}
         for name, (ddl, rows) in tables.items():
             path = os.path.join(self.workdir, name)
@@ -512,22 +508,50 @@ class ValidationPipeline:
             counts={"violations": sum(rollup.values())},
         )
 
-    def _run_inmemory(self, run_id, df, bucketed, plan, source_dict, stats_cols) -> PipelineResult:
+    def _run_inmemory(self, spark, df, bucketed, plan, run_id, source_dict,
+                      stats_cols) -> PipelineResult:
+        # the checkpointed run's one input aggregate: the stats, histogram,
+        # doc counts and drift cells come from it, so the violations'
+        # row pass and uniqueness are the only other scans
+        doc_counts, hist_counts, cells, stats = self._count_input(
+            bucketed, self._drifts(plan.set_checks), stats_cols)
         viols = self._bucket_violations(bucketed, plan, source_dict)
-        uniq, drift = self._global_violations(df, plan.set_checks)
+        uniq, drift = self._global_violations(df, plan.set_checks, cells)
         gv = _union(([] if uniq is None else [uniq]) + drift)
         if gv is not None:
             viols = viols.unionByName(gv.withColumn("_bucket", F.lit(-1)))
+        tables = {name: spark.createDataFrame(rows, ddl)
+                  for name, (ddl, rows) in self._input_tables(df, stats, hist_counts).items()}
+        # the partition unit is the bucket; global-pass violations
+        # (``_bucket`` = -1) belong to no partition
+        errors = viols.filter(F.col("_bucket") >= 0) \
+            .groupBy(F.col("_bucket").alias("partition_id")) \
+            .agg(F.count(F.lit(1)).alias("error_count"))
+        n_errors = F.coalesce("error_count", F.lit(0))
+        partition_results = (
+            spark.createDataFrame(sorted(doc_counts.items()), "partition_id int, doc_count long")
+            .join(errors, "partition_id", "left")
+            .select("partition_id", (n_errors == 0).alias("valid"), "doc_count",
+                    n_errors.alias("error_count")))
         return PipelineResult(
             run_id=run_id, violations=viols.drop("_bucket"),
-            stats=column_stats(df, stats_cols),
-            histogram=(numeric_histogram(df, "n_tok", 0.0, self.drift_hi, HISTOGRAM_BINS)
-                       if "n_tok" in df.columns else None),
-            partition_results=_partition_results(bucketed, viols),
+            stats=tables["stats"], histogram=tables.get("histogram"),
+            partition_results=partition_results,
             violation_counts=viols.groupBy("keyword", "keyword_location")
             .agg(F.count(F.lit(1)).alias("n_violations")),
             buckets_done=self.n_buckets,
         )
+
+    def _input_tables(self, df: DataFrame, stats: list[tuple],
+                      hist_counts: Counter) -> dict[str, tuple[str, list[tuple]]]:
+        """name → (DDL, rows) of the stats table and, with an ``n_tok``
+        column, the histogram, from the input aggregate's counts."""
+        tables = {"stats": (STATS_SCHEMA, stats)}
+        if "n_tok" in df.columns:
+            tables["histogram"] = (HISTOGRAM_SCHEMA, [
+                (b, *histogram_edges(b, 0.0, self.drift_hi, HISTOGRAM_BINS), n)
+                for b, n in sorted(hist_counts.items())])
+        return tables
 
 
 @dataclass
@@ -566,27 +590,6 @@ def _local_path(workdir: str) -> str:
 
 def _bucket_expr(col, n_buckets: int):
     return F.pmod(F.xxhash64(col), F.lit(n_buckets)).cast("int")
-
-
-def _partition_results(bucketed: DataFrame, viols: DataFrame) -> DataFrame:
-    """partition_results(partition_id, valid, doc_count, error_count) where
-    the partition unit is the checkpoint bucket; global-pass violations
-    (``_bucket`` = -1) belong to no partition."""
-    per_bucket_docs = bucketed.groupBy(F.col("_bucket").alias("partition_id")) \
-        .agg(F.count(F.lit(1)).alias("doc_count"))
-    per_bucket_errs = viols.filter(F.col("_bucket") >= 0) \
-        .groupBy(F.col("_bucket").alias("partition_id")) \
-        .agg(F.count(F.lit(1)).alias("error_count"))
-    return (
-        per_bucket_docs.join(per_bucket_errs, "partition_id", "left")
-        .select(
-            "partition_id",
-            F.coalesce("error_count", F.lit(0)).alias("error_count"),
-            "doc_count",
-        )
-        .withColumn("valid", F.col("error_count") == 0)
-        .select("partition_id", "valid", "doc_count", "error_count")
-    )
 
 
 @contextlib.contextmanager

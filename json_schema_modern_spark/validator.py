@@ -10,9 +10,10 @@ per-partition rollup the distributed analogue of Result's validity.
 
 from __future__ import annotations
 
+import functools
 import json
 from dataclasses import dataclass
-from typing import Any
+from typing import Any, Callable
 
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
@@ -29,12 +30,19 @@ from json_schema_modern_spark.compiler.column_compiler import (
 
 @dataclass
 class ValidationResult:
-    """Lazy handles over one validation run (nothing executed yet)."""
+    """Lazy handles over one validation run (nothing executed yet).
+    ``annotated`` is built on first read: building it analyses the plan's
+    whole ok/viols trees, which a caller that reads only ``violations``
+    never needs."""
 
-    annotated: DataFrame          # input + _valid + _viols columns
+    build_annotated: Callable[[], DataFrame]   # input + _valid + _viols
     violations: DataFrame         # exploded violation rows (+ id columns)
     plan: CompiledPlan
     id_cols: list[str]
+
+    @functools.cached_property
+    def annotated(self) -> DataFrame:
+        return self.build_annotated()
 
     def flag(self) -> bool:
         """Global pass/fail — the reference's `flag` output format.
@@ -57,8 +65,6 @@ class ValidationResult:
         runtime collection; the `annotation` field carries the value
         JSON-encoded as a string (documented deviation from the
         reference's raw-JSON embedding)."""
-        import json as _json
-
         err_arr = F.transform(
             F.col("_viols"),
             lambda v: F.struct(
@@ -80,7 +86,7 @@ class ValidationResult:
                 # names) arrive as a row-dependent JSON-text Column
                 val = a.get("value_col")
                 if val is None:
-                    val = F.lit(_json.dumps(a["value"]))
+                    val = F.lit(json.dumps(a["value"]))
                 s = F.struct(
                     a["ptr"].cast("string").alias("instanceLocation"),
                     F.lit(a["kloc"]).alias("keywordLocation"),
@@ -230,27 +236,34 @@ class Validator:
             # re-walking the documents; compile_for's add_schema of the
             # spec then hits the content-dedup fast path and skips too
             return SchemaRegistry.thaw(self._frozen_index)
+        reg = SchemaRegistry()
+        for uri, schema, dialect in self._dialects()[1]:
+            reg.add_schema(schema, uri, dialect=dialect)
+        return reg
+
+    def _dialects(self) -> tuple[str, list[tuple[str, Any, str]]]:
+        """The spec's dialect, and each extra schema as (uri, schema,
+        dialect).  Each extra document registers under ITS OWN dialect —
+        its $schema decides the $id/anchor walk rules; documents with no
+        (or a custom) $schema inherit the root spec's dialect, the same
+        default the reference's add_schema applies."""
         from json_schema_modern_spark.compiler.column_compiler import (
             _DIALECT_URIS, _detect_dialect,
         )
         from json_schema_modern_spark.spec.resolver import SpecError
 
         try:
-            default_dialect = _detect_dialect(self.spec)
+            dialect = _detect_dialect(self.spec)
         except SpecError:
-            default_dialect = "2020-12"
-        reg = SchemaRegistry()
+            dialect = "2020-12"
+        extra = []
         for entry in self.extra_schemas:
             uri, schema = entry if isinstance(entry, tuple) else ("", entry)
-            # each extra document registers under ITS OWN dialect — its
-            # $schema decides the $id/anchor walk rules; documents with no
-            # (or a custom) $schema inherit the root spec's dialect, the
-            # same default the reference's add_schema applies
             d = None
             if isinstance(schema, dict) and isinstance(schema.get("$schema"), str):
                 d = _DIALECT_URIS.get(schema["$schema"].rstrip("#"))
-            reg.add_schema(schema, uri, dialect=d or default_dialect)
-        return reg
+            extra.append((uri, schema, d or dialect))
+        return dialect, extra
 
     def compile_for(self, df: DataFrame) -> CompiledPlan:
         key = df.schema.simpleString()
@@ -356,8 +369,10 @@ class Validator:
         # projection knocks the whole operator out of WSCG.  So the scan +
         # filter runs codegen'd over all rows, and the interpreted violation
         # assembly only ever sees the (rare) failing rows.
-        annotated = df.withColumns({"_valid": ok, "_viols": F.when(
-            ok, empty).otherwise(viols)})
+        def annotated():
+            return df.withColumns({"_valid": ok, "_viols": F.when(
+                ok, empty).otherwise(viols)})
+
         # repartition between filter and detail: Catalyst fuses a Filter
         # with its parent Generate stage, and the Generate's interpreted
         # higher-order expressions would drag the filter out of whole-stage
@@ -375,9 +390,7 @@ class Validator:
             .where(F.col("_vnode").isNotNull())
             .select(*id_cols, "_vnode.*")
         )
-        return ValidationResult(
-            annotated=annotated, violations=violations, plan=plan, id_cols=id_cols
-        )
+        return ValidationResult(annotated, violations, plan, id_cols)
 
     def valid_col(self, df: DataFrame) -> Column:
         return self.compile_for(df).ok
@@ -448,8 +461,9 @@ class Validator:
         free: a document is only fast-pathed when the decode provably
         lost nothing.  Cost: the routing predicate parses the JSON twice
         more on the bulk — use plain ``columns`` when provenance
-        guarantees the shape.  ``annotated`` carries id columns + _valid
-        + _viols only (the two tiers' decoded columns differ)."""
+        guarantees the shape.  Each document is evaluated by one tier, and
+        each tier scans the input once.  ``annotated`` carries id columns
+        + _valid + _viols only (the two tiers' decoded columns differ)."""
         if tier == "python":
             return self._validate_json_python(df, json_col, id_cols)
         if tier == "hybrid":
@@ -470,12 +484,8 @@ class Validator:
                 "spec has no properties/type info to derive a decode schema")
         ok_parse = F.col(json_col).isNotNull() & F.try_parse_json(
             F.col(json_col)).isNotNull()
-        good = (
-            df.filter(ok_parse)
-            .select(*id_cols, F.from_json(F.col(json_col), schema).alias("_p"))
-            .select(*id_cols, "_p.*")
-        )
-        res = self.validate(good, id_cols=id_cols)
+        res = self.validate(_decode(df.filter(ok_parse), json_col, id_cols, schema),
+                            id_cols=id_cols)
         exc_struct = F.struct(
             F.lit("").alias("instance_location"),
             F.lit("").alias("keyword_location"),
@@ -487,23 +497,22 @@ class Validator:
         bad = df.filter(~ok_parse)
         decode_viols = bad.select(*id_cols, exc_struct.alias("_v")).select(
             *id_cols, "_v.*")
-        # decode-failure rows are INVALID rows, not just extra violation
-        # rows: they must appear in `annotated` with _valid=false so
-        # flag()/basic_output()/partition_results() see them (the reference
-        # returns an exception Result from evaluate_json_string,
-        # Modern.pm:268-293)
-        bad_annotated = bad.select(
-            *id_cols,
-            *[F.lit(None).cast(f.dataType).alias(f.name) for f in schema.fields],
-            F.lit(False).alias("_valid"),
-            F.array(exc_struct).cast(_VIOL_ARR).alias("_viols"),
-        )
-        return ValidationResult(
-            annotated=res.annotated.unionByName(bad_annotated),
-            violations=res.violations.unionByName(decode_viols),
-            plan=res.plan,
-            id_cols=id_cols,
-        )
+
+        def annotated():
+            # decode-failure rows are INVALID rows, not just extra violation
+            # rows: they must appear in `annotated` with _valid=false so
+            # flag()/basic_output()/partition_results() see them (the
+            # reference returns an exception Result from
+            # evaluate_json_string, Modern.pm:268-293)
+            return res.annotated.unionByName(bad.select(
+                *id_cols,
+                *[F.lit(None).cast(f.dataType).alias(f.name) for f in schema.fields],
+                F.lit(False).alias("_valid"),
+                F.array(exc_struct).cast(_VIOL_ARR).alias("_viols"),
+            ))
+
+        return ValidationResult(annotated, res.violations.unionByName(decode_viols),
+                                res.plan, id_cols)
 
     def _validate_json_hybrid(
         self, df: DataFrame, json_col: str, id_cols: list[str] | None,
@@ -542,21 +551,19 @@ class Validator:
         schema = sort_fields(schema)
         canon = F.to_json(F.try_parse_json(F.col(json_col)))
         typed = F.to_json(F.from_json(F.col(json_col), schema))
-        fast = (F.col(json_col).isNotNull() & canon.isNotNull()
-                & typed.isNotNull() & (typed == canon))
-        res_cols = self.validate_json_strings(
-            df.filter(fast), json_col, id_cols=id_cols,
-            decode_schema=schema)
+        # both sides are NULL for a NULL or malformed payload: never fast
+        fast = F.coalesce(typed == canon, F.lit(False))
+        # a fast row parses and its decode is exact, so its decoded columns
+        # go straight to the typed plan: the columns tier's parse check and
+        # decode-failure branch would be empty here
+        res_cols = self.validate(_decode(df.filter(fast), json_col, id_cols, schema),
+                                 id_cols=id_cols)
         res_py = self._validate_json_python(
-            df.filter(~F.coalesce(fast, F.lit(False))), json_col, id_cols)
-        annotated = res_cols.annotated.select(
-            *id_cols, "_valid", "_viols").unionByName(res_py.annotated)
+            df.filter(~fast), json_col, id_cols)
         return ValidationResult(
-            annotated=annotated,
-            violations=res_cols.violations.unionByName(res_py.violations),
-            plan=res_cols.plan,
-            id_cols=id_cols,
-        )
+            lambda: res_cols.annotated.select(
+                *id_cols, "_valid", "_viols").unionByName(res_py.annotated),
+            res_cols.violations.unionByName(res_py.violations), res_cols.plan, id_cols)
 
     def _validate_json_python(
         self, df: DataFrame, json_col: str, id_cols: list[str] | None,
@@ -566,31 +573,14 @@ class Validator:
         into the task closure — the same KB-scale payload the compiled
         tier broadcasts — and each worker process builds its registry
         once, keyed by fingerprint."""
-        import json as _json
-
-        from json_schema_modern_spark.compiler.column_compiler import (
-            _DIALECT_URIS, _detect_dialect,
-        )
         from json_schema_modern_spark.pyeval.distributed import (
             evaluate_json_column,
         )
-        from json_schema_modern_spark.spec.resolver import (
-            SpecError, spec_fingerprint,
-        )
+        from json_schema_modern_spark.spec.resolver import spec_fingerprint
 
         id_cols = id_cols or ([df.columns[0]] if df.columns else [])
-        try:
-            dialect = _detect_dialect(self.spec)
-        except SpecError:
-            dialect = "2020-12"
-        extra = []
-        for entry in self.extra_schemas:
-            uri, schema = entry if isinstance(entry, tuple) else ("", entry)
-            d = None
-            if isinstance(schema, dict) and isinstance(schema.get("$schema"), str):
-                d = _DIALECT_URIS.get(schema["$schema"].rstrip("#"))
-            extra.append((uri, schema, d or dialect))
-        blob = _json.dumps({
+        dialect, extra = self._dialects()
+        blob = json.dumps({
             "spec": self.spec, "extra": extra, "dialect": dialect,
             "validate_formats": self.options.validate_formats,
         }, sort_keys=True)
@@ -601,5 +591,11 @@ class Validator:
             .select(*id_cols, F.explode("_viols").alias("_v"))
             .select(*id_cols, "_v.*")
         )
-        return ValidationResult(annotated=annotated, violations=violations,
-                                plan=None, id_cols=id_cols)
+        return ValidationResult(lambda: annotated, violations, None, id_cols)
+
+
+def _decode(df: DataFrame, json_col: str, id_cols: list[str], schema) -> DataFrame:
+    """The id columns and the top-level fields of ``json_col`` decoded with
+    ``schema``."""
+    return (df.select(*id_cols, F.from_json(F.col(json_col), schema).alias("_p"))
+            .select(*id_cols, "_p.*"))

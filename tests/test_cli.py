@@ -232,3 +232,41 @@ def test_cli_spark_job_error_exits_2(spark, tmp_path, capsys):
     payload = json.loads(capsys.readouterr().out.splitlines()[-1])
     assert rc == 2 and payload["valid"] is False
     assert part in payload["exception"]
+
+
+def test_cli_json_hybrid_writes_once(spark, tmp_path, capsys, monkeypatch):
+    """With --output the JSON branch's one action is the write: the
+    summary count comes from the rows it writes, so no DataFrame.count
+    runs, and the summary equals the rows written."""
+    from pyspark.sql.classic.dataframe import DataFrame
+
+    from json_schema_modern_spark import cli
+
+    table = str(tmp_path / "docs")
+    spark.createDataFrame(
+        [("d1", '{"a": 5}'), ("d2", '{"a": null}'), ("d3", '{"a": 99}'),
+         ("d4", '{"a": 99999999999999999999}'), ("d5", "garbage"), ("d6", None)],
+        "doc_id string, payload string").write.parquet(table)
+    spec_path = str(tmp_path / "spec.json")
+    with open(spec_path, "w") as f:
+        json.dump({"type": "object", "required": ["a"],
+                   "properties": {"a": {"type": ["integer", "null"],
+                                        "maximum": 80}}}, f)
+    out_dir = str(tmp_path / "out")
+
+    def no_count(self):
+        raise AssertionError("DataFrame.count ran")
+
+    with monkeypatch.context() as m:
+        m.setattr(DataFrame, "count", no_count)
+        rc = cli.main(["--spec", spec_path, "--table", table,
+                       "--json-col", "payload", "--tier", "hybrid",
+                       "--id-col", "doc_id", "--output", out_dir])
+    line = json.loads(capsys.readouterr().out.splitlines()[-1])
+    # d3 (maximum, typed tier), d4 (>int64, python tier), d5 and d6
+    # (exceptions) fail
+    assert rc == 1
+    assert line == {"valid": False, "tier": "hybrid", "violations": 4}
+    written = spark.read.parquet(os.path.join(out_dir, "violations_json"))
+    assert written.count() == line["violations"]
+    assert {r.doc_id for r in written.collect()} == {"d3", "d4", "d5", "d6"}

@@ -101,3 +101,24 @@ def test_hybrid_no_decode_schema_falls_back(spark):
                                                 tier="hybrid")
     got = {r["rid"]: r["_valid"] for r in res.annotated.collect()}
     assert got == {"x": False, "y": True}
+
+
+def test_hybrid_violations_are_the_routed_tiers(spark):
+    """Each document's hybrid violation rows are the rows of the one tier
+    it routes to: the typed tier's for the fast-path rows, the python
+    tier's for the rest, the malformed (r09) and NULL (r10) payloads
+    included."""
+    from collections import Counter
+
+    cols = ["rid", "instance_location", "keyword_location",
+            "absolute_keyword_location", "keyword", "error", "offending_value"]
+    fast = {rid for rid, _, _, want_fast in ROWS if want_fast}
+
+    def rows(tier, keep):
+        return Counter(tuple(r) for r in _results(spark, tier)[0]
+                       .violations.select(*cols).collect() if keep(r["rid"]))
+
+    want = rows("columns", fast.__contains__) \
+        + rows("python", lambda rid: rid not in fast)
+    assert {"r09", "r10"} <= {r[0] for r in want}
+    assert rows("hybrid", lambda rid: True) == want

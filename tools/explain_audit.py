@@ -165,6 +165,19 @@ def main() -> None:
     check("pipeline: input aggregate has no HyperLogLogPlusPlus",
           "HyperLogLogPlusPlus" not in agg_plan)
 
+    # 3g. JSON hybrid tier: each document is evaluated by one tier, so the
+    #     violations read the stored JSON column once per tier — the
+    #     fast-path rows' typed plan and the python tier — and no more
+    from __spark_entry__ import _JSON_TIER_SPEC, _json_payload_table
+
+    hybrid_plan = explain_str(Validator(_JSON_TIER_SPEC).validate_json_strings(
+        _json_payload_table(spark, sf_dir), "payload", id_cols=["event_id"],
+        tier="hybrid").violations)
+    n_scans = sum(1 for ln in hybrid_plan.splitlines()
+                  if ln.strip().startswith("(") and "Scan parquet" in ln)
+    check("json hybrid: violations plan holds exactly 2 FileScans", n_scans == 2,
+          f"{n_scans} scans")
+
     # 4. uniqueness: only doc_id read; partial aggregation before shuffle
     uniq_plan = explain_str(duplicate_keys(df, ["doc_id"]))
     rs = [ln for ln in uniq_plan.splitlines() if "ReadSchema" in ln]
