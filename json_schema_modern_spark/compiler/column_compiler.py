@@ -43,7 +43,7 @@ import operator
 import re
 from dataclasses import dataclass, field as dc_field
 from functools import partial
-from typing import Any, Callable, NamedTuple
+from typing import Any, Callable
 from urllib.parse import urldefrag, urljoin
 
 from pyspark.sql import Column
@@ -51,6 +51,11 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from json_schema_modern_spark.functions.formats import format_predicate
+from json_schema_modern_spark.spec.keywords import (
+    BUILTIN_KEYWORDS,
+    KEYWORDS,
+    defined,
+)
 from json_schema_modern_spark.spec.media_types import get_media_type
 from json_schema_modern_spark.spec.resolver import (
     VOCABS_BY_DIALECT,
@@ -268,9 +273,10 @@ class Target:
 # --- the compiler ----------------------------------------------------------
 
 # $schema URI → dialect tag (V/Core.pm:134-196 dialect dispatch; the
-# engine compiles every dialect with the same keyword table except the
-# differences below: array-form items/additionalItems allowed ≤2019-09,
-# draft4 boolean exclusiveMaximum/Minimum, $recursiveRef in 2019-09)
+# keyword table's dialects column says which keywords each draft defines,
+# and handlers keep the value semantics that differ: array-form
+# items/additionalItems allowed ≤2019-09, draft4 boolean
+# exclusiveMaximum/Minimum, $ref sibling masking ≤draft7)
 _DIALECT_URIS = {
     "https://json-schema.org/draft/2020-12/schema": "2020-12",
     "https://json-schema.org/draft/2019-09/schema": "2019-09",
@@ -322,55 +328,40 @@ def _string_arrays(v: Any) -> bool:
         for x in v.values())
 
 
+def _is_num(v: Any) -> bool:
+    return isinstance(v, (int, float)) and not isinstance(v, bool)
+
+
+# a table row's value shape -> check(value, dialect); the SpecError names
+# the shape.  Number shapes let null through; an exclusive bound is a
+# number, or in draft 4 a boolean modifying maximum/minimum
+# (V/Validation.pm:129-143).
+_SHAPES: dict[str, Callable[[Any, str], bool]] = {
+    "number": lambda v, d: v is None or _is_num(v),
+    "exclusive bound": lambda v, d: v is None or _is_num(v) or (
+        d == "4" and isinstance(v, bool)),
+    "non-negative integer": lambda v, d: isinstance(v, int) and not isinstance(v, bool) and v >= 0,
+    "string": lambda v, d: isinstance(v, str),
+    "array": lambda v, d: isinstance(v, list),
+    "boolean": lambda v, d: isinstance(v, bool),
+    "array of strings": lambda v, d: isinstance(v, list) and all(isinstance(x, str) for x in v),
+    "object of arrays of strings": lambda v, d: _string_arrays(v),
+    "object": lambda v, d: isinstance(v, dict),
+    "non-empty array": lambda v, d: isinstance(v, list) and bool(v),
+}
+_SHAPED = tuple((k.name, k.shape, _SHAPES[k.shape]) for k in KEYWORDS if k.shape)
+
+
 def _shape_check(schema: dict, kloc: str, dialect: str) -> None:
     """Traverse-phase keyword type checks (the reference's
     assert_keyword_type layer, U.pm:866-869 / V/Validation.pm traverse
-    subs): malformed specs fail compilation with the reference's message
-    shape instead of surfacing as downstream expression errors."""
-    def err(kw: str, what: str) -> None:
-        raise _shape_error(kw, what, kloc)
-
-    def is_num(v) -> bool:
-        return isinstance(v, (int, float)) and not isinstance(v, bool)
-
-    for kw in ("maximum", "minimum", "exclusiveMaximum", "exclusiveMinimum"):
-        v = schema.get(kw)
-        if v is None:
-            continue
-        if isinstance(v, bool):
-            if dialect != "4" or kw in ("maximum", "minimum"):
-                err(kw, "number")
-        elif not is_num(v):
-            err(kw, "number")
-    for kw in ("maxLength", "minLength", "maxItems", "minItems",
-               "maxProperties", "minProperties", "maxContains", "minContains"):
-        if kw in schema and (not isinstance(schema[kw], int)
-                             or isinstance(schema[kw], bool) or schema[kw] < 0):
-            err(kw, "non-negative integer")
-    for kw in ("pattern", "format", "contentEncoding", "contentMediaType",
-               "$ref", "$dynamicRef", "$anchor", "$dynamicAnchor"):
-        if kw in schema and not isinstance(schema[kw], str):
-            err(kw, "string")
-    if "enum" in schema and not isinstance(schema["enum"], list):
-        err("enum", "array")
-    if "uniqueItems" in schema and not isinstance(schema["uniqueItems"], bool):
-        err("uniqueItems", "boolean")
-    if "required" in schema and (not isinstance(schema["required"], list)
-                                 or any(not isinstance(x, str) for x in schema["required"])):
-        err("required", "array of strings")
-    if "dependentRequired" in schema \
-            and not _string_arrays(schema["dependentRequired"]):
-        err("dependentRequired", "object of arrays of strings")
-    for kw in ("properties", "patternProperties", "dependentSchemas",
-               "$defs", "definitions"):
-        if kw in schema and not isinstance(schema[kw], dict):
-            err(kw, "object")
-    for kw in ("allOf", "anyOf", "oneOf"):
-        if kw in schema and (not isinstance(schema[kw], list) or not schema[kw]):
-            err(kw, "non-empty array")
-    if "prefixItems" in schema and (not isinstance(schema["prefixItems"], list)
-                                    or not schema["prefixItems"]):
-        err("prefixItems", "non-empty array")
+    subs), one per shaped table row in table order: malformed specs fail
+    compilation with the reference's message shape instead of surfacing
+    as downstream expression errors."""
+    for kw, shape, ok in _SHAPED:
+        if kw in schema and not ok(schema[kw], dialect):
+            raise _shape_error(
+                kw, "number" if shape == "exclusive bound" else shape, kloc)
 
 
 class _Ctx:
@@ -1052,6 +1043,9 @@ def _kw_content(n: _Node, kw: str, _value: Any) -> None:
     out = []
     oks = []
     decoded = v
+    # contentSchema exists from 2019-09; draft 7 ignores it
+    cs = schema.get("contentSchema") \
+        if defined("contentSchema", n.c.dialect) else None
     enc = schema.get("contentEncoding")
     if enc is not None:
         if enc == "base64":
@@ -1097,8 +1091,8 @@ def _kw_content(n: _Node, kw: str, _value: Any) -> None:
         c = n.E("contentMediaType", parsed_ok, f"could not decode string as {mt}")
         out.extend(c.viols)
         oks.append(c.ok)
-        if "contentSchema" in schema:
-            sub_schema = _spark_schema_from_spec(schema["contentSchema"])
+        if cs is not None:
+            sub_schema = _spark_schema_from_spec(cs)
             if sub_schema is not None:
                 parsed = F.from_json(decoded, sub_schema)
                 cs_target = Target(col=parsed, dtype=sub_schema, ptr=t.ptr,
@@ -1128,7 +1122,7 @@ def _kw_content(n: _Node, kw: str, _value: Any) -> None:
         c = n.E("contentMediaType", form_ok, f"could not decode string as {mt}")
         out.extend(c.viols)
         oks.append(c.ok)
-        if "contentSchema" in schema:
+        if cs is not None:
             parsed = F.str_to_map(decoded, F.lit("&"), F.lit("="))
             cs_target = Target(col=parsed,
                                dtype=T.MapType(T.StringType(), T.StringType()),
@@ -1139,20 +1133,11 @@ def _kw_content(n: _Node, kw: str, _value: Any) -> None:
     # carry only a python decoder (no Column handler): annotation only —
     # same as the reference's decoder-less registry rows
     # (U.pm:668 "return if not $definition->{decode}")
-    if cs_target is not None and "contentSchema" in schema:
-        child = n.sub("contentSchema", schema["contentSchema"], cs_target)
+    if cs_target is not None and cs is not None:
+        child = n.sub("contentSchema", cs, cs_target)
         oks.append(child.ok)
         out.extend(child.viols)
     n.add(Compiled(ok=_conj(oks), viols=out))
-
-
-def _kw_format_annotation(n: _Node, kw: str, fmt: Any) -> None:
-    # the format name is ALWAYS annotated when the keyword is evaluated,
-    # independent of assertion mode (FormatAnnotation.pm:47-48:
-    # A($state, $schema->{format}) before the validate_formats check)
-    if isinstance(fmt, str) and n.c.options.collect_annotations \
-            and n.t.annotatable:
-        n.annotate(kw, value=fmt)
 
 
 def _kw_format(n: _Node, kw: str, fmt: str) -> None:
@@ -1253,8 +1238,10 @@ def _kw_contains(n: _Node, kw: str, s: Any) -> None:
                                    null_is_value=True, annotatable=False)).ok
 
     matches = F.size(F.filter(t.value_col(), elem_ok))
-    min_c = n.schema.get("minContains", 1)
-    max_c = n.schema.get("maxContains")
+    # min/maxContains exist from 2019-09; earlier drafts ignore them
+    bounds = n.schema if defined("minContains", n.c.dialect) else {}
+    min_c = bounds.get("minContains", 1)
+    max_c = bounds.get("maxContains")
     ok = F.lit(True) if min_c == 0 else \
         F.when(t.present, matches >= 1).otherwise(F.lit(True))
     oks = [ok]
@@ -1680,86 +1667,36 @@ def _kw_custom(ks: KeywordSpec, n: _Node, kw: str, value: Any) -> None:
         n.add(n.E(kw, F.coalesce(pred, F.lit(False)), ks.error))
 
 
-# --- the keyword table -----------------------------------------------------
-
-
-class Keyword(NamedTuple):
-    """One row of the keyword table — the reference's per-vocabulary
-    ``_eval_keyword_*`` subs (V/*.pm).  ``types``: the JSON types the
-    keyword asserts on; on other types it is vacuously true (the
-    ``return 1 if not is_type(...)`` guards in V/Validation.pm); None =
-    every type.  ``dialects``: the drafts that define it (None = all);
-    elsewhere it is an unknown keyword and ignored (the unknownKeyword
-    corpus).  ``handler(node, keyword, value)`` compiles it into the
-    node; None = known, but evaluated by another row (``then`` by ``if``)
-    or never asserting (``$comment``).  A handler that returns a
-    Compiled ends the node: the draft 4-7 ``$ref``."""
-
-    name: str
-    types: tuple[str, ...] | None = None
-    handler: Callable | None = None
-    dialects: tuple[str, ...] | None = None
-
-
-_NUMBER, _STRING, _ARRAY, _OBJECT = ("number",), ("string",), ("array",), ("object",)
-_D2019 = ("2019-09", "2020-12")
-
-# Evaluation order is table order: registered custom keywords follow it,
-# and the node's fused map pass comes last (_Node.result).
-KEYWORDS: tuple[Keyword, ...] = (
-    *(Keyword(k, None, _kw_annotation) for k in (
-        "title", "description", "default", "deprecated", "readOnly",
-        "writeOnly", "examples")),
-    Keyword("$ref", None, _kw_ref),
-    Keyword("$dynamicRef", None, _kw_dynamic_ref, ("2020-12",)),
-    Keyword("$recursiveRef", None, _kw_recursive_ref, ("2019-09",)),
-    Keyword("type", None, _kw_type),
-    Keyword("enum", None, _kw_enum),
-    Keyword("const", None, _kw_const),
-    Keyword("multipleOf", _NUMBER, _kw_multiple_of),
-    *(Keyword(k, _NUMBER, _kw_range) for k in _RANGE_OPS),
-    Keyword("maxLength", _STRING, _kw_length),
-    Keyword("minLength", _STRING, _kw_length),
-    Keyword("pattern", _STRING, _kw_pattern),
-    Keyword("contentEncoding", _STRING, _kw_content),
-    Keyword("contentMediaType", _STRING, _kw_content),
-    Keyword("contentSchema"),
-    Keyword("format", None, _kw_format_annotation),
-    Keyword("format", _STRING, _kw_format),
-    Keyword("maxItems", _ARRAY, _kw_item_count),
-    Keyword("minItems", _ARRAY, _kw_item_count),
-    Keyword("uniqueItems", _ARRAY, _kw_unique_items),
-    Keyword("prefixItems", _ARRAY, _kw_prefix_items, ("2020-12",)),
-    Keyword("items", _ARRAY, _kw_items),
-    Keyword("additionalItems", _ARRAY, _kw_additional_items),
-    Keyword("contains", _ARRAY, _kw_contains),
-    Keyword("maxContains"),
-    Keyword("minContains"),
-    Keyword("required", _OBJECT, _kw_required),
-    Keyword("dependentRequired", _OBJECT, _kw_dependent_required, _D2019),
-    Keyword("dependentSchemas", _OBJECT, _kw_dependent_schemas, _D2019),
-    Keyword("dependencies", _OBJECT, _kw_dependencies, ("4", "6", "7")),
-    Keyword("maxProperties", _OBJECT, _kw_property_count),
-    Keyword("minProperties", _OBJECT, _kw_property_count),
-    Keyword("properties", _OBJECT, _kw_properties),
-    Keyword("patternProperties", _OBJECT, _kw_pattern_properties),
-    Keyword("additionalProperties", _OBJECT, _kw_additional_properties),
-    Keyword("propertyNames", _OBJECT, _kw_property_names),
-    Keyword("allOf", None, _kw_all_of),
-    Keyword("anyOf", None, _kw_any_of),
-    Keyword("oneOf", None, _kw_one_of),
-    Keyword("not", None, _kw_not),
-    Keyword("if", None, _kw_if),
-    Keyword("then"),
-    Keyword("else"),
-    Keyword("unevaluatedProperties", _OBJECT, _kw_unevaluated_properties),
-    Keyword("unevaluatedItems", _ARRAY, _kw_unevaluated_items),
-    *(Keyword(k, None, _kw_set_check) for k in ("x-unique", "x-ref", "x-drift")),
-    *(Keyword(k) for k in (
-        "$schema", "$id", "id", "$anchor", "$dynamicAnchor", "$recursiveAnchor",
-        "$vocabulary", "$defs", "definitions", "$comment")),
-)
-BUILTIN_KEYWORDS = frozenset(k.name for k in KEYWORDS)
+# --- the handler map ---------------------------------------------------------
+# keyword -> handler(node, keyword, value), which compiles the keyword into
+# the node; a handler that returns a Compiled ends the node (the draft 4-7
+# ``$ref``).  Which keywords exist, their order, types and dialects are the
+# rows of spec.keywords.KEYWORDS: annotation rows compile through
+# _kw_annotation, and rows without a handler are known but evaluated by
+# another row (``then`` by ``if``) or never assert (``$comment``).
+HANDLERS: dict[str, Callable] = {
+    "$ref": _kw_ref, "$dynamicRef": _kw_dynamic_ref,
+    "$recursiveRef": _kw_recursive_ref, "type": _kw_type, "enum": _kw_enum,
+    "const": _kw_const, "multipleOf": _kw_multiple_of,
+    **dict.fromkeys(_RANGE_OPS, _kw_range),
+    "maxLength": _kw_length, "minLength": _kw_length, "pattern": _kw_pattern,
+    "contentEncoding": _kw_content, "contentMediaType": _kw_content,
+    "format": _kw_format, "maxItems": _kw_item_count,
+    "minItems": _kw_item_count, "uniqueItems": _kw_unique_items,
+    "prefixItems": _kw_prefix_items, "items": _kw_items,
+    "additionalItems": _kw_additional_items, "contains": _kw_contains,
+    "required": _kw_required, "dependentRequired": _kw_dependent_required,
+    "dependentSchemas": _kw_dependent_schemas,
+    "dependencies": _kw_dependencies, "maxProperties": _kw_property_count,
+    "minProperties": _kw_property_count, "properties": _kw_properties,
+    "patternProperties": _kw_pattern_properties,
+    "additionalProperties": _kw_additional_properties,
+    "propertyNames": _kw_property_names, "allOf": _kw_all_of,
+    "anyOf": _kw_any_of, "oneOf": _kw_one_of, "not": _kw_not, "if": _kw_if,
+    "unevaluatedProperties": _kw_unevaluated_properties,
+    "unevaluatedItems": _kw_unevaluated_items,
+    **dict.fromkeys(("x-unique", "x-ref", "x-drift"), _kw_set_check),
+}
 
 
 class ColumnCompiler:
@@ -1782,12 +1719,19 @@ class ColumnCompiler:
         self.df_schema = df_schema
         self.ctx = _Ctx(self.registry, self.options)
         self.fingerprint = spec_fingerprint(spec)
-        # the built-in table, then the registered custom keywords in
-        # evaluation_order
-        self.keywords = KEYWORDS + tuple(
-            Keyword(kw, None, partial(_kw_custom, ks))
-            for kw, (_voc, ks) in registered_keywords().items())
-        self.known = frozenset(k.name for k in self.keywords)
+        # (keyword, types, handler) in evaluation order: the table rows
+        # this dialect defines that compile to something, then the
+        # registered custom keywords in evaluation_order
+        custom = registered_keywords()
+        self.keywords = tuple(
+            (k.name, k.types,
+             _kw_annotation if k.annotation else HANDLERS[k.name])
+            for k in KEYWORDS
+            if (k.annotation or k.name in HANDLERS)
+            and (k.dialects is None or self.dialect in k.dialects)
+        ) + tuple((kw, None, partial(_kw_custom, ks))
+                  for kw, (_voc, ks) in custom.items())
+        self.known = BUILTIN_KEYWORDS | frozenset(custom)
 
     def compile(self) -> "CompiledPlan":
         root_target = Target(
@@ -1874,11 +1818,9 @@ class ColumnCompiler:
             scope_pushed = True
         try:
             n = _Node(self, schema, t, kloc, base, abs_ptr)
-            for k in self.keywords:
-                if k.name in schema and k.handler is not None \
-                        and n.applies(k.types) \
-                        and (k.dialects is None or self.dialect in k.dialects):
-                    done = k.handler(n, k.name, schema[k.name])
+            for kw, types, handler in self.keywords:
+                if kw in schema and n.applies(types):
+                    done = handler(n, kw, schema[kw])
                     if done is not None:
                         return done
             return n.result()

@@ -10,7 +10,7 @@ anyOf suppresses branch errors on success.
 This is NOT the engine — it exists so property-based tests can compare the
 set-oriented Spark evaluation against an independent row-at-a-time
 implementation on randomly generated (spec, instance) pairs
-(tests/test_differential.py).  ~150 lines; no Spark imports.
+(tests/test_differential.py).  No Spark imports.
 """
 
 from __future__ import annotations

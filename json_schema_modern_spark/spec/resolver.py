@@ -21,34 +21,35 @@ from dataclasses import dataclass, field
 from typing import Any
 from urllib.parse import urldefrag, urljoin
 
+from json_schema_modern_spark.spec.keywords import KEYWORDS, defined
+
 # Dialect ranks: draft4 < draft6 < draft7 < 2019-09 < 2020-12.  The walker
-# visits ONLY keyword positions the dialect defines — a $id/$anchor inside
+# visits ONLY keyword positions the dialect defines (the keyword table's
+# dialects and subschemas columns, spec.keywords) — a $id/$anchor inside
 # an unknown keyword (or a keyword from a later draft) is plain data and
 # must not register (t/additional-tests-*/unknownKeyword.json,
 # faux-buggy-schemas.json, not-an-anchor.json).
 _DIALECT_RANK = {"4": 0, "6": 1, "7": 2, "2019-09": 3, "2020-12": 4}
 
 
-def _walk_tables(rank: int) -> tuple[set, set, set]:
-    """(single-subschema, list-of-subschemas, map-of-subschemas) keyword
-    sets for a dialect rank (the reference's per-draft vocabulary keyword
-    lists, Vocabulary/*.pm)."""
-    single = {"additionalProperties", "items", "not"}
-    lists = {"allOf", "anyOf", "oneOf"}
-    maps = {"definitions", "patternProperties", "properties"}
-    if rank <= 3:
-        single.add("additionalItems")        # removed in 2020-12
-    if rank >= 1:
-        single |= {"contains", "propertyNames"}
-    if rank >= 2:
-        single |= {"if", "then", "else"}
-    if rank >= 3:
-        single |= {"unevaluatedItems", "unevaluatedProperties",
-                   "contentSchema"}
-        maps |= {"$defs", "dependentSchemas"}
-    if rank >= 4:
-        lists.add("prefixItems")
-    return single, lists, maps
+def resource_id(node: dict, dialect: str) -> str | None:
+    """The id that makes schema object `node` a resource under `dialect`,
+    or None: draft 4 spells it ``id``, and in drafts 4-7 a fragment-only
+    id declares an anchor, not a resource (the rules _walk registers by)."""
+    rank = _DIALECT_RANK[dialect]
+    v = node.get("id" if rank == 0 else "$id")
+    if not isinstance(v, str) or (rank <= 2 and v.startswith("#")):
+        return None
+    return v
+
+
+# (keywords whose value is one subschema, a list of them, a map of them)
+# per dialect: the keyword table's subschemas column
+_SUBSCHEMAS = {
+    d: tuple(frozenset(k.name for k in KEYWORDS if k.subschemas == kind
+                       and (k.dialects is None or d in k.dialects))
+             for kind in ("schema", "list", "map"))
+    for d in _DIALECT_RANK}
 
 _ANCHOR_RE = re.compile(r"^[A-Za-z_][A-Za-z0-9._-]*$")
 _JSON_POINTER_RE = re.compile(r"^(/([^/~]|~[01])*)*$")
@@ -234,7 +235,7 @@ class SchemaRegistry:
         """Register a schema document; returns its canonical root URI.
 
         ``dialect`` selects the draft's identifier/keyword rules (see
-        _walk_tables); default 2020-12.  ``legacy_id=True`` is the
+        _walk); default 2020-12.  ``legacy_id=True`` is the
         backward-compatible spelling of ``dialect="4"`` — draft4's plain
         ``id`` keyword as base-URI declaration (V/Core.pm legacy list)."""
         if dialect is None:
@@ -271,7 +272,7 @@ class SchemaRegistry:
             return root_uri
         self.roots[root_uri] = schema
         self.root_dialects[root_uri] = dialect
-        self._walk(schema, base_uri=root_uri, pointer="", rank=rank)
+        self._walk(schema, base_uri=root_uri, pointer="", dialect=dialect)
         return root_uri
 
     def _register(self, uri: str, res: Resource) -> None:
@@ -280,13 +281,14 @@ class SchemaRegistry:
         self.resources[uri] = res
 
     def _walk(self, node: Any, base_uri: str, pointer: str,
-              rank: int = 4) -> None:
+              dialect: str = "2020-12") -> None:
         if isinstance(node, bool):
             return
         if not isinstance(node, dict):
             raise SpecError(f"invalid subschema at {pointer or '/'}: not object/boolean")
 
         this_base = base_uri
+        rank = _DIALECT_RANK[dialect]
         id_kw = "id" if rank == 0 else "$id"
         has_id = id_kw in node
         if has_id:
@@ -329,17 +331,13 @@ class SchemaRegistry:
         elif pointer == "":
             self._register(base_uri, Resource(node, base_uri, base_uri, ""))
 
-        if rank == 3 and node.get("$recursiveAnchor") is True:
+        if defined("$recursiveAnchor", dialect) \
+                and node.get("$recursiveAnchor") is True:
             self.recursive_anchors.add(this_base)
 
-        anchor_kws = ()
-        if rank == 3:
-            anchor_kws = (("$anchor", self.anchors),)
-        elif rank >= 4:
-            anchor_kws = (("$anchor", self.anchors),
-                          ("$dynamicAnchor", self.dynamic_anchors))
-        for kw, table in anchor_kws:
-            if kw in node:
+        for kw, table in (("$anchor", self.anchors),
+                          ("$dynamicAnchor", self.dynamic_anchors)):
+            if kw in node and defined(kw, dialect):
                 name = node[kw]
                 if not isinstance(name, str) or not _ANCHOR_RE.match(name):
                     raise SpecError(f"invalid {kw} value at {pointer or '/'}: {name!r}")
@@ -351,13 +349,8 @@ class SchemaRegistry:
                     # a $dynamicAnchor is also addressable as a plain anchor
                     self.anchors.setdefault(key, table[key])
 
-        ref_kws = ["$ref"]
-        if rank == 3:
-            ref_kws.append("$recursiveRef")
-        if rank >= 4:
-            ref_kws.append("$dynamicRef")
-        for kw in ref_kws:
-            if kw in node and isinstance(node[kw], str):
+        for kw in ("$ref", "$recursiveRef", "$dynamicRef"):
+            if kw in node and isinstance(node[kw], str) and defined(kw, dialect):
                 # URI character well-formedness first (assert_uri_reference,
                 # Core.pm _traverse_keyword_ref), then the per-form fragment
                 # syntax — both at ADD time even in never-evaluated branches
@@ -409,7 +402,7 @@ class SchemaRegistry:
                         raise SpecError(
                             f"{ckw} {exc} (at {pointer or '/'})") from exc
 
-        if "$vocabulary" in node and rank >= 3:
+        if "$vocabulary" in node and defined("$vocabulary", dialect):
             # Core.pm:363-391: object with boolean values, absolute-URI
             # keys, and only at a schema resource root.  Vocabulary-LIST
             # semantics (core required, unknown-REQUIRED aborts) stay where
@@ -430,27 +423,28 @@ class SchemaRegistry:
                         f'$vocabulary value at "{vuri}" is not a boolean')
                 _assert_uri(vuri, "$vocabulary", pointer)
 
-        single, lists, maps = _walk_tables(rank)
+        single, lists, maps = _SUBSCHEMAS[dialect]
         for kw, val in node.items():
             p = f"{pointer}/{json_pointer_escape(kw)}"
             if kw in single and (isinstance(val, (dict, bool))):
-                self._walk(val, this_base, p, rank)
+                self._walk(val, this_base, p, dialect)
             elif kw == "items" and isinstance(val, list):  # pre-2020-12 array form
                 for i, sub in enumerate(val):
-                    self._walk(sub, this_base, f"{p}/{i}", rank)
+                    self._walk(sub, this_base, f"{p}/{i}", dialect)
             elif kw in lists and isinstance(val, list):
                 for i, sub in enumerate(val):
-                    self._walk(sub, this_base, f"{p}/{i}", rank)
+                    self._walk(sub, this_base, f"{p}/{i}", dialect)
             elif kw in maps and isinstance(val, dict):
                 for name, sub in val.items():
                     self._walk(sub, this_base, f"{p}/{json_pointer_escape(name)}",
-                               rank)
-            elif kw == "dependencies" and rank <= 2 and isinstance(val, dict):
+                               dialect)
+            elif kw == "dependencies" and defined(kw, dialect) \
+                    and isinstance(val, dict):
                 # draft4-7 schema-form dependencies values are subschemas
                 for name, sub in val.items():
                     if not isinstance(sub, list):
                         self._walk(sub, this_base,
-                                   f"{p}/{json_pointer_escape(name)}", rank)
+                                   f"{p}/{json_pointer_escape(name)}", dialect)
 
     # -- resolution -------------------------------------------------------
 

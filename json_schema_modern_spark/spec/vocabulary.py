@@ -15,8 +15,11 @@ implementations:
   (``None`` = keyword does not constrain this type, vacuously true).  The
   compiler wraps it with the same presence/null gating, violation row and
   keyword-location bookkeeping as built-in keywords.
-- ``evaluate``: the driver-side python tier (pyeval differential oracle /
-  schema-as-instance metaschema checks) — ``(value, instance) -> bool``.
+- ``evaluate``: a per-document check, ``(value, instance) -> bool``.
+  ``pyeval.evaluator`` (the differential oracle) calls it;
+  ``pyeval.full.PyEvaluator`` — the python tier behind
+  ``validate_json_strings(tier="python"|"hybrid")`` — does not, so rows
+  that tier evaluates skip custom keywords (docs/DEVIATIONS.md).
 
 Both hooks receive the RAW keyword value; shape validation belongs in the
 optional ``traverse`` hook (the reference's _traverse_keyword_* layer),
@@ -28,6 +31,8 @@ from __future__ import annotations
 
 from dataclasses import dataclass, field
 from typing import Any, Callable
+
+from json_schema_modern_spark.spec.keywords import BUILTIN_KEYWORDS
 
 __all__ = [
     "KeywordSpec", "CustomVocabulary", "register_vocabulary",
@@ -67,12 +72,8 @@ def register_vocabulary(vocab: CustomVocabulary) -> None:
     Modern.pm:940-956).  Its keywords become known to strict mode, its URI
     becomes a supported REQUIRED ``$vocabulary`` entry, and its compile /
     evaluate hooks run in evaluation_order after the built-in keywords.
-    Keywords of the compiler's keyword table may not be overridden (the
+    Keywords of the keyword table (spec.keywords) may not be overridden (the
     reference dies on vocabulary keyword collisions at registration)."""
-    from json_schema_modern_spark.compiler.column_compiler import (
-        BUILTIN_KEYWORDS,
-    )
-
     for ks in vocab.keywords:
         if ks.name in BUILTIN_KEYWORDS:
             raise ValueError(

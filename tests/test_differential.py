@@ -5,7 +5,10 @@ randomly generated (spec, rows) pairs.
 This mirrors the reference's dual-evaluation acceptance harness idea
 (every case evaluated two ways and compared, t/lib/Acceptance.pm:79-91) —
 here the second evaluator is a from-scratch recursive implementation, so a
-systematic semantic error in the compiler cannot cancel out.
+systematic semantic error in the compiler cannot cancel out.  The 2020-12
+properties compare against that oracle (``pyeval.evaluator``); the
+dialect axis draws ``$schema`` from drafts 4 to 2020-12 and compares
+against the full python tier under the same draft.
 
 Fixed row shape: (a bigint, s string, arr array<bigint>).  SQL NULL in a
 column means "property absent" (the engine's data model), so instances for
@@ -23,6 +26,7 @@ except ImportError:  # pragma: no cover
     pytest.skip("hypothesis not installed", allow_module_level=True)
 
 from json_schema_modern_spark import Validator
+from json_schema_modern_spark.compiler.column_compiler import _DIALECT_URIS
 
 
 def _examples(default: int) -> int:
@@ -33,6 +37,7 @@ def _examples(default: int) -> int:
     return int(v) if v else default
 
 from json_schema_modern_spark.pyeval.evaluator import evaluate
+from json_schema_modern_spark.pyeval.full import PyEvaluator
 
 # -- spec grammar -----------------------------------------------------------
 
@@ -231,6 +236,32 @@ def test_spark_agrees_with_pyeval_legacy_items(spark_diff, spec, rows):
 @pytest.fixture(scope="module")
 def spark_diff(spark):
     return spark
+
+
+DIALECT_URIS = {d: uri for uri, d in _DIALECT_URIS.items()}   # dialect -> $schema
+
+
+@settings(max_examples=_examples(15), deadline=None,
+          suppress_health_check=[HealthCheck.too_slow])
+@given(dialect=st.sampled_from(sorted(DIALECT_URIS)), spec=root_schema,
+       rows=st.lists(row, min_size=1, max_size=5))
+def test_spark_agrees_with_pyeval_per_dialect(spark_diff, dialect, spec, rows):
+    """The same grammar under each draft's $schema: a keyword the draft
+    does not define (const/contains/propertyNames before draft 6,
+    if/then/else before 7, min/maxContains and unevaluated* before
+    2019-09, prefixItems before 2020-12, ...) is ignored by both tiers.
+    The python tier here is the full evaluator with the draft's keyword
+    set (``PyEvaluator(dialect=d)``)."""
+    spec = {"$schema": DIALECT_URIS[dialect], **spec}
+    df = spark_diff.createDataFrame(
+        rows, "a bigint, s string, arr array<bigint>, m map<string,bigint>")
+    res = Validator(spec).validate(df, id_cols=[])
+    got = [r._valid for r in res.annotated.select("_valid").collect()]
+    ev = PyEvaluator(dialect=dialect)
+    root = ev.add_schema(spec)
+    want = [ev.evaluate_uri(root, _instance(r)) for r in rows]
+    assert got == want, \
+        f"dialect={dialect} spec={spec!r} rows={rows!r} spark={got} pyeval={want}"
 
 
 @settings(max_examples=_examples(10), deadline=None,

@@ -54,13 +54,11 @@ def test_builtin_keyword_collision_rejected():
 
 
 def test_every_table_keyword_is_builtin(spark):
-    """The compiler's keyword table is the one inventory: registration
-    refuses each of its keywords, and strict mode accepts each one."""
+    """The keyword table is the one inventory: registration refuses each
+    of its keywords, and strict mode accepts each one."""
     import pyspark.sql.types as T
 
-    from json_schema_modern_spark.compiler.column_compiler import (
-        BUILTIN_KEYWORDS,
-    )
+    from json_schema_modern_spark.spec.keywords import BUILTIN_KEYWORDS
 
     sample = {
         "$schema": "https://json-schema.org/draft/2020-12/schema",
@@ -196,3 +194,14 @@ def test_legacy_root_id_with_anchor_fragment():
     with pytest.raises(RSpecError):
         reg2.add_schema({"$id": "http://t.test/doc.json#legacyName"},
                         dialect="2020-12")
+
+
+def test_python_tier_skips_custom_keywords(even_vocab):
+    """Documented deviation (docs/DEVIATIONS.md): the python tier walks
+    the built-in keyword table only; the differential oracle applies the
+    registered keyword."""
+    from json_schema_modern_spark.pyeval.full import PyEvaluator
+
+    spec = {"evenValue": True}
+    assert evaluate(spec, 3) is False
+    assert PyEvaluator().evaluate(spec, 3) is True
