@@ -165,6 +165,7 @@ def check_spec(spec, extra_schemas=None) -> int:
 
 
 def run_validation(spec, args) -> int:
+    from json_schema_modern_spark.compiler.column_compiler import CompileOptions
     from json_schema_modern_spark.plans.pipeline import ValidationPipeline
     from json_schema_modern_spark.session import get_spark
     from json_schema_modern_spark.validator import Validator
@@ -174,6 +175,10 @@ def run_validation(spec, args) -> int:
     for path in args.add_schema:
         with open(path) as f:
             extra.append(json.load(f))
+    # every validator of the run compiles under the same options
+    options = CompileOptions(validate_formats=args.validate_formats,
+                             max_depth=args.max_depth,
+                             assume_dense_arrays=args.contract_schema)
     if args.contract_schema:
         from json_schema_modern_spark.sources.sequences import read_token_table
 
@@ -186,7 +191,7 @@ def run_validation(spec, args) -> int:
         # routing decides per row between the codegen'd typed plan and
         # the exact executor-side python evaluator.  The one action is the
         # write, its rows counted by an Observation, or else a count()
-        res = Validator(spec, extra_schemas=extra).validate_json_strings(
+        res = Validator(spec, options, extra_schemas=extra).validate_json_strings(
             df, args.json_col, id_cols=[args.id_col], tier=args.tier)
         if args.flag_only:
             valid = res.flag()
@@ -209,13 +214,13 @@ def run_validation(spec, args) -> int:
     if args.flag_only:
         # short-circuit path (reference short_circuit mode, Modern.pm:69-74):
         # existence probe, no violation assembly, no writes
-        valid = Validator(spec, extra_schemas=extra) \
+        valid = Validator(spec, options, extra_schemas=extra) \
             .validate(df, id_cols=[args.id_col]).flag()
         print(json.dumps({"valid": bool(valid)}))
         return 0 if valid else 1
 
     if args.output_format != "violations":
-        res = Validator(spec, extra_schemas=extra) \
+        res = Validator(spec, options, extra_schemas=extra) \
             .validate(df, id_cols=[args.id_col])
         # all three actions below (count, write, flag) derive from the
         # annotated DF — cache it so the validation computes once
@@ -244,11 +249,6 @@ def run_validation(spec, args) -> int:
         return 0 if valid else 1
 
     sd = spark.read.parquet(args.source_dict) if args.source_dict else None
-    options = None
-    if args.contract_schema:
-        from json_schema_modern_spark.compiler.column_compiler import CompileOptions
-
-        options = CompileOptions(assume_dense_arrays=True)
     pipe = ValidationPipeline(spec, id_col=args.id_col, workdir=args.output,
                               n_buckets=args.n_buckets, options=options,
                               extra_schemas=extra)

@@ -7,15 +7,12 @@ regex can't carry the calendar rules), so format assertion over a billion
 rows stays inside whole-stage codegen — no Python in the loop.
 
 Unknown formats validate successfully (annotation-only), matching the
-default lenient behavior (FormatAnnotation.pm:47-85); a custom-format
-registry lets callers add Column-expression factories, the analogue of the
-reference's add_format_validation (Modern.pm:122-134).
+default lenient behavior (FormatAnnotation.pm:47-85).
 """
 
 from __future__ import annotations
 
 import re
-from collections.abc import Callable
 
 import pandas as pd
 from pyspark.sql import Column
@@ -79,8 +76,6 @@ _SEMANTIC_DATE = {"date", "date-time"}
 # the reference defers to DateTime's identical table for :60 instants)
 from json_schema_modern_spark.functions.formats_py import LEAP_SECOND_DATES
 
-_custom: dict[str, Callable[[Column], Column]] = {}
-
 
 def _leap_second_guard(col: Column, with_date: bool) -> Column:
     """Second == 60 is only valid when the zulu-normalized wall time is
@@ -104,12 +99,6 @@ def _leap_second_guard(col: Column, with_date: bool) -> Column:
     return (ss != 60) | (
         (total_min - shift * 1440 == 23 * 60 + 59)
         & zdate.cast("string").isin(*sorted(LEAP_SECOND_DATES)))
-
-
-def register_format(name: str, factory: Callable[[Column], Column]) -> None:
-    """Custom format → Column-predicate factory (reference:
-    add_format_validation, Modern.pm:122-134)."""
-    _custom[name] = factory
 
 
 def _regex_format_predicate(col: Column) -> Column:
@@ -159,8 +148,6 @@ def _idn_format_predicate(name: str, col: Column) -> Column:
 def format_predicate(name: str, col: Column) -> Column | None:
     """Boolean Column: value conforms to the named format.
     None ⇒ unknown format (annotation-only, always valid)."""
-    if name in _custom:
-        return _custom[name](col)
     if name == "regex":
         return _regex_format_predicate(col)
     if name in ("idn-hostname", "idn-email"):

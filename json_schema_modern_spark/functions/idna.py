@@ -38,8 +38,6 @@ _EXT_ARABIC_INDIC = set("۰۱۲۳۴۵۶۷۸۹")
 # marks, decimal digits.  Lu/Lt are DISALLOWED (casefold-unstable).
 _PVALID_CATS = frozenset({"Ll", "Lo", "Lm", "Mn", "Mc", "Nd"})
 
-_ASCII_HOSTNAME_LABEL = re.compile(r"^[a-zA-Z0-9]([a-zA-Z0-9-]{0,61}[a-zA-Z0-9])?$")
-
 
 def _script_of(ch: str) -> str:
     """Coarse script bucket from the character name (stdlib has no

@@ -20,17 +20,6 @@ import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
-from pyspark.sql import types as T
-
-MEDIA_SCHEMA = T.StructType([
-    T.StructField("media_id", T.StringType(), False),
-    T.StructField("kind", T.StringType(), False),        # image|audio|video
-    T.StructField("payload", T.BinaryType(), True),      # opaque bytes
-    T.StructField("mime", T.StringType(), True),
-    T.StructField("width", T.IntegerType(), True),
-    T.StructField("height", T.IntegerType(), True),
-    T.StructField("duration_ms", T.LongType(), True),
-])
 
 
 def synthetic_media_df(spark, n_rows: int = 64, seed: int = 42) -> DataFrame:

@@ -195,10 +195,6 @@ def histogram_edges(bucket, lo: float, hi: float, n_buckets: int):
     return lo + (bucket - 1) * width, lo + bucket * width
 
 
-def token_length_histogram(df: DataFrame, n_buckets: int = 32, max_len: int = 2048) -> DataFrame:
-    return numeric_histogram(df, "n_tok", 0.0, float(max_len), n_buckets)
-
-
 def correlation_matrix(
     df: DataFrame,
     cols: list[str],

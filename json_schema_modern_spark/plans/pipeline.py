@@ -45,8 +45,10 @@ through TableIO when a catalog exists):
   latest row of any bucket count names (crashed or superseded waves).  A
   wave is live for all of its buckets or none: it holds every bucket
   pending at its start, so a later run either redoes all of them
-  (``resume=False``) or none (resume skips them).  Old
-  ``fp=<fp>/bucket=<b>/`` workdirs still read and resume;
+  (``resume=False``) or none (resume skips them);
+- ``run_manifest.json`` records the workdir's layout, ``LAYOUT``.  A run
+  and ``resume_from`` refuse a workdir of any other layout, or of none
+  (workdirs written before layouts were numbered), and leave it as it is;
 - a wave's violations are counted on the driver from its files with
   pyarrow, as (bucket, keyword, keyword_location).  Every other table
   derives from those counts and the aggregate's: the lineage
@@ -100,15 +102,16 @@ VIOL_COLS = [
 ]
 WRITTEN_VIOL_SCHEMA = ", ".join(f"{c} string" for c in VIOL_COLS) + ", bucket int"
 
+# rows record the bucket count of the run that wrote them: a bucket id
+# names rows only under the count that hashed them
 LINEAGE_SCHEMA = (
     "run_id string, snapshot_id string, spec_fingerprint string, "
     "bucket int, status string, doc_count long, error_count long, "
-    "updated_at double"
+    "updated_at double, n_buckets int"
 )
-# rows also record the bucket count of the run that wrote them: a bucket id
-# names rows only under the count that hashed them.  Lineage written before
-# the column existed reads it as NULL, which matches any count.
-LINEAGE_SCHEMA_NB = LINEAGE_SCHEMA + ", n_buckets int"
+LAYOUT = 2   # the workdir layout: wave directories, lineage with n_buckets
+# the pipeline's attributes the manifest records, for resume_from
+MANIFEST_KEYS = ("id_col", "n_buckets", "drift_bins", "drift_hi")
 HISTOGRAM_SCHEMA = "bucket long, lo double, hi double, cnt long"
 HISTOGRAM_BINS = 32
 PARTITION_RESULTS_SCHEMA = (
@@ -169,52 +172,36 @@ class ValidationPipeline:
         session-bound and re-derive lazily on first validate — the
         analogue of the reference re-adding coderefs after THAW."""
         workdir = _local_path(workdir)
-        with open(os.path.join(workdir, "run_manifest.json")) as f:
-            manifest = json.load(f)
+        manifest = _read_manifest(workdir)
         fp = fingerprint or manifest["spec_fingerprint"]
         validator = Validator.load(os.path.join(workdir, f"plan_{fp}.json"))
         pipe = cls.__new__(cls)
-        pipe.spec = validator.spec
-        pipe.id_col = manifest.get("id_col", "doc_id")
-        pipe.workdir = workdir
-        pipe.n_buckets = manifest["n_buckets"]
-        pipe.drift_bins = manifest.get("drift_bins", 256)
-        pipe.drift_hi = manifest.get("drift_hi", 2048.0)
-        pipe.validator = validator
+        pipe.spec, pipe.workdir, pipe.validator = validator.spec, workdir, validator
+        for key in MANIFEST_KEYS:
+            setattr(pipe, key, manifest[key])
         return pipe
 
     # -- lineage ------------------------------------------------------------
 
-    def _lineage_path(self) -> str:
-        return os.path.join(self.workdir, "lineage")
-
-    def done_buckets(self, snapshot_id: str, fingerprint: str) -> set[int]:
-        """Buckets whose lineage marks them done for (snapshot, spec) under
-        this pipeline's bucket count."""
-        return set(self._live(self._latest_waves(fingerprint), snapshot_id))
-
-    def _latest_waves(self, fingerprint: str) -> dict[tuple[str, int | None, int], str]:
+    def _latest_waves(self, fingerprint: str) -> dict[tuple[str, int, int], str]:
         """(snapshot_id, bucket count, bucket) → the wave id (lineage
         ``run_id``) of the latest done lineage row for this spec: the wave
-        that holds that bucket's live violations under that count (None:
-        a row written before lineage recorded the count)."""
-        p = self._lineage_path()
+        that holds that bucket's live violations under that count."""
+        p = os.path.join(self.workdir, "lineage")
         if not os.path.isdir(p):
             return {}
-        rows = pads.dataset(p, schema=_arrow_schema(LINEAGE_SCHEMA_NB), format="parquet") \
-            .to_table(columns=["run_id", "snapshot_id", "spec_fingerprint", "bucket",
-                               "status", "updated_at", "n_buckets"]).to_pylist()
+        rows = pads.dataset(p, format="parquet").to_table(
+            columns=["run_id", "snapshot_id", "spec_fingerprint", "bucket",
+                     "status", "updated_at", "n_buckets"]).to_pylist()
         return {(r["snapshot_id"], r["n_buckets"], r["bucket"]): r["run_id"]
-                for r in sorted(rows, key=lambda r: r["updated_at"] or 0.0)
+                for r in sorted(rows, key=lambda r: r["updated_at"])
                 if (r["spec_fingerprint"], r["status"]) == (fingerprint, "done")}
 
     def _live(self, waves: dict, snapshot_id: str) -> dict[int, str]:
         """bucket → live wave of ``snapshot_id`` under this pipeline's
-        bucket count.  A row without a count matches any count; a row
-        with this count is newer and wins over it."""
-        newest_last = sorted(waves.items(), key=lambda kv: kv[0][1] is not None)
-        return {b: w for (s, n, b), w in newest_last
-                if s == snapshot_id and n in (None, self.n_buckets)}
+        bucket count."""
+        return {b: w for (s, n, b), w in waves.items()
+                if (s, n) == (snapshot_id, self.n_buckets)}
 
     # -- per-bucket row-local + bucket-safe set checks ----------------------
 
@@ -382,6 +369,9 @@ class ValidationPipeline:
 
         os.makedirs(self.workdir, exist_ok=True)
         with _claim_workdir(self.workdir, run_id):
+            # another layout is refused before any write, and never deleted
+            if os.path.exists(os.path.join(self.workdir, "run_manifest.json")):
+                _read_manifest(self.workdir)
             return self._run_checkpointed(spark, df, bucketed, plan, run_id,
                                           snapshot_id, resume, source_dict, stats_cols)
 
@@ -396,10 +386,7 @@ class ValidationPipeline:
         if not os.path.exists(plan_path):
             self.validator.save(plan_path)
         # manifest lands BEFORE bucket work so a crashed run is resumable
-        # (rewritten at the end with the completing run_id)
-        _write_manifest(self.workdir, run_id, snapshot_id, fingerprint,
-                        self.n_buckets, self.id_col, self.drift_bins,
-                        self.drift_hi)
+        self._write_manifest(run_id, snapshot_id, fingerprint)
         latest = self._latest_waves(fingerprint)
         done = set(self._live(latest, snapshot_id)) if resume else set()
         pending = [b for b in range(self.n_buckets) if b not in done]
@@ -430,7 +417,7 @@ class ValidationPipeline:
             for (b, _, _), n in counted[path].items():
                 errors[b] += n
             now = time.time()
-            _write_driver_table(self._lineage_path(), LINEAGE_SCHEMA_NB, [
+            _write_driver_table(os.path.join(self.workdir, "lineage"), LINEAGE_SCHEMA, [
                 (wave_id, snapshot_id, fingerprint, b, "done", doc_counts[b], errors[b], now,
                  self.n_buckets) for b in buckets], append=True)
             latest.update({(snapshot_id, self.n_buckets, b): wave_id for b in buckets})
@@ -449,32 +436,22 @@ class ValidationPipeline:
 
         # this snapshot's live data: for each bucket, the wave of its latest
         # done lineage row; a live wave is live for all of its buckets, so
-        # it is read whole.  A run_id without "-" names a run that wrote the
-        # old fp=<fp>/bucket=<b>/ layout, whose files hold no bucket column.
-        live = self._live(latest, snapshot_id)
-        dirs = {os.path.join(fp_dir, f"wave={w}" if "-" in w else f"bucket={b}"):
-                None if "-" in w else b for b, w in live.items()}
-        dirs = {p: b for p, b in dirs.items() if os.path.isdir(p)}
+        # it is read whole
+        waves = {os.path.join(fp_dir, f"wave={w}")
+                 for w in self._live(latest, snapshot_id).values()}
+        waves = sorted(p for p in waves if os.path.isdir(p))
         rollup: Counter = Counter()
-        for p, b in dirs.items():
-            rollup.update(counted[p] if p in counted else _count_violations(p, b))
-        # delete what no latest done lineage row (of any snapshot and
-        # bucket count of this spec) names: crashed waves' orphans, waves a
-        # later run superseded and old bucket= directories this snapshot
-        # has rewritten as waves
+        for p in waves:
+            rollup.update(counted[p] if p in counted else _count_violations(p))
+        # delete the waves no latest done lineage row (of any snapshot and
+        # bucket count of this spec) names: crashed waves' orphans and
+        # waves a later run superseded
         named = set(latest.values())
         for name in os.listdir(fp_dir) if os.path.isdir(fp_dir) else ():
-            key, _, val = name.partition("=")
-            if (key == "wave" and val not in named) or (
-                    key == "bucket" and "-" in live.get(int(val), "-")):
+            if name.startswith("wave=") and name.removeprefix("wave=") not in named:
                 shutil.rmtree(os.path.join(fp_dir, name))
-        waves = [p for p, b in dirs.items() if b is None]
-        legacy = [p for p, b in dirs.items() if b is not None]
         all_viols = (spark.read.schema(WRITTEN_VIOL_SCHEMA).parquet(*waves) if waves
                      else spark.createDataFrame([], WRITTEN_VIOL_SCHEMA))
-        if legacy:   # bucket read from the path
-            all_viols = all_viols.unionByName(spark.read.schema(WRITTEN_VIOL_SCHEMA)
-                                              .option("basePath", fp_dir).parquet(*legacy))
         errors: Counter = Counter()
         per_keyword: Counter = Counter()
         for (b, kw, loc), n in rollup.items():
@@ -495,9 +472,6 @@ class ValidationPipeline:
             path = os.path.join(self.workdir, name)
             _write_driver_table(path, ddl, rows)
             written[name] = spark.read.schema(ddl).parquet(path)
-        _write_manifest(self.workdir, run_id, snapshot_id, fingerprint,
-                        self.n_buckets, self.id_col, self.drift_bins,
-                        self.drift_hi)
         return PipelineResult(
             run_id=run_id, violations=all_viols, stats=written["stats"],
             histogram=written.get("histogram"),
@@ -541,6 +515,12 @@ class ValidationPipeline:
             .agg(F.count(F.lit(1)).alias("n_violations")),
             buckets_done=self.n_buckets,
         )
+
+    def _write_manifest(self, run_id: str, snapshot_id: str, fingerprint: str) -> None:
+        with open(os.path.join(self.workdir, "run_manifest.json"), "w") as f:
+            json.dump({"layout": LAYOUT, "run_id": run_id, "snapshot_id": snapshot_id,
+                       "spec_fingerprint": fingerprint,
+                       **{key: getattr(self, key) for key in MANIFEST_KEYS}}, f, indent=2)
 
     def _input_tables(self, df: DataFrame, stats: list[tuple],
                       hist_counts: Counter) -> dict[str, tuple[str, list[tuple]]]:
@@ -644,17 +624,16 @@ def _pid_alive(pid) -> bool:
     return True
 
 
-def _count_violations(path: str, bucket: int | None = None) -> Counter:
+def _count_violations(path: str) -> Counter:
     """(bucket, keyword, keyword_location) → rows of the violation files
     in ``path``, counted on the driver with pyarrow (the workdir is local;
-    a Spark aggregate costs two jobs).  ``bucket`` is given for an old
-    ``bucket=<b>/`` directory, whose files hold no bucket column."""
-    cols = ["keyword", "keyword_location"] + (["bucket"] if bucket is None else [])
+    a Spark aggregate costs two jobs)."""
+    cols = ["bucket", "keyword", "keyword_location"]
     full = _arrow_schema(WRITTEN_VIOL_SCHEMA)
     ds = pads.dataset(path, schema=pa.schema([full.field(c) for c in cols]),
                       format="parquet")
-    return Counter({(r.get("bucket", bucket), r["keyword"], r["keyword_location"]):
-                    r["count_all"] for r in ds.to_table(columns=cols).group_by(cols)
+    return Counter({(r["bucket"], r["keyword"], r["keyword_location"]): r["count_all"]
+                    for r in ds.to_table(columns=cols).group_by(cols)
                     .aggregate([([], "count_all")]).to_pylist()})
 
 
@@ -693,11 +672,14 @@ def _write_driver_table(path: str, ddl: str, rows: list[tuple], *,
     os.replace(tmp, path)
 
 
-def _write_manifest(workdir, run_id, snapshot_id, fingerprint, n_buckets,
-                    id_col="doc_id", drift_bins=256, drift_hi=2048.0) -> None:
-    with open(os.path.join(workdir, "run_manifest.json"), "w") as f:
-        json.dump({
-            "run_id": run_id, "snapshot_id": snapshot_id,
-            "spec_fingerprint": fingerprint, "n_buckets": n_buckets,
-            "id_col": id_col, "drift_bins": drift_bins, "drift_hi": drift_hi,
-        }, f, indent=2)
+def _read_manifest(workdir: str) -> dict:
+    """``workdir``'s run manifest; a manifest of another layout than
+    ``LAYOUT``, or of none, raises ValueError."""
+    with open(os.path.join(workdir, "run_manifest.json")) as f:
+        manifest = json.load(f)
+    if manifest.get("layout") != LAYOUT:
+        raise ValueError(
+            f"workdir {workdir} holds checkpoint layout {manifest.get('layout', 1)}, "
+            f"this version reads layout {LAYOUT} only; delete the workdir or "
+            f"use another one")
+    return manifest

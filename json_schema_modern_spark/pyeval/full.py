@@ -164,10 +164,10 @@ class PyEvaluator:
 
     def evaluate(self, schema: Any, instance: Any, default_uri: str = "",
                  callbacks: dict[str, Any] | None = None) -> bool:
-        """Convenience: add (if new) + evaluate."""
-        uri = self.registry.add_schema(schema, default_uri,
-                                       dialect=self.dialect) \
-            if default_uri not in self.registry.roots else default_uri
+        """Convenience: add + evaluate ``schema``, replacing another
+        document at its root URI (re-adding the same one is a no-op)."""
+        uri = self.registry.add_schema(schema, default_uri, dialect=self.dialect,
+                                       replace=True)
         return self.evaluate_uri(uri, instance, callbacks=callbacks)
 
     # -- metaschema / $vocabulary -------------------------------------------

@@ -14,6 +14,7 @@ No Spark imports here — unit-testable standalone.
 
 from __future__ import annotations
 
+import contextlib
 import hashlib
 import json
 import re
@@ -231,18 +232,23 @@ class SchemaRegistry:
     root_dialects: dict[str, str] = field(default_factory=dict)
 
     def add_schema(self, schema: Any, default_uri: str = "",
-                   legacy_id: bool = False, dialect: str | None = None) -> str:
+                   legacy_id: bool = False, dialect: str | None = None,
+                   replace: bool = False) -> str:
         """Register a schema document; returns its canonical root URI.
 
         ``dialect`` selects the draft's identifier/keyword rules (see
         _walk); default 2020-12.  ``legacy_id=True`` is the
         backward-compatible spelling of ``dialect="4"`` — draft4's plain
-        ``id`` keyword as base-URI declaration (V/Core.pm legacy list)."""
+        ``id`` keyword as base-URI declaration (V/Core.pm legacy list).
+        ``replace=True`` drops another document registered at the root
+        URI first; without it, the new document's resources clash."""
         if dialect is None:
             dialect = "4" if legacy_id else "2020-12"
         rank = _DIALECT_RANK[dialect]
         if isinstance(schema, bool):
             root_uri = default_uri
+            if replace and root_uri in self.roots:
+                self._drop(root_uri)
             self.roots[root_uri] = schema
             self.root_dialects[root_uri] = dialect
             self.resources[root_uri] = Resource(schema, root_uri, root_uri, "")
@@ -270,10 +276,23 @@ class SchemaRegistry:
             # registry skip the traverse walk when the compiler re-adds
             # the spec it was frozen with
             return root_uri
+        if replace and root_uri in self.roots:
+            self._drop(root_uri)
         self.roots[root_uri] = schema
         self.root_dialects[root_uri] = dialect
         self._walk(schema, base_uri=root_uri, pointer="", dialect=dialect)
         return root_uri
+
+    def _drop(self, root_uri: str) -> None:
+        """Forget the document at ``root_uri``: its root resource and every
+        resource and anchor whose node lies inside it."""
+        self.resources.pop(root_uri, None)
+        doc = self.roots.pop(root_uri)
+        for table in (self.resources, self.anchors, self.dynamic_anchors):
+            for key, res in list(table.items()):
+                with contextlib.suppress(SpecError):
+                    if isinstance(res.node, dict) and self._pointer_get(doc, res.pointer) is res.node:
+                        self.recursive_anchors.discard(table.pop(key).base_uri)
 
     def _register(self, uri: str, res: Resource) -> None:
         if uri in self.resources and self.resources[uri].node is not res.node:

@@ -319,11 +319,7 @@ class Validator:
         t/serialization.t)."""
         if frozen.get("engine") != "json_schema_modern_spark":
             raise ValueError("not a frozen json_schema_modern_spark validator")
-        # plans written before collect_leaf_errors was retired still carry
-        # it; any other unknown option fails
-        opts = CompileOptions(**{key: val for key, val in frozen["options"].items()
-                                 if key != "collect_leaf_errors"})
-        v = cls(frozen["spec"], opts,
+        v = cls(frozen["spec"], CompileOptions(**frozen["options"]),
                 extra_schemas=[tuple(e) if isinstance(e, list) else e
                                for e in frozen["extra_schemas"]])
         v._frozen_index = frozen["resource_index"]

@@ -270,3 +270,48 @@ def test_cli_json_hybrid_writes_once(spark, tmp_path, capsys, monkeypatch):
     written = spark.read.parquet(os.path.join(out_dir, "violations_json"))
     assert written.count() == line["violations"]
     assert {r.doc_id for r in written.collect()} == {"d3", "d4", "d5", "d6"}
+
+
+def test_cli_validate_formats(spark, tmp_path, capsys):
+    """--validate-formats asserts ``format`` in every validator the CLI
+    builds: the pipeline over typed columns and the python tier over JSON
+    documents; without it ``format`` is an annotation."""
+    from json_schema_modern_spark import cli
+
+    table = str(tmp_path / "docs")
+    spark.createDataFrame(
+        [("d1", "2024-01-31", '{"day": "2024-01-31"}'),
+         ("d2", "2024-02-30", '{"day": "2024-02-30"}')],
+        "doc_id string, day string, payload string").write.parquet(table)
+    spec_path = str(tmp_path / "spec.json")
+    with open(spec_path, "w") as f:
+        json.dump({"type": "object",
+                   "properties": {"day": {"type": "string", "format": "date"}}}, f)
+
+    def run(*extra):
+        rc = cli.main(["--spec", spec_path, "--table", table, *extra])
+        return rc, json.loads(capsys.readouterr().out.splitlines()[-1])
+
+    json_tier = ["--json-col", "payload", "--tier", "python"]
+    for tier in ([], json_tier):
+        assert run(*tier)[0] == 0
+        rc, line = run("--validate-formats", *tier)
+        assert rc == 1 and line["violations"] == 1, line
+
+
+def test_cli_max_depth(spark, tmp_path, capsys):
+    """--max-depth bounds the compile's schema nesting: a spec deeper than
+    it is an exception (exit 2), the default depth compiles it."""
+    from json_schema_modern_spark import cli
+
+    table = str(tmp_path / "docs")
+    spark.createDataFrame([("d1", 5)], "doc_id string, n int").write.parquet(table)
+    spec_path = str(tmp_path / "spec.json")
+    with open(spec_path, "w") as f:
+        json.dump({"type": "object", "properties": {"n": {"minimum": 0}}}, f)
+
+    assert cli.main(["--spec", spec_path, "--table", table]) == 0
+    capsys.readouterr()
+    assert cli.main(["--spec", spec_path, "--table", table, "--max-depth", "1"]) == 2
+    line = json.loads(capsys.readouterr().out.splitlines()[-1])
+    assert "maximum evaluation depth 1 exceeded" in line["exception"]

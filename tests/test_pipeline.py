@@ -206,26 +206,41 @@ def test_lineage_counts_are_real(spark, corrupt, tmp_path):
     assert per_bucket[-1] > 0
 
 
-def test_resumes_spark_written_lineage(spark, corrupt, tmp_path):
-    """Workdirs whose lineage Spark wrote (NULL error_count, _SUCCESS and
-    .crc side files) still resume: the driver-side reader skips nothing."""
-    import shutil
+def _files(wd):
+    """path → bytes of every file under ``wd``."""
+    out = {}
+    for d, _, names in os.walk(wd):
+        for name in names:
+            with open(os.path.join(d, name), "rb") as f:
+                out[os.path.relpath(os.path.join(d, name), wd)] = f.read()
+    return out
 
-    from json_schema_modern_spark.plans.pipeline import LINEAGE_SCHEMA
+
+def test_refuses_workdir_of_another_layout(spark, corrupt, tmp_path):
+    """A workdir whose manifest records no layout 2 (one written before
+    the layout was numbered) is refused by a run, whatever ``resume``
+    says, and by ``resume_from``; every file in it stays as it was."""
+    import json
+    import re
 
     wd = str(tmp_path / "old")
     sd = source_dict_df(spark)
     pipe = ValidationPipeline(SPEC, workdir=wd, n_buckets=4)
-    first = pipe.run(spark, corrupt, source_dict=sd, snapshot_id="s")
-    lin_path = os.path.join(wd, "lineage")
-    old = [(r.run_id, r.snapshot_id, r.spec_fingerprint, r.bucket, r.status,
-            r.doc_count, None, r.updated_at)
-           for r in spark.read.parquet(lin_path).collect()]
-    shutil.rmtree(lin_path)
-    spark.createDataFrame(old, LINEAGE_SCHEMA).coalesce(1).write.parquet(lin_path)
-    again = pipe.run(spark, corrupt, source_dict=sd, snapshot_id="s")
-    assert again.buckets_done == 0 and again.buckets_skipped == 4
-    assert again.counts == first.counts
+    pipe.run(spark, corrupt, source_dict=sd, snapshot_id="s")
+    path = os.path.join(wd, "run_manifest.json")
+    with open(path) as f:
+        manifest = json.load(f)
+    manifest.pop("layout", None)
+    with open(path, "w") as f:
+        json.dump(manifest, f)
+    before = _files(wd)
+    for refused in (
+            lambda: pipe.run(spark, corrupt, source_dict=sd, snapshot_id="s", resume=True),
+            lambda: pipe.run(spark, corrupt, source_dict=sd, snapshot_id="s", resume=False),
+            lambda: ValidationPipeline.resume_from(wd)):
+        with pytest.raises(ValueError, match=re.escape(wd) + ".*delete the workdir"):
+            refused()
+        assert _files(wd) == before
 
 
 # -- waves: the restart unit of a checkpointed run ---------------------------
@@ -364,47 +379,6 @@ def test_orphan_wave_deleted_and_never_read(spark, corrupt, tmp_path):
     assert again.buckets_done == 0 and not os.path.exists(orphan)
     assert again.counts == first.counts
     assert _viol_rows(again.violations) == _viol_rows(first.violations)
-
-
-def test_resumes_old_bucket_partitioned_layout(spark, corrupt, tmp_path):
-    """A workdir written as violations/fp=<fp>/bucket=<b>/ (bucket only in
-    the path) by runs whose lineage run_id names no wave still resumes
-    with nothing recomputed; a bucket it must redo moves into a wave."""
-    import shutil
-
-    from json_schema_modern_spark.plans.pipeline import (
-        LINEAGE_SCHEMA, WRITTEN_VIOL_SCHEMA, _write_driver_table,
-    )
-
-    sd = source_dict_df(spark)
-    wd = str(tmp_path / "legacy")
-    pipe = ValidationPipeline(SPEC, workdir=wd, n_buckets=4)
-    first = pipe.run(spark, corrupt, source_dict=sd, snapshot_id="s")
-    fp_dir = _fp_dir(wd)
-    want = _viol_rows(first.violations)
-    rows = spark.createDataFrame(first.violations.collect(), WRITTEN_VIOL_SCHEMA)
-    shutil.rmtree(os.path.join(wd, "violations"))
-    rows.withColumn("fp", F.lit(os.path.basename(fp_dir)[3:])) \
-        .write.partitionBy("fp", "bucket").parquet(os.path.join(wd, "violations"))
-    old = [("0123456789ab", *list(r.values())[1:]) for r in _lineage(wd)]
-    shutil.rmtree(os.path.join(wd, "lineage"))
-    _write_driver_table(os.path.join(wd, "lineage"), LINEAGE_SCHEMA, old)
-
-    again = pipe.run(spark, corrupt, source_dict=sd, snapshot_id="s")
-    assert again.buckets_done == 0 and again.buckets_skipped == 4
-    assert again.counts == first.counts
-    assert _viol_rows(again.violations) == want
-
-    # forget bucket 0: it and the global pass are redone as waves, and
-    # their old directories go
-    _write_driver_table(os.path.join(wd, "lineage"), LINEAGE_SCHEMA,
-                        [r for r in old if r[3] != 0])
-    redo = pipe.run(spark, corrupt, source_dict=sd, snapshot_id="s")
-    assert redo.buckets_done == 1 and redo.counts == first.counts
-    assert _viol_rows(redo.violations) == want
-    left = set(os.listdir(fp_dir))
-    assert {"bucket=1", "bucket=2", "bucket=3"} <= left
-    assert not {"bucket=0", "bucket=-1"} & left
 
 
 def test_violation_files_do_not_grow_with_buckets(spark, corrupt, tmp_path):

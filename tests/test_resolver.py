@@ -86,3 +86,27 @@ def test_bad_anchor_name_rejected():
     with pytest.raises(SpecError):
         reg.add_schema({"$id": "https://ex.org/r", "$defs": {
             "a": {"$anchor": "9bad", "minimum": 0}}})
+
+
+def test_evaluate_replaces_document_at_same_uri():
+    """One PyEvaluator evaluates each schema it is given: a document at
+    the root URI an earlier one holds replaces it, its resources and
+    anchors included, and re-adding the same document changes nothing."""
+    from json_schema_modern_spark.pyeval.full import PyEvaluator
+
+    ev = PyEvaluator()
+    assert ev.evaluate({"type": "string"}, 1) is False
+    assert ev.evaluate({"type": "integer"}, 1) is True
+
+    def anchored(typ):
+        return {"$defs": {"a": {"$anchor": "a", "type": typ}}, "$ref": "#a"}
+
+    assert ev.evaluate(anchored("string"), 1) is False
+    assert ev.evaluate(anchored("integer"), 1) is True
+    assert ev.evaluate(anchored("integer"), 1) is True
+    assert ev.evaluate(False, 1) is False
+    assert ev.evaluate(anchored("integer"), 1) is True
+    assert ev.evaluate({"$id": "https://ex.org/s", "$defs": {"n": {"$id": "n", "minimum": 3}},
+                        "$ref": "n"}, 1) is False
+    assert ev.evaluate({"$id": "https://ex.org/s", "$defs": {"n": {"$id": "n", "minimum": 0}},
+                        "$ref": "n"}, 1) is True
